@@ -1673,8 +1673,6 @@ def behavior_profiles(events: DataFrame) -> DataFrame:
     SELECT user_id, match_id, n_cells, shared_cells, dot, cosine
     FROM scored WHERE rk = 1
     """,
-    # late r11, windowed — displaces pivot_user_type_matrix to the r12
-    # queue
     survey="ID1,A2,A1,U5,J9",
 )
 def id_behavior_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1981,8 +1979,6 @@ def _lnk_sign() -> F.Column:
              AS candidate_ratio
     FROM m
     """,
-    # late r11, windowed — displaces dedup_embedding_cosine to the r12
-    # queue
     survey="E4,ID1,E2,U5",
 )
 def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

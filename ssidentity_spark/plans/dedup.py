@@ -1685,38 +1685,52 @@ _CDC_GRAM = 3  # rolling window: the cut decision sees the last 3 words
 _CDC_CUT = "2"  # md5 first hex char < '2' → boundary (p = 2/16 = 1/8)
 
 
-def cdc_chunk_structs(text_col: str = "text"):
-    """Array Column of (chunk_id, n_words, chunk_md5) structs — the
-    WHOLE chunking computed row-locally, zero shuffle. A word position
-    is a boundary iff the md5 of the trailing ``_CDC_GRAM``-word gram
-    starts below ``_CDC_CUT`` (expected chunk length 8 words); the NEXT
-    word starts a new chunk, so a boundary at the last position cuts
-    nothing (excluded — it would mint an empty trailing chunk).
+def cdc_chunks(d: DataFrame) -> DataFrame:
+    """(doc_id, chunk_id, n_words, chunk_md5) — content-defined chunks,
+    one row per chunk, computed row-locally with ZERO shuffle. A word
+    position is a boundary iff the md5 of the trailing ``_CDC_GRAM``-word
+    gram starts below ``_CDC_CUT`` (expected chunk length 8 words); the
+    NEXT word starts a new chunk, so a boundary at the last position cuts
+    nothing (excluded — it would mint an empty trailing chunk). No
+    min/max chunk normalization (FastCDC's extension) — the
+    expected-length argument is documented, not enforced.
 
-    Being a pure expression makes the operator streamable for free
-    (``streaming/corpus.py:cdc_chunks_stream``) and keeps the batch plan
-    at one explode extending the scan's partitioning — the first cut of
-    this operator ran posexplode + a per-doc running-sum window + a
-    collect_list rollup (one doc_id exchange, corpus re-sorted); the
-    boundary-positions array makes all three unnecessary."""
+    The word array ``w`` and the boundary positions ``bpos`` are bound
+    as columns in two successive projections before the per-chunk
+    ``transform``: Spark does not eliminate common subexpressions inside
+    lambdas, so inlining them re-split the text and re-hashed every gram
+    once per chunk (super-linear in document length). A stateless
+    projection, so it also runs unchanged on a streaming frame
+    (``streaming/corpus.py:cdc_chunks_stream``).
+
+    Reference cite: ssidentity.c:26 dedups observations by MAC key;
+    chunk-level content dedup is the corpus-scale generalization."""
     from ssidentity_spark.plans.text import _words
 
     # the one shared tokenization definition (r9 review: re-inlining the
     # split regex here would let a tokenizer change silently diverge
     # chunk md5s from the text family)
-    w = F.filter(_words(text_col), lambda x: x != "")
+    words = d.select(
+        "doc_id", F.filter(_words("text"), lambda x: x != "").alias("w")
+    ).where(F.size("w") > 0)  # else sequence(0, 0) mints a phantom md5('')
+    w = F.col("w")
     # 0-based positions whose trailing gram hash cuts (never the last)
-    bpos = F.filter(
-        F.sequence(F.lit(0), F.size(w) - 1),
-        lambda i: (i >= _CDC_GRAM - 1)
-        & (i < F.size(w) - 1)
-        & (
-            F.substring(
-                F.md5(F.concat_ws(" ", F.slice(w, i - 1, _CDC_GRAM))), 1, 1
-            )
-            < _CDC_CUT
-        ),
+    bounds = words.select(
+        "doc_id",
+        "w",
+        F.filter(
+            F.sequence(F.lit(0), F.size(w) - 1),
+            lambda i: (i >= _CDC_GRAM - 1)
+            & (i < F.size(w) - 1)
+            & (
+                F.substring(
+                    F.md5(F.concat_ws(" ", F.slice(w, i - 1, _CDC_GRAM))), 1, 1
+                )
+                < _CDC_CUT
+            ),
+        ).alias("bpos"),
     )
+    bpos = F.col("bpos")
 
     def _start(i):  # 0-based first word of chunk i
         return F.when(i == 0, F.lit(0)).otherwise(
@@ -1745,29 +1759,9 @@ def cdc_chunk_structs(text_col: str = "text"):
             ).alias("chunk_md5"),
         ),
     )
-    # zero-word docs must yield NO chunks (sequence(0, 0) still builds one
-    # element, which minted a phantom md5('') chunk — r9 review; the oracle
-    # and the pre-rewrite window form both emit zero rows)
-    return F.when(F.size(w) > 0, structs).otherwise(
-        F.array().cast(
-            "array<struct<chunk_id:bigint,n_words:bigint,chunk_md5:string>>"
-        )
+    return bounds.select("doc_id", F.explode(structs).alias("c")).select(
+        "doc_id", "c.chunk_id", "c.n_words", "c.chunk_md5"
     )
-
-
-def cdc_chunks(d: DataFrame) -> DataFrame:
-    """(doc_id, chunk_id, n_words, chunk_md5) — content-defined chunks,
-    one row per chunk. ZERO shuffle: the chunk structs are computed
-    array-side (:func:`cdc_chunk_structs`) and exploded, extending the
-    scan's own partitioning. No min/max chunk normalization (FastCDC's
-    extension) — the expected-length argument is documented, not
-    enforced.
-
-    Reference cite: ssidentity.c:26 dedups observations by MAC key;
-    chunk-level content dedup is the corpus-scale generalization."""
-    return d.select(
-        "doc_id", F.explode(cdc_chunk_structs()).alias("c")
-    ).select("doc_id", "c.chunk_id", "c.n_words", "c.chunk_md5")
 
 
 @register(
@@ -1903,7 +1897,6 @@ STOPGRAM_MIN_DOCS = 4  # a gram in >= this many distinct docs is boilerplate
     LEFT JOIN agg USING (doc_id)
     LEFT JOIN rebuilt r USING (doc_id)
     """,
-    # r9-parked, WINDOWED in r10 — claims its X23 row (tag above)
     survey="X23,EXT-dedup,X3,U6",
 )
 def dedup_stopgram_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2060,7 +2053,6 @@ _LSH_EVAL_THRESHOLDS = (0.3, 0.5, 0.7)
     CROSS JOIN nc
     GROUP BY 1, 3
     """,
-    # r9-parked, WINDOWED in r10 — claims its E2 row (tag above)
     survey="E2,EXT-dedup,A6,J2",
 )
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -193,8 +193,7 @@ def a11_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TS9 (late r11, windowed — displaces dedup_simhash_pairs to the r12
-# queue) — lead-lag cross-correlation: A11's correlation matrix given a
+# TS9 — lead-lag cross-correlation: A11's correlation matrix given a
 # TIME AXIS. For every type pair, Pearson r of the hourly count series at
 # lags -2..+2 hours; the reported row is the lag maximizing r (ties to
 # the smallest lag) — positive best_lag means type_a LEADS type_b. The

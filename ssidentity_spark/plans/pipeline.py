@@ -1586,7 +1586,6 @@ _RRF_K = 60  # standard RRF damping: rank 1 contributes 1/61
            ) AS BIGINT) AS fused_rank
     FROM rk
     """,
-    # r9-parked, WINDOWED in r10 — claims its X22 row (tag above)
     survey="X22,X3,U6,W1",
 )
 def pipe_quality_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1804,7 +1803,6 @@ _KANON_BUCKET = 100  # length generalized to n_chars // 100 buckets
     JOIN l1 USING (lang, len_bucket)
     JOIN l2 USING (lang)
     """,
-    # r9-parked, WINDOWED in r10 — claims its X24 row (tag above)
     survey="X24,X3,A9",
 )
 def pipe_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1915,7 +1913,6 @@ def pipe_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flagged f JOIN lx ON f.source = lx.source
     GROUP BY 1, 7
     """,
-    # r9-parked, WINDOWED in r10 — claims its X25 row (tag above)
     survey="X25,X3,A1,A6",
 )
 def pipe_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2031,7 +2028,6 @@ def pipe_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(exact_dup) AS BIGINT) AS n_exact
     FROM pairs GROUP BY 1, 2
     """,
-    # r9-parked, WINDOWED in r10 — claims its X26 row (tag above)
     survey="X26,X3,A4,J2",
 )
 def pipe_cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2146,7 +2142,6 @@ def pipe_cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     )
     """,
-    # r9-parked, WINDOWED in r10 — claims its E3 row (tag above)
     survey="E3,X1,EXT-dedup,A6",
 )
 def pipe_split_leakage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2228,7 +2223,7 @@ def pipe_split_leakage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X27-to-be (r10, parked for the r11 window) — Laplace-mechanism noisy
+# X27 — Laplace-mechanism noisy
 # counts (Dwork et al. 2006): the release half of the privacy story —
 # X24's k-anonymity audits which groups are safe to publish, this applies
 # the standard eps-DP count mechanism (sensitivity 1, b = 1/eps) to the
@@ -2280,8 +2275,6 @@ _DP_EPS = 1.0
              AS n_released
     FROM n
     """,
-    # windowed in r11: claims its X27 row (parked past the full r10
-    # window with already-covered tags, per the parking rule)
     survey="X27,X3,A9,X24",
 )
 def pipe_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2377,7 +2370,6 @@ def pipe_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(vw) AS DOUBLE) / max(n) AS mean_after
     FROM clamped GROUP BY 1
     """,
-    # late r11, windowed — displaces text_langid to the r12 queue
     survey="X28,X3,A6,W1,X24",
 )
 def pipe_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:

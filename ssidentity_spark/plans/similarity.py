@@ -1471,7 +1471,6 @@ _CURVE_MAX_PROBES = 4
            round(min(hits / {TOP_K}.0), 6) AS min_recall
     FROM per_q GROUP BY 1
     """,
-    # r9-parked, WINDOWED in r10 — claims its E1c row (tag above)
     survey="E1c,E1,U5",
 )
 def sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1658,9 +1658,6 @@ _SC_THRESHOLD = 0.25  # report pairs at or above this rounded cosine
       FROM dot JOIN nrm x ON doc_a = x.doc_id JOIN nrm y ON doc_b = y.doc_id
     ) WHERE cos >= {_SC_THRESHOLD}
     """,
-    # parked past the r9 window (every slot spent — 25 first-timers this
-    # round); survey rows are the covered dedup/text siblings' until it
-    # windows FIRST in r10 and claims its own U6g row
     survey="U6g,EXT-dedup,U6,J2",
 )
 def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1824,8 +1821,6 @@ FROM s{_WPT_STEPS}w
     # back to occurrences), so the hash pins every word's exact
     # segmentation, not a summary of it.
     oracle=_WPT_ORACLE,
-    # parked past the full r9 window like text_sparse_cosine_pairs;
-    # r9-parked, WINDOWED in r10 — claims its T10c row (tag above)
     survey="T10c,U6,D7",
 )
 def text_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1952,7 +1947,6 @@ def text_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grams JOIN firsts USING (g)
     GROUP BY 1
     """,
-    # r9-parked, WINDOWED in r10 — claims its U6h row (tag above)
     survey="U6h,U6,EXT-dedup,A4",
 )
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -185,7 +185,6 @@ _M4_BUCKET = 4 * 3600  # the gapfill grid width: ~5+ points per bucket
     SELECT DISTINCT event_type, bucket, ts_us, value FROM r
     WHERE rn_min = 1 OR rn_max = 1 OR rn_first = 1 OR rn_last = 1
     """,
-    # r9-parked, WINDOWED in r10 — claims its TS3 row (tag above)
     survey="TS3,EXT-timeseries,W1,O5",
 )
 def ts_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,9 +342,9 @@ def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TS5-to-be (r10, parked for the r11 window) — SAX symbolization (Lin et
-# al. 2003): PAA-compress each series into fixed-width window means, then
-# symbolize each mean against the series' own quartiles ('a'..'d') — the
+# TS5 — SAX symbolization (Lin et al. 2003): PAA-compress each series into
+# fixed-width window means, then symbolize each mean against the series'
+# own quartiles ('a'..'d') — the
 # discretization under time-series motif/anomaly search and the string
 # bridge that lets the TEXT machinery (fingerprints, n-gram novelty,
 # suffix filters) run on sensor series. Equi-depth breakpoints (quartiles)
@@ -396,8 +395,6 @@ _SAX_W = 8  # events per PAA window
            string_agg(s, '' ORDER BY win_idx) AS sax_word
     FROM sym GROUP BY 1
     """,
-    # windowed in r11: claims its TS5 row (parked past the full r10
-    # window with already-covered tags, per the parking rule)
     survey="TS5,EXT-timeseries,W3,A6",
 )
 def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,8 +733,7 @@ def ts_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TS6 (late r11, windowed — displaces j3_customers_without_orders to the
-# r12 queue) — seasonal (hour-of-day) decomposition with an ANOVA
+# TS6 — seasonal (hour-of-day) decomposition with an ANOVA
 # strength measure: how much of a series' variance the hour-of-day profile
 # explains. eta² = SS_between / SS_total over the 24 hour-of-day groups is
 # the classical one-way ANOVA effect size and the standard "seasonal
@@ -917,8 +913,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TS7 (late r11, windowed — displaces w3_rolling_avg_rows to the r12
-# queue) — at-most-one-changepoint (AMOC) detection: for each user's
+# TS7 — at-most-one-changepoint (AMOC) detection: for each user's
 # ordered value series, the split index maximizing the standardized
 # mean-shift statistic score(k) = sqrt(k·(n-k)/n) · |mean_L − mean_R| —
 # the classical CUSUM-type two-sample scan (Hinkley 1970) and the first
@@ -1051,8 +1046,7 @@ def ts_changepoint_amoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TS8 (late r11, windowed — displaces text_quality to the r12 queue) —
-# the sample autocorrelation function at lags 1..4: r_l =
+# TS8 — the sample autocorrelation function at lags 1..4: r_l =
 # sum_t (x_t - m)(x_{t+l} - m) / sum_t (x_t - m)^2 with the grand mean m.
 # The classical serial-dependence descriptor (Box/Jenkins): TS6 asks "is
 # the series periodic BY the clock", ACF asks "does it remember ITSELF" —

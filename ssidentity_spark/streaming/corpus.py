@@ -201,20 +201,18 @@ def expectations_stream(
 
 
 def cdc_chunks_stream(docs: DataFrame) -> DataFrame:
-    """Content-defined chunking (plans/dedup.py:cdc_chunk_structs) on an
-    unbounded document stream: the chunk structs are a pure row-local
-    expression — the SAME one the batch query explodes — so arriving
+    """Content-defined chunking (plans/dedup.py:cdc_chunks) on an
+    unbounded document stream: the chunking is a stateless row-local
+    projection — the SAME one the batch query runs — so arriving
     documents chunk with zero state and stream ≡ batch holds by
     construction. Emits one row per (doc, chunk) with the chunk's md5
     identity; downstream, a stream-static join against a maintained
     chunk index (or dropDuplicatesWithinWatermark on chunk_md5) gives
     the within-watermark dedup gate, exactly like the fingerprint path
     in :func:`clean_documents_stream`."""
-    from ssidentity_spark.plans.dedup import cdc_chunk_structs
+    from ssidentity_spark.plans.dedup import cdc_chunks
 
-    return docs.select(
-        "doc_id", F.explode(cdc_chunk_structs()).alias("c")
-    ).select("doc_id", "c.chunk_id", "c.n_words", "c.chunk_md5")
+    return cdc_chunks(docs)
 
 
 MAX_NB_MODEL_TERMS = 1_000_000  # broadcast-model guard, like the gram set

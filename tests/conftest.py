@@ -9,13 +9,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ssidentity_spark.session import get_spark  # noqa: E402
 
-# Fast tier (r13, VERDICT r12 ask #2): the full 899-test suite runs ~60 min
-# on the gate box — past the driver's verify window, which truncated r12's
-# run at ~67% and recorded tests_ok=false with zero failures visible. The
-# default run now skips the census-listed slow tests (tests/slow_tests.txt,
-# every test totalling >=5 s) so `python -m pytest tests/ -x -q` completes
-# inside the window; `--runslow` or SPARK_GRAFT_FULL_TESTS=1 restores the
-# full suite (the builder's round-end gate always runs it).
+# Slow tier: the default run skips the tests listed in tests/slow_tests.txt
+# (each >=3 s in a full-suite census) so Tier-1 stays well inside its
+# timeout; `--runslow` runs them too. Every oracle case in
+# tests/test_queries_oracle.py runs in the default tier.
 _SLOW_LIST_PATH = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
 
 
@@ -40,15 +37,13 @@ def pytest_addoption(parser):
 
 
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get(
-        "SPARK_GRAFT_FULL_TESTS"
-    ) == "1":
+    if config.getoption("--runslow"):
         return
     slow = _slow_ids()
     if not slow:
         return
     marker = pytest.mark.skip(
-        reason="slow tier — run with --runslow or SPARK_GRAFT_FULL_TESTS=1"
+        reason="slow tier — run with --runslow"
     )
     for item in items:
         if item.nodeid in slow:

@@ -51,6 +51,32 @@ def test_entry_contract(spark):
     assert len(qs) == len(REGISTRY)
 
 
+def test_queries_lists_the_registry_in_order():
+    """queries() is every registered name once, in REGISTRY's order, so a
+    reader that samples its leading entries sees the registry's own order."""
+    from ssidentity_spark.registry import all_queries
+
+    names = list(all_queries())
+    assert names == list(REGISTRY)
+    assert len(set(names)) == len(REGISTRY)
+
+
+def test_bench_headliners_lead_queries():
+    """The 22 bench=True headliners are exactly the first 22 queries()."""
+    from ssidentity_spark.registry import all_queries
+
+    bench = {n for n, spec in REGISTRY.items() if spec.bench}
+    assert len(bench) == 22
+    assert set(list(all_queries())[: len(bench)]) == bench
+
+
+def test_oracle_less_queries_are_exactly_the_approx_sketches():
+    """Only the two approximate sketches are rows-only; a new query without
+    a DuckDB oracle must be added here deliberately."""
+    rows_only = {n for n, spec in REGISTRY.items() if spec.oracle is None}
+    assert rows_only == {"a8_approx_quantiles", "a8_approx_distinct_users"}
+
+
 def test_decontamination_is_not_vacuous(spark):
     """The benchmark mod/rem were chosen so the corpus's planted near-dup
     structure produces real hits — if a testdata regeneration makes the
