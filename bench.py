@@ -245,9 +245,6 @@ def main() -> None:
     # testdata files are ~1-10 MB: split smaller so scans parallelize across
     # local cores (cluster deployments keep the 128 MB default)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-    # sf0.1 shuffles are KBs-per-partition: one wave of cores-many tasks
-    # beats 2x-cores of scheduler overhead (AQE still coalesces below this)
-    spark.conf.set("spark.sql.shuffle.partitions", str(cpu_count()))
     specs = bench_queries()
 
     # full warm-up pass: JIT + codegen + parquet footer caches — measured

@@ -3,9 +3,17 @@
 Two paths:
 
 - ``get_spark()`` — build a local session for tests/bench (local[N], AQE on,
-  shuffle partitions ≈ cores).
+  shuffle partitions = cores).
 - ``tune(spark)`` — idempotent runtime tuning applied to a session we did NOT
   build (the driver hands us one). Only touches runtime-settable SQL confs.
+
+A local session gets one shuffle partition per core, so that a stage runs
+as one wave of tasks. AQE coalesces batch shuffles below that count, but
+never a streaming stateful stage: there the count becomes the state
+partition count of every new checkpoint, and each trigger of the ingest
+dedup and of the alert stream runs that many fixed-cost tasks. Two waves of
+them (2 × cores) cost more scheduler overhead than the KB-sized local
+shuffles save.
 
 Scale notes (100 TB): everything set here is also correct on a real cluster —
 AQE coalesces the shuffle-partition count upward/downward at runtime, the
@@ -76,9 +84,8 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
             current = "200"
         if current != "200":
             return spark  # caller already chose (bench/tests) — respect it
-        # AQE coalesces down from this; ~2×cores is a good local ceiling and
-        # harmless on a cluster (AQE re-splits by advisory size anyway).
-        shuffle_partitions = max(2 * cpu_count(), 8)
+        # one wave of tasks per stage; see the module docstring
+        shuffle_partitions = cpu_count()
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     except Exception:
@@ -93,7 +100,7 @@ def get_spark(app_name: str = "ssidentity-spark", cores: int | None = None) -> S
         SparkSession.builder.appName(app_name)
         .master(f"local[{n}]")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.sql.shuffle.partitions", str(max(2 * n, 8)))
+        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # saveAsTable targets (bucketed S2 store) land under tmp, never

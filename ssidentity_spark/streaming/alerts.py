@@ -1,17 +1,28 @@
 """T7 — stateful arrival/departure alerts (SURVEY §2.8, the hard 20%).
 
-Reference impetus: "Tracking / Arrival alerts" (/root/reference/README.md:19).
-Per-MAC presence state machine over the observation stream via
-``applyInPandasWithState``:
+Reference impetus: "Tracking / Arrival alerts" (the reference README, line
+19). A presence state machine per MAC over the watermarked observation
+stream:
 
 - absent → row arrives  ⇒ emit ``arrival``, mark present
 - present → no row until (last_seen + gap) passes the event-time watermark
-  ⇒ timeout fires, emit ``departure``, clear state
+  ⇒ emit ``departure`` stamped last_seen + gap, forget the device
 
-State per key is 16 bytes (present flag + last-seen millis); event-time
-timeouts mean state cannot grow past the active-device population, and the
-watermark bounds both late data (T8) and timeout firing. Alert emission is
-idempotent per (mac, alert_type, ts) under exactly-once sinks.
+The ``applyInPandasWithState`` key is not the MAC but a device bucket,
+``pmod(xxhash64(mac), _BUCKETS)``: a trigger then makes one Python call per
+bucket with data or due for a departure, instead of one per device. The
+runner's cost is per call, not per row. State per bucket is three parallel
+arrays (macs, last_seen_ms, last_sensor) of the devices present, and its
+event-time timeout is armed at the earliest departure horizon,
+min(last_seen) + gap; the bucket's state is removed once its last device
+departs. Event-time timeouts keep state at the active-device population, and
+the watermark bounds both late data (T8) and departure timing. Alert
+emission is idempotent per (mac, alert_type, ts) under exactly-once sinks.
+
+``_BUCKETS`` defines the state key space: a checkpoint written under one
+value cannot be read under another, so it must never change. Alert
+checkpoints written when the key was the MAC (state of one device per key)
+cannot be resumed either; such a stream restarts from a fresh checkpoint.
 """
 
 from __future__ import annotations
@@ -22,9 +33,10 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
+    ArrayType,
     LongType,
     StringType,
     StructField,
@@ -40,13 +52,19 @@ ALERT_OUTPUT_SCHEMA = StructType(
     ]
 )
 
+ALERT_COLUMNS = ALERT_OUTPUT_SCHEMA.fieldNames()
+
+# the devices present in one bucket, as parallel arrays
 STATE_SCHEMA = StructType(
     [
-        StructField("present", BooleanType()),
-        StructField("last_seen_ms", LongType()),
-        StructField("last_sensor", StringType()),
+        StructField("macs", ArrayType(StringType())),
+        StructField("last_seen_ms", ArrayType(LongType())),
+        StructField("last_sensor", ArrayType(StringType())),
     ]
 )
+
+# State key space of the alert stream; changing it orphans every checkpoint.
+_BUCKETS = 32
 
 _INTERVAL_UNITS_MS = {
     "second": 1_000,
@@ -71,19 +89,21 @@ def _interval_ms(spec: str) -> int:
 
 
 def _fold_presence(rows: pd.DataFrame, stored, gap_ms: int, mac):
-    """Fold one micro-batch's rows (any order) into presence state.
+    """Fold one device's micro-batch rows (any order) into presence state.
 
     Scans INTRA-batch gaps too: a backfill batch carrying sightings at
     09:00 and 19:00 emits the 09:30 departure and 19:00 re-arrival that
     batch-min/max folding would lose — so alert output is deterministic
     with respect to how the file source packs rows into micro-batches.
+    Rows heard in the same millisecond fold in ``sensor_id`` order, so the
+    sensor an alert names does not depend on row order either.
     Late rows (at or before the stored last_seen) fold nothing: they
     neither regress last_seen nor overwrite the last-seen sensor.
 
     Returns (alert tuples, (present, last_seen, last_sensor))."""
     present, last_seen, last_sensor = stored
     alerts = []
-    order = rows.sort_values("_ms", kind="mergesort")
+    order = rows.sort_values(["_ms", "sensor_id"], kind="mergesort")
     for t, sensor in zip(order["_ms"], order["sensor_id"]):
         t, sensor = int(t), str(sensor)
         if t <= last_seen and present:
@@ -98,44 +118,49 @@ def _fold_presence(rows: pd.DataFrame, stored, gap_ms: int, mac):
 
 
 def _presence_fn(gap_ms: int):
+    """The per-bucket state function: fold each device's rows, then depart
+    every device whose horizon last_seen + gap is behind the watermark.
+
+    The horizon test is strict ``<``, Spark's own test for a per-key
+    event-time timeout, and a timed-out call runs the same sweep. A device
+    folded in this call is swept too. Its horizon is behind the watermark
+    only when the previous trigger moved the watermark far past this
+    call's rows, where a per-device timeout could not even be set
+    (``setTimeoutTimestamp`` rejects a time behind the watermark)."""
+
     def fn(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        mac = key[0]
-        if state.hasTimedOut:
-            present, last_seen, last_sensor = (
-                state.get if state.exists else (False, 0, None)
-            )
-            state.remove()
-            if present:
-                yield pd.DataFrame(
-                    {
-                        "mac": [mac],
-                        "alert_type": ["departure"],
-                        "event_ms": [last_seen + gap_ms],
-                        "sensor_id": [last_sensor],
-                    }
-                )
-            return
-
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if rows.empty:
-            return
-        # event-time millis arrive as datetime64 — normalize
-        rows = rows.assign(_ms=rows["ts"].astype("int64") // 1_000_000)
-
-        stored = (False, 0, None)
+        devices: dict[str, tuple[int, str]] = {}
         if state.exists:
-            stored = tuple(state.get)
-        alerts, new_state = _fold_presence(rows, stored, gap_ms, mac)
-        state.update(new_state)
-        state.setTimeoutTimestamp(new_state[1] + gap_ms)
+            macs, seen, sensors = state.get
+            devices = {m: (int(t), s) for m, t, s in zip(macs, seen, sensors)}
+        alerts = []
+        if not state.hasTimedOut:
+            rows = pd.concat(list(pdfs), ignore_index=True)
+            # event-time millis arrive as datetime64 — normalize
+            rows = rows.assign(_ms=rows["ts"].astype("int64") // 1_000_000)
+            for mac, group in rows.groupby("mac", sort=False):
+                stored = (True, *devices[mac]) if mac in devices else (False, 0, None)
+                out, (_, last_seen, last_sensor) = _fold_presence(group, stored, gap_ms, mac)
+                alerts += out
+                devices[mac] = (last_seen, last_sensor)
+
+        watermark = state.getCurrentWatermarkMs()
+        for mac, (last_seen, last_sensor) in list(devices.items()):
+            if last_seen + gap_ms < watermark:
+                alerts.append((mac, "departure", last_seen + gap_ms, last_sensor))
+                del devices[mac]
+        if devices:
+            seen = [t for t, _ in devices.values()]
+            state.update((list(devices), seen, [s for _, s in devices.values()]))
+            state.setTimeoutTimestamp(min(seen) + gap_ms)
+        else:
+            state.remove()
         if alerts:
-            yield pd.DataFrame(
-                alerts, columns=["mac", "alert_type", "event_ms", "sensor_id"]
-            )
+            yield pd.DataFrame(alerts, columns=ALERT_COLUMNS)
 
     return fn
 
@@ -152,9 +177,11 @@ def presence_alerts(
     (mac, alert_type, event_ms, sensor_id) in append mode.
     """
     gap_ms = _interval_ms(gap)
+    bucket = F.pmod(F.xxhash64("mac"), F.lit(_BUCKETS)).alias("bucket")
     return (
         obs_stream.withWatermark("ts", watermark)
-        .groupBy("mac")
+        .select("mac", "ts", "sensor_id", bucket)
+        .groupBy("bucket")
         .applyInPandasWithState(
             _presence_fn(gap_ms),
             outputStructType=ALERT_OUTPUT_SCHEMA,
@@ -165,114 +192,18 @@ def presence_alerts(
     )
 
 
-# ---------------------------------------------------------------------------
-# T7 on the modern engine: transformWithStateInPandas (Spark 4 state-v2 API,
-# RocksDB-backed). Same presence state machine as presence_alerts, expressed
-# with explicit value state + event-time timers instead of the legacy
-# GroupState timeout — the forward-looking variant SURVEY §7 flagged.
-#
-# Runtime caveat: the state-v2 Python runner requires google.protobuf, which
-# this container does not ship — the pytest exercising this path skips when
-# protobuf is absent (the applyInPandasWithState implementation above is the
-# tested production path here). The code follows the documented
-# StatefulProcessor contract 1:1 so it runs unchanged where protobuf exists.
-# ---------------------------------------------------------------------------
-
-
-def presence_alerts_tws(
-    obs_stream: DataFrame,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Arrival/departure alerts via ``transformWithStateInPandas``.
-
-    Caller must set
-    ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider before starting the query (state-v2 requirement).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_ms = _interval_ms(gap)
-
-    class PresenceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "presence", "present BOOLEAN, last_seen_ms BIGINT, last_sensor STRING"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            mac = key[0]
-            parts = [pdf for pdf in rows if not pdf.empty]
-            if not parts:
-                return
-            batch = pd.concat(parts, ignore_index=True)
-            batch = batch.assign(_ms=batch["ts"].astype("int64") // 1_000_000)
-
-            stored = (False, 0, None)
-            if self._state.exists():
-                stored = tuple(self._state.get())
-            out, new_state = _fold_presence(batch, stored, gap_ms, mac)
-            self._state.update(new_state)
-            # one live timer per key: re-arm at the new departure horizon
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(new_state[1] + gap_ms)
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["mac", "alert_type", "event_ms", "sensor_id"]
-                )
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            mac = key[0]
-            if not self._state.exists():
-                return
-            present, last_seen, last_sensor = self._state.get()
-            expiry = expired_timer_info.getExpiryTimeInMs()
-            if present and expiry >= last_seen + gap_ms:
-                self._state.clear()
-                yield pd.DataFrame(
-                    {
-                        "mac": [mac],
-                        "alert_type": ["departure"],
-                        "event_ms": [last_seen + gap_ms],
-                        "sensor_id": [last_sensor],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        obs_stream.withWatermark("ts", watermark)
-        .groupBy("mac")
-        .transformWithStateInPandas(
-            PresenceProcessor(),
-            outputStructType=ALERT_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    )
+# the name the benchmark imports
+presence_alerts_auto = presence_alerts
 
 
 def state_v2_available(spark=None) -> bool:
-    """True when the state-v2 Python runner can actually start here.
+    """True when a worker can import ``google.protobuf``, which PySpark's
+    state-v2 runner (``transformWithStateInPandas``) needs.
 
-    ``transformWithStateInPandas`` ships its state protocol over
-    protobuf; a worker without ``google.protobuf`` fails at first batch,
-    after the query has already started AND committed its checkpoint to
-    the v2 state format — which the v1 degrade path can then never
-    reuse. Probing up front lets callers pick an engine BEFORE that
-    commitment. The failure lives WORKER-side, so when a ``spark``
-    session is passed the probe runs the import on an executor (one
-    1-row UDF task — driver and executor Python envs can differ, e.g. a
-    fat driver venv over minimal executor containers); with no session
-    it falls back to the driver interpreter, correct for local[*] where
-    both are the same env.
+    No alert engine depends on it any more: it only feeds the benchmark's
+    ``alert_engine`` host fact. With a ``spark`` session the probe runs as
+    a one-row UDF job on an executor, whose Python can differ from the
+    driver's; without one it runs in the driver interpreter.
     """
 
     def _probe() -> bool:
@@ -289,8 +220,6 @@ def state_v2_available(spark=None) -> bool:
 
     if spark is None:
         return _probe()
-    from pyspark.sql import functions as F
-
     probe_udf = F.udf(lambda _: _probe(), "boolean")
     try:
         row = spark.range(1).select(probe_udf("id").alias("ok")).collect()
@@ -298,35 +227,3 @@ def state_v2_available(spark=None) -> bool:
     except Exception:
         # a worker that cannot even run the probe cannot run state-v2
         return False
-
-
-def presence_alerts_auto(
-    obs_stream: DataFrame,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Arrival/departure alerts on the best engine this runtime supports.
-
-    Prefers the state-v2 ``transformWithStateInPandas`` implementation
-    (RocksDB-backed state, explicit timers); when the runtime lacks
-    ``google.protobuf`` — minimal containers, like this one — it logs the
-    reason and degrades to the ``applyInPandasWithState`` path, which
-    implements the identical presence state machine (VERDICT r10 ask #8:
-    the public surface must stay usable where state-v2 cannot start).
-    Both paths produce ALERT_OUTPUT_SCHEMA in append mode; the two state
-    formats are NOT checkpoint-compatible, so a given checkpoint dir must
-    stay on the engine that created it — which is exactly why the probe
-    runs on an EXECUTOR (via the stream's session) rather than only the
-    driver: choosing v2 off a driver-only import and dying worker-side at
-    batch 1 would have already pinned the checkpoint to the v2 format.
-    """
-    if state_v2_available(obs_stream.sparkSession):
-        return presence_alerts_tws(obs_stream, gap=gap, watermark=watermark)
-    import logging
-
-    logging.getLogger(__name__).info(
-        "state-v2 runner unavailable (google.protobuf not importable); "
-        "falling back to applyInPandasWithState for presence alerts"
-    )
-    return presence_alerts(obs_stream, gap=gap, watermark=watermark)

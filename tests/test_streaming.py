@@ -354,6 +354,111 @@ def test_presence_gap_interval_parsing():
         _interval_ms("5 fortnights")
 
 
+class _FakeGroupState:
+    """The slice of PySpark's ``GroupState`` the alert bucket function uses."""
+
+    def __init__(self, watermark_ms=0):
+        self.value, self.watermark_ms, self.hasTimedOut = None, watermark_ms, False
+        self.timeout_ms = None
+        self.removed = False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def remove(self):
+        self.value, self.removed = None, True
+
+    def setTimeoutTimestamp(self, ms):
+        # Spark rejects a timeout behind the watermark
+        assert ms >= self.watermark_ms, (ms, self.watermark_ms)
+        self.timeout_ms = ms
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+
+def test_presence_bucket_function_semantics():
+    """T7 without Spark: the per-bucket state function driven call by call
+    with a fake GroupState — arrivals, intra-batch gaps, late rows, the
+    strict departure test, timeout re-arming and state removal, and
+    same-millisecond ties."""
+    from ssidentity_spark.streaming.alerts import _presence_fn
+
+    gap = 30 * 60_000
+    fn = _presence_fn(gap)
+
+    def call(state, rows=()):
+        pdf = pd.DataFrame(rows, columns=["mac", "_t", "sensor_id"])
+        pdf = pdf.assign(ts=pd.to_datetime(pdf["_t"].astype("int64"), unit="ms"), bucket=7)
+        pdfs = iter([] if state.hasTimedOut else [pdf.drop(columns="_t")])
+        return sorted(t for out in fn((7,), pdfs, state) for t in out.itertuples(index=False, name=None))
+
+    def devices(state):
+        macs, seen, sensors = state.value
+        return dict(zip(macs, zip(seen, sensors)))
+
+    # first arrival; an intra-batch silence longer than the gap departs
+    # (stamped last_seen + gap, last sensor before it) and re-arrives
+    st = _FakeGroupState()
+    got = call(st, [("A", 0, "s1"), ("A", 60_000, "s1"), ("B", 0, "s1"), ("B", 10 * gap, "s2")])
+    assert got == sorted(
+        [("A", "arrival", 0, "s1"), ("B", "arrival", 0, "s1"),
+         ("B", "departure", gap, "s1"), ("B", "arrival", 10 * gap, "s2")]
+    )
+    assert devices(st) == {"A": (60_000, "s1"), "B": (10 * gap, "s2")}
+    # the timeout is armed at the earliest horizon
+    assert st.timeout_ms == 60_000 + gap
+
+    # a late row folds nothing: no alert, last_seen and sensor kept
+    assert call(st, [("A", 30_000, "s9")]) == []
+    assert devices(st)["A"] == (60_000, "s1")
+
+    # a watermark equal to A's horizon keeps A present (strict <)
+    st.watermark_ms, st.hasTimedOut = 60_000 + gap, True
+    assert call(st) == []
+    assert set(devices(st)) == {"A", "B"}
+    # one millisecond later A departs; the timeout re-arms at B's horizon
+    st.watermark_ms += 1
+    assert call(st) == [("A", "departure", 60_000 + gap, "s1")]
+    assert devices(st) == {"B": (10 * gap, "s2")}
+    assert st.timeout_ms == 11 * gap
+
+    # a data call for another device sweeps B once its horizon has passed
+    st.watermark_ms, st.hasTimedOut = 11 * gap + 1, False
+    assert call(st, [("C", 12 * gap, "s3")]) == sorted(
+        [("B", "departure", 11 * gap, "s2"), ("C", "arrival", 12 * gap, "s3")]
+    )
+    assert devices(st) == {"C": (12 * gap, "s3")}
+
+    # the last departure removes the bucket's state
+    st.watermark_ms, st.hasTimedOut = 13 * gap + 1, True
+    assert call(st) == [("C", "departure", 13 * gap, "s3")]
+    assert st.removed and not st.exists
+
+    # a row admitted under the previous trigger's watermark, whose horizon
+    # is already behind this trigger's, arrives and departs in one call
+    # instead of arming a timeout behind the watermark
+    st = _FakeGroupState(3 * gap)
+    assert call(st, [("E", gap, "s4")]) == [("E", "arrival", gap, "s4"), ("E", "departure", 2 * gap, "s4")]
+    assert st.removed
+
+    # two sensors hearing a device in one millisecond: the arrival and the
+    # later departure name the lower sensor_id, whatever the row order
+    for rows in ([("D", 5, "s2"), ("D", 5, "s1")], [("D", 5, "s1"), ("D", 5, "s2")]):
+        st = _FakeGroupState()
+        assert call(st, rows) == [("D", "arrival", 5, "s1")]
+        st.watermark_ms, st.hasTimedOut = 5 + gap + 1, True
+        assert call(st) == [("D", "departure", 5 + gap, "s1")]
+
+
 def _drop_last_commit(ck: str) -> None:
     """Crash simulation: erase the newest streaming commit record (and its
     checksum sidecar — a stale .crc makes the checkpoint manager report a
@@ -485,48 +590,6 @@ def test_presence_alerts_crash_resume_no_duplicate_arrival(spark, tmp_path):
     got = spark.read.parquet(out).collect()
     arrivals = sorted(r.mac for r in got if r.alert_type == "arrival")
     assert arrivals == ["AAA", "BBB", "CCC"], got  # exactly one arrival each
-
-
-def test_presence_alerts_transform_with_state(spark, tmp_path):
-    """T7 on the state-v2 API (transformWithStateInPandas + event-time
-    timers, RocksDB-backed): same arrival/departure semantics as the
-    applyInPandasWithState implementation."""
-    pytest.importorskip("pyspark.sql.streaming.stateful_processor")
-    # the state-v2 Python runner speaks protobuf to the JVM; without it the
-    # streaming worker crashes at init (container lacks google.protobuf)
-    pytest.importorskip("google.protobuf")
-    from ssidentity_spark.streaming.alerts import presence_alerts_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        chunks = [
-            [(0, "AAA", "s1"), (2, "AAA", "s1"), (1, "BBB", "s2")],
-            [(120, "BBB", "s2"), (121, "ZZZ", "s1")],
-            [(240, "ZZZ", "s1")],
-        ]
-        src = _write_chunks(spark, tmp_path, chunks)
-        stream = read_observation_stream(spark, src)
-        alerts = presence_alerts_tws(stream, gap="30 minutes", watermark="10 minutes")
-        out = _run(alerts, tmp_path, "tws_alerts", mode="append")
-        got = spark.read.parquet(out).collect()
-        by_type = {}
-        for r in got:
-            by_type.setdefault(r.alert_type, []).append(r.mac)
-        assert "AAA" in by_type.get("arrival", [])
-        assert "BBB" in by_type.get("arrival", [])
-        assert "AAA" in by_type.get("departure", []), got
-        dep = [r for r in got if r.mac == "AAA" and r.alert_type == "departure"][0]
-        base = dt.datetime(2016, 7, 21, 10, 0, 0, tzinfo=dt.timezone.utc)
-        assert dep.event_ms == int((base + dt.timedelta(minutes=32)).timestamp() * 1000)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_settings_edit_propagates_without_restart(spark, tmp_path):
@@ -1269,39 +1332,19 @@ def test_streaming_pii_scrub_parity_with_batch(spark, tmp_path):
     assert got[2]["n_card"] == 1 and got[2]["n_phone"] == 1
 
 
-def test_presence_alerts_auto_selects_engine_by_protobuf(spark, monkeypatch):
-    """VERDICT r10 ask #8: presence_alerts_auto picks state-v2 only when
-    google.protobuf can import, and degrades to the v1 path otherwise —
-    the selection logic itself needs no protobuf to test."""
-    from ssidentity_spark.streaming import alerts as A
+def test_state_v2_available_probe_agrees_on_driver_and_executor(spark):
+    """The real protobuf probe, both sides: the driver-interpreter form and
+    the executor form (local[*]: same env, so they must agree)."""
+    from ssidentity_spark.streaming.alerts import state_v2_available
 
-    calls = []
-    monkeypatch.setattr(
-        A, "presence_alerts_tws", lambda s, **kw: calls.append("v2") or "V2"
-    )
-    monkeypatch.setattr(
-        A, "presence_alerts", lambda s, **kw: calls.append("v1") or "V1"
-    )
-
-    class _FakeStream:  # presence_alerts_auto reads .sparkSession only
-        sparkSession = None
-
-    monkeypatch.setattr(A, "state_v2_available", lambda *_: False)
-    assert A.presence_alerts_auto(_FakeStream()) == "V1"
-    monkeypatch.setattr(A, "state_v2_available", lambda *_: True)
-    assert A.presence_alerts_auto(_FakeStream()) == "V2"
-    assert calls == ["v1", "v2"]
-    # the real probe, both sides: driver-interpreter form and the
-    # executor form (local[*]: same env, so they must agree)
     try:
         import google.protobuf  # noqa: F401
 
         expect = True
     except ImportError:
         expect = False
-    monkeypatch.undo()
-    assert A.state_v2_available() is expect
-    assert A.state_v2_available(spark) is expect
+    assert state_v2_available() is expect
+    assert state_v2_available(spark) is expect
 
 
 def test_streaming_ema_folds_cross_batch_disorder_within_watermark(
