@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssidentity_spark.operators.iterate import materialize
+
 EOW = "</w>"
 
 
@@ -118,7 +120,8 @@ def bpe_train(
                 F.lit(f" {lhs}{rhs} "),
             ).alias("s"),
             "cnt",
-        ).localCheckpoint(eager=True)
+        )
+        cur = materialize(cur)
     table = spark.createDataFrame(
         [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "it int, lhs string, rhs string, pair_count bigint",
@@ -223,7 +226,8 @@ def wordpiece_train(
                 F.lit(f" {r['lhs']}{r['rhs']} "),
             ).alias("s"),
             "cnt",
-        ).localCheckpoint(eager=True)
+        )
+        cur = materialize(cur)
     table = spark.createDataFrame(
         [(i, l, rr, c, ca, cb) for i, (l, rr, c, ca, cb) in enumerate(merges)],
         "it int, lhs string, rhs string, pair_count bigint, "

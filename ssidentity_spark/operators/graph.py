@@ -1,21 +1,25 @@
-"""Relational graph analytics over the co-occurrence network
-(/root/reference/README.md:15-19 "things that can be correlated"):
-connected components via iterative min-label propagation — the device-
-cluster ("traveling companions") analysis built from operators/analytics.py
-:co_occurrence edges.
+"""Relational graph analytics over the co-occurrence network (the
+reference's README.md:15-19, "things that can be correlated"): connected
+components (HashMin and large-star/small-star), weighted label
+propagation and weighted PageRank, built from joins and aggregations
+rather than a graph engine.
 
-No graph engine: components are computed with joins + aggregations, the
-standard large-scale relational formulation (HashMin). Each iteration is one
-shuffle on the edge key; iterations stop early when no label changes.
-Label state is (vertex → component), checkpoint-truncated every iteration so
-the plan doesn't grow unboundedly — the practical requirement for running
-this at 100 TB.
+Every loop here runs through :func:`~ssidentity_spark.operators.iterate.
+iterate`: each round's state is written out by ``materialize`` (so plans
+never grow round over round) and the round's fixpoint scalar is observed
+on that same checkpoint job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ssidentity_spark.operators.iterate import (
+    iterate,
+    materialize,
+    materialize_observed,
+)
 
 
 def connected_components(
@@ -24,13 +28,12 @@ def connected_components(
     dst: str = "mac_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    truncate: bool = True,
 ) -> DataFrame:
     """HashMin label propagation: every vertex adopts the smallest label in
     its neighborhood until fixpoint. Returns (vertex, component) where
     component is the lexicographically smallest member id. When ``stats``
-    is passed, records {"iterations": n} — the convergence count the scale
-    studies report (tools/dedup_blowup.py).
+    is passed, ``iterate`` records the round count, whether the fixpoint
+    was reached, and rows and seconds per round.
 
     HashMin converges in O(component diameter) rounds; the r5 blow-up
     study measured 18 rounds on chain-shaped 10-replica clusters, so the
@@ -53,52 +56,33 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("vertex"))
     )
-    for it in range(max_iter):
-        # candidate labels: own label + min neighbor label
+
+    def step(labels: DataFrame, _m: dict) -> DataFrame:
+        # candidate labels: own label + min neighbor label; the round's
+        # join sees old and new label side by side, so the change flag
+        # rides the state and its count is observed on the checkpoint
         neighbor_min = (
             sym.join(labels, sym.v == labels.vertex)
             .groupBy(F.col("u").alias("vertex"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        # r13: the round's join already sees old and new label side by
-        # side, so the fixpoint signal rides the state frame as a
-        # boolean instead of a PER-ROUND labels⋈updated join job (the
-        # old check re-joined vertex-sized frames every round purely to
-        # detect change — one full extra job per round, guide §2.4).
-        # After the eager checkpoint the change test is a scan of the
-        # materialized blocks.
-        updated = (
-            labels.join(neighbor_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", F.col("component"))
-                    < F.col("component")
-                ).alias("chg"),
-            )
+        nbr = F.coalesce("nbr_min", F.col("component"))
+        return labels.join(neighbor_min, "vertex", "left").select(
+            "vertex",
+            F.least(F.col("component"), nbr).alias("component"),
+            (nbr < F.col("component")).alias("chg"),
         )
-        # fixpoint check + plan truncation via localCheckpoint.
-        # truncate=False keeps the round's lineage visible — the audit
-        # hook (tools/explain_audit.py) uses it to record the join+agg
-        # structure explain() cannot see behind a checkpoint; production
-        # callers keep the default or plans grow round-over-round
-        if truncate:
-            updated = updated.localCheckpoint(eager=True)
-        changed = updated.filter("chg").limit(1).count()
-        labels = updated.select("vertex", "component")
-        if stats is not None:
-            stats["iterations"] = it + 1
-            # distinguish "fixpoint at exactly max_iter" from "truncated
-            # mid-propagation" — the r6 30× blow-up hit the ceiling and
-            # the raw iteration count alone could not tell which
-            stats["converged"] = changed == 0
-        if changed == 0:
-            break
+
+    labels = iterate(
+        step,
+        labels,
+        max_iter,
+        metrics={"chg": F.count_if("chg")},
+        done=lambda m, *_: m["chg"] == 0,
+        stats=stats,
+    )
     sym.unpersist()
-    return labels
+    return labels.select("vertex", "component")
 
 
 def connected_components_star(
@@ -107,7 +91,6 @@ def connected_components_star(
     dst: str = "mac_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    truncate: bool = True,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
@@ -134,75 +117,37 @@ def connected_components_star(
     # pays one extra edge-list-sized copy. Interleaved A/B at sf0.1
     # (dedup_cc_clusters, 4 rounds): 8.05 → 7.22 s median, faster every
     # round, exceptAll-identical output.
-    raw = raw.localCheckpoint(eager=True)
-    cur = (
+    raw = materialize(raw)
+    cur, init = materialize_observed(
         raw.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        rows=F.count(F.lit(1)),
     )
     # vertex set from the UNFILTERED edges: a vertex whose only edges are
     # self-loops must still appear (as its own singleton component), or
     # this function disagrees with connected_components on such graphs
-    vertices = (
+    vertices = materialize(
         raw.select(F.col("u").alias("vertex"))
         .unionByName(raw.select(F.col("v").alias("vertex")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # closed neighborhood of u: neighbors over both directions + u
-        nbrs = e.select("u", "v").unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        # no .distinct() on the self-edges: the only consumer is the
-        # duplicate-insensitive min() below, so deduping here would be a
-        # pure-waste extra shuffle per star phase
-        with_self = nbrs.unionByName(nbrs.select("u", F.col("u").alias("v")))
-        m = with_self.groupBy("u").agg(F.min("v").alias("m"))
-        joined = nbrs.join(m, "u")
-        if large:
-            # connect strictly larger neighbors to the neighborhood min
-            linked = joined.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            )
-        else:
-            # connect smaller-or-equal neighbors AND u itself to the min
-            linked = (
-                joined.filter(F.col("v") <= F.col("u"))
-                .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                .unionByName(
-                    m.select(F.col("u").alias("a"), F.col("m").alias("b"))
-                )
-            )
-        linked = linked.select("a", "b")
-        return (
-            linked.filter(F.col("a") != F.col("b"))
-            .select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .distinct()
-        )
+    def same_edges(m: dict, prev: dict, new: DataFrame, old: DataFrame) -> bool:
+        # fixpoint: the edge multiset stopped changing. The counts are
+        # observed; the exact test runs only once they agree
+        return m["rows"] == prev["rows"] and new.exceptAll(old).limit(1).count() == 0
 
-    for it in range(max_iter):
-        nxt = star(star(cur, large=True), large=False)
-        # truncate=False is the audit hook (see connected_components)
-        if truncate:
-            nxt = nxt.localCheckpoint(eager=True)
-        # fixpoint: the edge multiset stopped changing
-        done = (
-            nxt.count() == cur.count()
-            and nxt.exceptAll(cur).limit(1).count() == 0
-        )
-        if stats is not None:
-            stats["iterations"] = it + 1
-            stats["converged"] = done
-        cur = nxt
-        if done:
-            break
+    cur = iterate(
+        _star_round,
+        cur,
+        max_iter,
+        done=same_edges,
+        init=init,
+        stats=stats,
+    )
     # converged: a star forest — every non-min vertex carries exactly one
     # (vertex, min) edge; the min-agg is belt-and-braces if max_iter cut
     # convergence short on an adversarial graph
@@ -217,13 +162,54 @@ def connected_components_star(
     )
 
 
+def _star(e: DataFrame, large: bool) -> DataFrame:
+    """One large-star (``large``) or small-star phase over canonical
+    ``(u > v)`` edges."""
+    # closed neighborhood of u: neighbors over both directions + u
+    nbrs = e.select("u", "v").unionByName(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    # no .distinct() on the self-edges: the only consumer is the
+    # duplicate-insensitive min() below, so deduping here would be a
+    # pure-waste extra shuffle per star phase
+    with_self = nbrs.unionByName(nbrs.select("u", F.col("u").alias("v")))
+    m = with_self.groupBy("u").agg(F.min("v").alias("m"))
+    joined = nbrs.join(m, "u")
+    if large:
+        # connect strictly larger neighbors to the neighborhood min
+        linked = joined.filter(F.col("v") > F.col("u")).select(
+            F.col("v").alias("a"), F.col("m").alias("b")
+        )
+    else:
+        # connect smaller-or-equal neighbors AND u itself to the min
+        linked = (
+            joined.filter(F.col("v") <= F.col("u"))
+            .select(F.col("v").alias("a"), F.col("m").alias("b"))
+            .unionByName(
+                m.select(F.col("u").alias("a"), F.col("m").alias("b"))
+            )
+        )
+    linked = linked.select("a", "b")
+    return (
+        linked.filter(F.col("a") != F.col("b"))
+        .select(
+            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+        )
+        .distinct()
+    )
+
+
+def _star_round(e: DataFrame, _m: dict | None = None) -> DataFrame:
+    """One connected_components_star round: large-star, then small-star."""
+    return _star(_star(e, large=True), large=False)
+
+
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
     iters: int = 4,
-    truncate: bool = True,
     vertices: DataFrame | None = None,
 ) -> DataFrame:
     """COMMUNITY detection by synchronous weighted label propagation
@@ -245,8 +231,8 @@ def label_propagation(
     Relational per round: one join of the symmetrized edge list with the
     label vector on the neighbor key, one (vertex, label) weight
     aggregate, one argmax-by-struct aggregate — two keyed exchanges,
-    checkpoint-truncated lineage (``truncate=False`` is the plan-audit
-    hook, as in connected_components). State is one row per vertex.
+    the state materialized each round by ``iterate``. State is one row
+    per vertex.
 
     Vertex universe contract (ADVICE r10): by default EDGES DEFINE THE
     VERTEX SET — a vertex with no incident edge has no neighborhood to
@@ -255,47 +241,13 @@ def label_propagation(
     vertex ids, any column name); isolated members then come back as
     their own singleton community (label = own id), exactly the LPA
     fixpoint for a degree-0 vertex."""
-    # symmetrize with summed weights ONCE (undirected view of a directed
-    # multigraph); integral weights -> exact argmax
-    sym = (
-        edges.select(
-            F.col(src).alias("u"),
-            F.col(dst).alias("v"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .unionByName(
-            edges.select(
-                F.col(dst).alias("u"),
-                F.col(src).alias("v"),
-                F.col(weight).cast("long").alias("w"),
-            )
-        )
-        .groupBy("u", "v")
-        .agg(F.sum("w").alias("w"))
-        .cache()
-    )
+    sym = _lpa_sym(edges, src, dst, weight).cache()
     labels = (
         sym.select(F.col("u").alias("vertex"))
         .distinct()
         .withColumn("label", F.col("vertex"))
     )
-    for _ in range(iters):
-        support = (
-            sym.join(labels, sym.v == labels.vertex)
-            .groupBy(F.col("u").alias("vertex"), "label")
-            .agg(F.sum("w").alias("s"))
-        )
-        # argmax(s) with min-label tie-break via one struct-max: compare
-        # (s, -label) lexicographically — exact on integers
-        labels = support.groupBy("vertex").agg(
-            (
-                -F.max(F.struct(F.col("s"), (-F.col("label")).alias("nl")))[
-                    "nl"
-                ]
-            ).alias("label")
-        )
-        if truncate:
-            labels = labels.localCheckpoint(eager=True)
+    labels = iterate(lambda lab, _m: _lpa_round(sym, lab), labels, iters)
     sym.unpersist()
     if vertices is not None:
         # degree-0 members never appear in `support`, so they are added
@@ -310,6 +262,36 @@ def label_propagation(
         )
         labels = labels.unionByName(isolated)
     return labels
+
+
+def _lpa_sym(edges: DataFrame, src: str, dst: str, weight: str) -> DataFrame:
+    """label_propagation's undirected view of a directed multigraph:
+    (u, v, w) with weights summed over both directions, cast to long so
+    the argmax stays exact."""
+    w = F.col(weight).cast("long").alias("w")
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), w)
+        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"), w))
+        .groupBy("u", "v")
+        .agg(F.sum("w").alias("w"))
+    )
+
+
+def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One label_propagation round: each vertex adopts the label of
+    greatest incident weight, ties to the smallest label."""
+    support = (
+        sym.join(labels, sym.v == labels.vertex)
+        .groupBy(F.col("u").alias("vertex"), "label")
+        .agg(F.sum("w").alias("s"))
+    )
+    # argmax(s) with min-label tie-break via one struct-max: compare
+    # (s, -label) lexicographically — exact on integers
+    return support.groupBy("vertex").agg(
+        (-F.max(F.struct(F.col("s"), (-F.col("label")).alias("nl")))["nl"]).alias(
+            "label"
+        )
+    )
 
 
 def companion_clusters(obs: DataFrame, window: str = "30 seconds", min_cowindows: int = 2) -> DataFrame:
@@ -333,9 +315,7 @@ def pagerank(
     iters: int = 6,
     damping: float = 0.85,
     round_dp: int = 6,
-    lineage: str = "local",
     partitions: int | None = None,
-    checkpoint_every: int = 1,
     broadcast_max_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Weighted PageRank by plain joins + aggregations, fixed ``iters``
@@ -345,222 +325,133 @@ def pagerank(
     the influence ranking over the device co-observation graph is the
     natural next analytic after connected components (A3 network tree).
 
-    Per round: ONE join of the normalized edge list with the current rank
-    vector on ``src`` (both sides hash-partitioned on the same key, so the
-    cached edge side never re-shuffles), one aggregation on ``dst``, and a
-    scalar dangling-mass aggregate (1-row broadcast, handles sinks
-    exactly). The rank-independent work is hoisted out of the loop:
-    out-weight normalization happens once (``p = w/wout`` cached, not
-    re-joined every round) and the dangling-node set — nodes with no
-    outgoing edges — is a boolean carried on the cached state frame, so
-    the per-round dangling mass is a filter+sum over the rank vector
-    instead of an anti-join (the r6 per-round constant). Rank state is one
-    row per vertex — never materialized on the driver. Fixed iteration
-    count (not convergence-tested) keeps the computation a pure static DAG
-    both engines can replay bit-for-bit up to float summation order; the
-    final ``round(round_dp)`` absorbs that tail.
+    The rank-independent work runs once, before the loop: the edge list
+    is materialized with its count observed, out-weights are folded into
+    ``p = w / wout``, and the state frame ``(node, dangling)`` — dangling
+    means no out-edge — is materialized with the node and dangling counts
+    observed. Each round is then one contribution join + per-``dst`` sum
+    and one state join, run by ``iterate``. The dangling mass a round
+    redistributes is the sum of the previous round's dangling ranks,
+    observed on that round's checkpoint job and passed in as a literal,
+    so no round runs a job for it. Rank state is one row per vertex,
+    never collected. Fixed rounds (no convergence test) keep the loop a
+    static recurrence the DuckDB oracle unrolls; float summation order
+    differs between engines and the final ``round(round_dp)`` absorbs it.
 
-    ``lineage`` picks the round-over-round plan-truncation strategy:
+    ``partitions`` fixes the loop's shuffle width. By default it is
+    derived from the edge count, about 2M edges per partition with a
+    floor of 1, so a small graph does not run
+    ``spark.sql.shuffle.partitions`` tasks per round and a large one
+    still gets thousands. Every per-round exchange is pinned to this
+    width and key, so the cached edge side and the state side are never
+    re-shuffled inside the loop.
 
-    - ``"local"`` (default): eager ``localCheckpoint`` per round — fastest
-      on a healthy cluster and the right choice for local/bench runs, but
-      the truncated lineage lives in executor block storage, so losing an
-      executor (spot kill, dynamic-allocation scale-in) after round k
-      fails the job: there is no lineage left to recompute the block.
-    - ``"reliable"``: ``DataFrame.checkpoint`` to the session's checkpoint
-      directory (HDFS/object store on a real cluster) — each round's state
-      is durably materialized, an executor loss costs one re-read instead
-      of the job. This is the 1000-executor default; requires
-      ``spark.sparkContext.setCheckpointDir`` (raises a descriptive error
-      otherwise).
-    - ``"persist"``: no truncation — rounds compose lazily into one DAG
-      with each round's state persisted (MEMORY_AND_DISK) for reuse by
-      the two downstream consumers. Full lineage is retained, so recovery
-      is Spark-native recompute; analysis cost grows with ``iters``
-      (measured at sf0.1, 6 rounds: 4.3× slower end-to-end than
-      ``"local"`` — the compounding plan dominates, so this mode is for
-      environments that cannot checkpoint at all, not a performance
-      choice).
+    The contribution join's strategy comes from the observed node count:
 
-    ``partitions`` fixes the loop's shuffle width. Default (None) derives
-    it from the edge count — ~2M edges per partition, floor 1, no upper
-    cap — because checkpoint truncation blinds AQE: each round starts from
-    a ``Scan ExistingRDD`` whose partitioning Catalyst can't see, so the
-    usual small-shuffle coalescing never happens and every round would
-    otherwise launch ``spark.sql.shuffle.partitions`` tasks regardless of
-    graph size (measured: 64-task rounds on a 97k-edge graph — pure
-    scheduler overhead). Deriving the width restores exactly what AQE
-    would have chosen; at billions of edges the same formula yields
-    thousands of partitions, so the plan scales up unchanged. Every
-    per-round exchange is pinned to this width and key, so the cached
-    edge side and the state side are never re-shuffled inside the loop.
+    - ``n_nodes <= broadcast_max_nodes`` (default 2M; a rank row is a key
+      and a double, about 100 MB framed): the normalized edges are cached
+      hash-partitioned on ``dst`` and each round broadcasts the slim
+      ``(node, rank)`` vector, so the contribution join, the per-``dst``
+      sum and the state join all ride one partitioning and the round's
+      only exchange is the broadcast.
+    - larger graphs: the edges are cached on ``src``, the rank vector is
+      shuffled to them, and the per-``dst`` sum partial-aggregates before
+      its exchange, which then carries vertex-bounded partial sums rather
+      than one row per edge.
 
-    ``checkpoint_every`` sets the truncation CADENCE for the local /
-    reliable modes: truncate after every Nth round (the final round
-    always truncates), letting N rounds compose lazily between cuts —
-    fewer materialization writes at the price of an N-round-deep plan
-    per cut. Measured at sf0.1 / 6 rounds / local[32] (SCALE.md r12):
-    cadence 2 is within noise of cadence 1 — the per-round state is one
-    slim row per vertex, so the checkpoint write is not the cost;
-    cadence stays 1 by default (shallowest plans, cheapest recovery
-    unit, and at 10⁹ vertices the write is still rank-vector sized,
-    far below one round's edge-join shuffle).
-
-    r13 (VERDICT r12 ask #3): the contribution step picks its join
-    strategy from the MEASURED vertex count — the one statistic
-    checkpoint truncation hides from Catalyst (``n_nodes`` is already
-    computed for the 1/n seed, so the choice costs nothing):
-
-    - ``n_nodes <= broadcast_max_nodes`` (default 2M — a rank row is a
-      key + a double, so ~100 MB framed; far under the 8 GB broadcast
-      cap and sized so every executor holds it comfortably): the edge
-      frame is cached hash-partitioned on ``dst`` and each round
-      BROADCASTS the slim (node, rank) vector instead of shuffling it —
-      the contribution join, the per-``dst`` aggregate, AND the state
-      join all ride the one cached dst-partitioning, so a round's only
-      exchange is the vertex-sized broadcast itself (guide §3.1: the
-      small side of an iterative join is the rank vector by
-      construction; Catalyst can never pick this because the
-      checkpointed side scans back as an ExistingRDD without stats).
-    - larger graphs: the r12 shuffle shape, except the per-``dst``
-      aggregate now PARTIAL-aggregates map-side before its exchange
-      (guide §2.3 "aggregate before you shuffle") instead of
-      repartitioning the edge-grain join output — the exchange carries
-      per-(task × dst) partial sums (vertex-bounded) rather than one
-      row per edge, the difference between shuffling ~|E| and ~|V| rows
-      per round at 100 TB. The rank vector is projected to (node, rank)
-      before its exchange (§2.3 "project before the exchange").
-
-    Float note: either path changes only the ADDITION ORDER of each
-    dst's contribution sum (partial agg / broadcast-probe order vs the
-    r12 complete-mode order); the recurrence itself is unchanged and
-    the final ``round(round_dp)`` absorbs the last-ulp tail exactly as
-    it already absorbed partition-order variation (oracle-hash-verified
-    at 3 SFs, r13).
+    Both paths compute the same recurrence; only the addition order
+    inside each ``dst``'s sum differs, which the rounding absorbs.
     """
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if lineage not in ("local", "reliable", "persist"):
-        raise ValueError(f"lineage must be local|reliable|persist, got {lineage!r}")
-    spark = edges.sparkSession
-    if lineage == "reliable" and spark.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            "lineage='reliable' needs spark.sparkContext.setCheckpointDir "
-            "(an HDFS/object-store path on a cluster) before calling pagerank"
-        )
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("double").alias("w"),
-    ).cache()  # read 4x below (out_w, ew, nodes x2) — evaluate the
-    # upstream edge derivation once, not per consumer
-    # loop shuffle width: derived from edge count unless pinned (see
-    # docstring); the count doubles as the cache warm-up
-    if partitions is None:
-        n_edges = e.count()
-        partitions = max(1, -(-n_edges // 2_000_000))
-    # normalize ONCE: p = w / wout folds the out-weight join out of the
-    # loop (the cache key — src for the shuffle path, dst for the
-    # broadcast path — is chosen below once n_nodes is known; ew is lazy
-    # until the first round materializes it)
-    out_w = e.groupBy("src").agg(F.sum("w").alias("wout"))
-    ew0 = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("wout")).alias("p")
+    step, ranks, init, caches = _pagerank_setup(
+        edges, src, dst, weight, damping, partitions, broadcast_max_nodes
     )
-    # state = (node, dangling): rank-independent, computed once — the
-    # dangling flag replaces the r6 per-round left_anti join; partitioned
-    # on node at the loop width so the per-round left join never moves it
+    # dm: the rank a round leaves on dangling nodes, spread by the next
+    dm = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
+    ranks = iterate(step, ranks, iters, metrics={"dm": dm}, init=init)
+    for cached in caches:
+        cached.unpersist()
+    return ranks.select("node", F.round("rank", round_dp).alias("rank"))
+
+
+def _pagerank_setup(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    weight: str,
+    damping: float,
+    partitions: int | None,
+    broadcast_max_nodes: int,
+) -> tuple:
+    """pagerank's loop-invariant frames, built once: returns the round
+    ``step``, the initial rank state, the initial observed values and the
+    two cached frames the rounds read."""
+    e, ec = materialize_observed(
+        edges.select(
+            F.col(src).alias("src"),
+            F.col(dst).alias("dst"),
+            F.col(weight).cast("double").alias("w"),
+        ),
+        n=F.count(F.lit(1)),
+    )
+    if partitions is None:
+        partitions = max(1, -(-ec["n"] // 2_000_000))
+    out_w = e.groupBy("src").agg(F.sum("w").alias("wout"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    state = (
-        nodes.join(out_w, nodes.node == out_w.src, "left")
-        .select("node", F.col("wout").isNull().alias("dangling"))
-        .repartition(partitions, "node")
+    state, sc = materialize_observed(
+        nodes.join(out_w, nodes.node == out_w.src, "left").select(
+            "node", F.col("wout").isNull().alias("dangling")
+        ),
+        n=F.count(F.lit(1)),
+        n_dangling=F.count_if("dangling"),
+    )
+    # a checkpoint scans back with no known partitioning, a cache keeps
+    # it: cached on node at the loop width, the per-round state join
+    # never moves the state
+    state = state.repartition(partitions, "node").cache()
+    # an empty graph (e.g. every transition was a self-loop) runs its
+    # rounds over no rows and returns an empty (node, rank) frame
+    n_nodes = max(sc["n"], 1)
+    broadcast_ranks = sc["n"] <= broadcast_max_nodes
+    ew = (
+        e.join(out_w, "src")
+        .select("src", "dst", (F.col("w") / F.col("wout")).alias("p"))
+        .repartition(partitions, "dst" if broadcast_ranks else "src")
         .cache()
     )
-    n_nodes = state.count()  # scalar cardinality — model-sized driver read
-    # join-strategy decision from the measured vertex count (docstring
-    # r13 note): small rank vectors broadcast, so the edge cache keys on
-    # dst and a round needs no shuffle at all; big graphs keep the
-    # src-keyed cache + shuffle shape with map-side partial aggregation
-    broadcast_ranks = n_nodes <= broadcast_max_nodes
-    ew = ew0.repartition(
-        partitions, "dst" if broadcast_ranks else "src"
-    ).cache()
-    if n_nodes == 0:
-        # empty edge frame (e.g. every transition was a self-loop): no
-        # nodes, so return an empty (node, rank) frame instead of tripping
-        # the driver-side 1.0 / n_nodes below
-        e.unpersist()
-        ew.unpersist()
-        state.unpersist()
-        return state.select("node", F.lit(0.0).alias("rank"))
 
-    ranks = state.withColumn("rank", F.lit(1.0 / n_nodes))
-    for it in range(iters):
-        dangling = ranks.filter("dangling").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
+    def step(ranks: DataFrame, m: dict) -> DataFrame:
         # slim rank vector for the contribution join: the dangling flag
-        # never crosses this exchange/broadcast (guide §2.3 "project
-        # before the exchange")
+        # never crosses the exchange or broadcast
         rv = ranks.select("node", "rank")
         if broadcast_ranks:
-            # vertex count measured small: broadcast the rank vector so
-            # the round's join + per-dst aggregate + state join all ride
-            # ew's cached hash(dst, width) — zero shuffles per round
             contrib = (
                 ew.join(F.broadcast(rv), ew.src == rv.node)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("p")).alias("m"))
             )
         else:
-            # the checkpointed ranks frame scans back as an ExistingRDD
-            # with unknown partitioning — re-pin it to (node, width) so
-            # the join reuses ew's cached hash(src, width) layout; the
-            # per-dst aggregate then partial-aggregates map-side and its
-            # exchange carries vertex-bounded partial sums, re-pinned to
-            # (dst, width) so the state join below stays exchange-free
+            # re-pin the rank vector to (node, width) so the join reuses
+            # ew's hash(src, width) layout, and the partial sums to
+            # (dst, width) so the state join stays exchange-free
             contrib = (
                 ew.join(rv.repartition(partitions, "node"), ew.src == rv.node)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("p")).alias("m"))
                 .repartition(partitions, "dst")
             )
-        ranks = (
-            state.join(contrib, state.node == contrib.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "dangling",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + damping
-                    * (F.coalesce("m", F.lit(0.0)) + F.col("dm") / n_nodes)
-                ).alias("rank"),
-            )
+        return state.join(contrib, state.node == contrib.dst, "left").select(
+            "node",
+            "dangling",
+            (
+                F.lit((1.0 - damping) / n_nodes)
+                + damping
+                * (F.coalesce("m", F.lit(0.0)) + F.lit(m["dm"]) / n_nodes)
+            ).alias("rank"),
         )
-        # truncate (or persist) the lineage per the chosen durability
-        # mode; local/reliable honor the cadence (final round always cuts)
-        due = (it + 1) % checkpoint_every == 0 or it == iters - 1
-        if lineage == "local":
-            if due:
-                ranks = ranks.localCheckpoint(eager=True)
-        elif lineage == "reliable":
-            if due:
-                ranks = ranks.checkpoint(eager=True)
-        else:
-            ranks = ranks.persist()
-    if lineage != "persist":
-        # final state is eagerly materialized — the loop-invariant caches
-        # are dead weight from here (repeated invocations would otherwise
-        # pile ew/state copies into the block manager)
-        e.unpersist()
-        ew.unpersist()
-        state.unpersist()
-    return ranks.select("node", F.round("rank", round_dp).alias("rank"))
+
+    ranks = state.withColumn("rank", F.lit(1.0 / n_nodes))
+    return step, ranks, {"dm": sc["n_dangling"] / n_nodes}, (state, ew)

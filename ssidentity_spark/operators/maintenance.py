@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ssidentity_spark.operators.iterate import materialize
+
 
 def upsert_by_key(
     target: DataFrame,
@@ -200,7 +202,7 @@ def upsert_parquet_partitioned(
         # break lineage from `path` before overwriting it (Spark refuses
         # a direct read-from/write-to cycle); bounded by the touched
         # partitions
-        merged = merged.localCheckpoint(eager=True)
+        merged = materialize(merged)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

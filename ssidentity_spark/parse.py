@@ -26,6 +26,10 @@ SSID sanitize (ssidentity.c:153-177): printable bytes kept, non-printable
 rendered ``\\xNN`` (uppercase hex). The reference's loop shifts read indices
 after the first escape and can overrun — a noted defect (SURVEY §0); we
 implement the evident intent: every byte independently kept-or-escaped.
+
+No expression here maps case: ``hex`` already emits 0-9A-F and the
+``date_format`` pattern's only letters are AM/PM, so the parse never pays
+``upper``'s ICU start-up on a session's first ingest.
 """
 
 from __future__ import annotations
@@ -67,7 +71,7 @@ def is_probe_request(frame: Column) -> Column:
 
 def is_broadcast_dest(frame: Column) -> Column:
     """P3: 6 bytes at offset 42 all 0xFF (ssidentity.c:145, :248-256)."""
-    return F.upper(F.hex(F.substring(frame, DEST_ADDR_OFFSET + 1, 6))) == "FFFFFFFFFFFF"
+    return F.hex(F.substring(frame, DEST_ADDR_OFFSET + 1, 6)) == "FFFFFFFFFFFF"
 
 
 def ip_protocol(frame: Column) -> Column:
@@ -99,7 +103,7 @@ def sanitize_ssid(raw: Column) -> Column:
     Pure expression: hex-string → byte pairs → per-pair keep-or-escape →
     concat. Stays inside codegen; no UDF.
     """
-    pairs = F.regexp_extract_all(F.upper(F.hex(raw)), F.lit(".."), 0)
+    pairs = F.regexp_extract_all(F.hex(raw), F.lit(".."), 0)
     return F.concat_ws("", F.transform(pairs, _render_pair))
 
 
@@ -112,7 +116,7 @@ def _render_pair(p: Column) -> Column:
 def was_escaped(raw: Column) -> Column:
     """P12: the 'weird STA bus' alarm flag (ssidentity.c:193) — true when
     any SSID byte was non-printable."""
-    pairs = F.regexp_extract_all(F.upper(F.hex(raw)), F.lit(".."), 0)
+    pairs = F.regexp_extract_all(F.hex(raw), F.lit(".."), 0)
     return F.exists(
         pairs, lambda p: ~F.conv(p, 16, 10).cast("int").between(0x20, 0x7E)
     )
@@ -121,7 +125,7 @@ def was_escaped(raw: Column) -> Column:
 def client_mac(frame: Column) -> Column:
     """P7/D4: 6 MAC bytes → 12 uppercase hex chars, zero padded
     ("%012lX" of macU8ToU64, ssidentity.c:179-181, :262-272)."""
-    return F.lpad(F.upper(F.hex(F.substring(frame, MAC_ADDR_OFFSET + 1, 6))), 12, "0")
+    return F.lpad(F.hex(F.substring(frame, MAC_ADDR_OFFSET + 1, 6)), 12, "0")
 
 
 def rssi(frame: Column) -> Column:
@@ -175,7 +179,7 @@ def parse_observations(frames: DataFrame, ts_col: str = "recv_ts") -> DataFrame:
         frames.filter(accept_predicate(f))
         .select(
             F.col(ts_col).alias("ts"),
-            F.upper(F.date_format(ts_col, "MM/dd/yy - hh:mma")).alias("ts_str"),
+            F.date_format(ts_col, "MM/dd/yy - hh:mma").alias("ts_str"),
             F.col("sensor_id"),
             client_mac(f).alias("mac"),
             sanitized.alias("ssid"),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ssidentity_spark.functions.timeutil import epoch_us
 from ssidentity_spark.io import load_table
+from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -2004,9 +2005,7 @@ def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flagged exchanges for ~15 executed); the checkpoint makes the
     # printed plan match what actually runs (eval-only query, lineage
     # truncation is the documented trade)
-    prof = behavior_profiles(
-        load_table(spark, sf_dir, "events")
-    ).localCheckpoint(eager=True)
+    prof = materialize(behavior_profiles(load_table(spark, sf_dir, "events")))
     u = prof.select(F.countDistinct("user_id").cast("long").alias("u"))
     cellsum = prof.groupBy("hod", "event_type").agg(
         F.sum("c").cast("long").alias("s")
@@ -2075,7 +2074,7 @@ def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — both sides of the band self-join consume them, and the build side
     # otherwise re-runs the whole plane-projection chain (the
     # id_linkage_banded trade, at 12-bit cost here).
-    sig = sig.localCheckpoint(eager=True)
+    sig = materialize(sig)
     a = sig.alias("a")
     b = sig.alias("b")
     cand = (
@@ -2099,12 +2098,11 @@ def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (n_candidates + the recall join); without the cut each branch
     # re-ran its full pair pass (the exact tier's Σ cell² join twice,
     # the band join twice). Both frames are user/candidate-sized.
-    exact = (
+    exact = materialize(
         _exact_linkage(prof)
         .select(F.col("user_id").alias("u1"), F.col("match_id").alias("u2"))
-        .localCheckpoint(eager=True)
     )
-    cand = cand.localCheckpoint(eager=True)
+    cand = materialize(cand)
     recalled = exact.join(cand, ["u1", "u2"])
     n_users = exact.agg(F.count(F.lit(1)).cast("long").alias("v"))
     n_rec = recalled.agg(F.count(F.lit(1)).cast("long").alias("v"))
@@ -2359,7 +2357,7 @@ def id_linkage_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes it TWICE (probe side + broadcast build side). Without the
     # cut the broadcast build re-ran the whole projection chain
     # (measured ~4 s per re-run at sf0.1, two extra runs).
-    sig = sig.localCheckpoint(eager=True)
+    sig = materialize(sig)
     a = sig.alias("a")
     b = sig.alias("b")
     # r12 optimization: unrolled XOR-popcount over the 16 words inside a
@@ -2594,7 +2592,7 @@ def id_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Interleaved A/B at sf0.1 (4 rounds): 19.8 s → 12.2 s median
     # (1.6×), exceptAll-identical output. (The same cut LOST in
     # graph_kcore, whose build sits behind sym.cache() — measured both.)
-    knn = knn.localCheckpoint(eager=True)
+    knn = materialize(knn)
     rev = knn.select(F.col("u2").alias("u1"), F.col("u1").alias("u2"))
     pairs = (
         knn.join(rev, ["u1", "u2"], "left_semi")

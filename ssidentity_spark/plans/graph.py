@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table
 from ssidentity_spark.operators.graph import pagerank
+from ssidentity_spark.operators.iterate import iterate, materialize
 from ssidentity_spark.registry import register
 
 _DAMPING = 0.85
@@ -538,13 +539,12 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the three wedge/closure join legs, n_edges) and each lazily re-ran
     # the date-window edge derivation + distinct; materialize the
     # edge-bounded frame once (the graph_degree_assortativity precedent).
-    e = (
+    e = materialize(
         tr.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -688,9 +688,10 @@ def ivf_knn_edges(
 # k=8/9 cliff (out-degree >= 8 by construction); the MUTUAL graph's degree
 # spread (p10 4, median 7, p90 8) peels non-vacuously at K=4 on all three
 # SFs — 27/39/95 vertices peeled, fixpoint in <= 5 rounds (probed in-
-# session). Fixed _KCORE_ROUNDS rounds keep the loop a static dataflow
-# both engines replay exactly (the LPA/pagerank pattern); convergence at
-# gate scale is pinned by pytest (one extra peel changes nothing).
+# session). The oracle unrolls _KCORE_ROUNDS peels; the Spark loop runs
+# at most that many and stops at the fixpoint (an unchanged alive count),
+# after which every further peel is a no-op, so both give the same core;
+# convergence at gate scale is pinned by pytest.
 # ---------------------------------------------------------------------------
 
 _KCORE_K = 4
@@ -767,8 +768,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade as G3). Each peel round is two keyed SEMI-joins of the edge
     list against the shrinking alive set plus one count aggregate —
     alive only ever SHRINKS, so round cost is monotonically
-    non-increasing, and lineage is checkpoint-truncated per round (the
-    LPA/pagerank pattern). Peeling is pure integer degree counting: no
+    non-increasing; ``iterate`` materializes each round and ends the loop
+    once the observed alive count stops changing. Peeling is pure integer degree counting: no
     float anywhere after the 6-dp kNN ranks, so every round sits under
     the driver hash exactly."""
     # shared mutual-kNN edge builder (G4/G6 — _mutual_knn_edges)
@@ -787,25 +788,32 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_vec = em.count()
     width = max(1, (n_vec * _KCORE_KNN) // 2_000_000)
     sym = _mutual_knn_edges(em).repartition(width, "u").cache()
-    alive = sym.select("u").distinct()
-    for _ in range(_KCORE_ROUNDS):
+
+    def peel(alive: DataFrame, _m: dict) -> DataFrame:
         deg = (
             sym.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        alive = deg.filter(F.col("c") >= _KCORE_K).select("u")
-        alive = alive.localCheckpoint(eager=True)
+        return deg.filter(F.col("c") >= _KCORE_K).select("u")
+
+    # alive only shrinks, so an unchanged alive count is an unchanged
+    # alive set: the fixpoint, after which further peels are no-ops
+    alive = iterate(
+        peel,
+        sym.select("u").distinct(),
+        _KCORE_ROUNDS,
+        done=lambda m, prev, *_: m["rows"] == prev.get("rows"),
+    )
     # materialize the surviving edge set BEFORE unpersisting sym (r11
     # advice: an eager unpersist here made the returned lazy frame
     # recompute the full O(n²) kNN build at action time — the cache only
     # ever benefited the peel rounds). The eager checkpoint is small
     # (core edges only) and truncates the sym lineage for good.
-    core_edges = (
+    core_edges = materialize(
         sym.join(alive, "u", "left_semi")
         .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
-        .localCheckpoint(eager=True)
     )
     sym.unpersist()
     return (
@@ -896,13 +904,12 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy read would re-run the date-window edge derivation; checkpoint
     # the edge-bounded distinct frame once (kcore precedent), and cache
     # the vertex-sized degree table for its three consumers
-    sym = (
+    sym = materialize(
         tr.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionByName(
             tr.select(F.col("dst").alias("u"), F.col("src").alias("v"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = sym.groupBy("u").agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -1000,32 +1007,43 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier algebra are all integer-exact; the only floats anywhere
     are the 6-dp kNN ranks inside the shared edge derivation."""
     em = load_table(spark, sf_dir, "embeddings")
-    sym = _mutual_knn_edges(em).localCheckpoint(eager=True)
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    seed = (
-        deg.orderBy(F.desc("c"), F.asc("u"))
-        .limit(1)
-        .select(F.col("u").alias("node"))
+    sym = materialize(_mutual_knn_edges(em))
+    # reached only grows, so an unchanged row count is an empty frontier
+    reached = iterate(
+        lambda r, m: _bfs_round(sym, r, m),
+        _bfs_seed(sym),
+        _BFS_ROUNDS,
+        metrics={"hops": F.coalesce(F.max("hops"), F.lit(0))},
+        done=lambda m, prev, *_: m["rows"] == prev["rows"],
+        init={"rows": 1, "hops": 0},
     )
-    assigned = seed.withColumn("hops", F.lit(0))
-    frontier = seed
-    for r in range(1, _BFS_ROUNDS + 1):
-        nxt = (
-            sym.join(frontier, sym.u == frontier.node)
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(assigned.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        assigned = assigned.unionByName(
-            nxt.withColumn("hops", F.lit(r))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return assigned.select(
+    return reached.select(
         F.col("node").alias("vec_id"), F.col("hops").cast("long")
     )
+
+
+def _bfs_seed(sym: DataFrame) -> DataFrame:
+    """graph_bfs_hops' initial state: the max-degree vertex (ties to the
+    smallest id) at hop 0."""
+    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
+    return (
+        deg.orderBy(F.desc("c"), F.asc("u"))
+        .limit(1)
+        .select(F.col("u").alias("node"), F.lit(0).alias("hops"))
+    )
+
+
+def _bfs_round(sym: DataFrame, reached: DataFrame, m: dict) -> DataFrame:
+    """One graph_bfs_hops round: the vertices first reached at hop
+    ``m["hops"]`` (the frontier) expand to their unreached neighbors."""
+    frontier = reached.filter(F.col("hops") == m["hops"])
+    nxt = (
+        sym.join(frontier, sym.u == frontier.node)
+        .select(F.col("v").alias("node"))
+        .distinct()
+        .join(reached.select("node"), "node", "left_anti")
+    )
+    return reached.unionByName(nxt.withColumn("hops", F.lit(m["hops"] + 1)))
 
 
 def _mutual_knn_edges(em: DataFrame) -> DataFrame:

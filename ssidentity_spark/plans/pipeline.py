@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table, spread
+from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.plans.dedup import (
     _lsh_pairs_sql_ctes,
     _minhash_agg_sql,
@@ -1752,7 +1753,7 @@ def _fusion_scored(
         # pass reads a materialized leaf instead (graph_kcore
         # precedent; lineage truncation is the documented trade). sig
         # is then released: nothing lazy references it anymore.
-        fused = fused.localCheckpoint(eager=True)
+        fused = materialize(fused)
         sig.unpersist()
     return fused
 

@@ -22,6 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table, spread
+from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.registry import register
 
 N_QUERIES = 10  # deterministic query subset: vec_id < 10
@@ -1701,7 +1702,7 @@ def _mmr_pool(
         ).alias("rel"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-    # eager localCheckpoint, not persist: the greedy loop references this
+    # eager materialize, not persist: the greedy loop references this
     # frame 2x per round — truncating the lineage keeps round plans
     # constant-size (the pagerank/LPA convention) and the frame is
     # pool-bounded (queries x pool rows), so materialization is free
@@ -1711,7 +1712,7 @@ def _mmr_pool(
         .select("query_id", "vec_id", "rel")
     )
     if truncate:
-        cand = cand.localCheckpoint(eager=True)
+        cand = materialize(cand)
     cv = corpus.select("vec_id", "v", "nrm")
     a = cand.select("query_id", F.col("vec_id").alias("va")).join(
         cv.select(
@@ -1744,7 +1745,7 @@ def _mmr_pool(
         )
     )
     if truncate:
-        pc = pc.localCheckpoint(eager=True)  # pool^2-bounded, like cand
+        pc = materialize(pc)  # pool^2-bounded, like cand
     return cand, pc
 
 
@@ -1759,7 +1760,7 @@ def mmr_select(
     (query_id, va, vb, pcos) pairwise-sim frame — candidate-generation
     agnostic (the exact tier feeds it at gate scale, the IVF index at
     100 TB). ``truncate=False`` keeps the round lazy — the plan-audit
-    hook (tools/explain_audit.py), as in graph.label_propagation."""
+    hook (tools/explain_audit.py)."""
     one_m = round(1.0 - lam, 6)
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("vec_id")
@@ -1809,7 +1810,7 @@ def mmr_select(
         # plan and analysis cost would grow quadratically in k
         sel = sel.unionByName(pick)
         if truncate:
-            sel = sel.localCheckpoint(eager=True)
+            sel = materialize(sel)
     return sel.select(
         "query_id", F.col("rnk").cast("int").alias("rnk"), "vec_id", "rel", "score"
     )

@@ -14,6 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table, spread
+from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.registry import register
 
 # "BPE-ish" token pattern: word pieces or single non-space symbols.
@@ -2075,7 +2076,7 @@ def text_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads a materialized leaf (a persist here still re-printed the
     # whole scored subtree per scan — 58 flagged exchanges for ~10
     # executed; the checkpoint makes the audit match reality)
-    r = (
+    r = materialize(
         scored.withColumn("rn", F.row_number().over(w))
         .where("rn <= 2")
         .select(
@@ -2085,7 +2086,6 @@ def text_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rn",
             F.round("s", 6).cast("decimal(18,6)").alias("sd"),
         )
-        .localCheckpoint(eager=True)
     )
     top = r.where("rn = 1").select(
         "doc_id", "true_lang", F.col("lang").alias("pred_lang"),

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.parse import parse_observations
 from ssidentity_spark.schemas import OBSERVATIONS_SCHEMA, RAW_FRAMES_SCHEMA
 
@@ -109,7 +110,7 @@ def replay_observations_rate(
         ticks.join(indexed, "seq")
         .drop("seq", "ts", "value")
         .withColumnRenamed("timestamp", "ts")
-        .withColumn("ts_str", F.upper(F.date_format("ts", "MM/dd/yy - hh:mma")))
+        .withColumn("ts_str", F.date_format("ts", "MM/dd/yy - hh:mma"))
     )
 
 
@@ -393,7 +394,7 @@ def roster_upsert_stream(
             )
         merged = mac_roster_upsert(roster, batch).withColumn("mac_bucket", bucket)
         # break the read->overwrite cycle; bounded by the touched buckets
-        merged = merged.localCheckpoint(eager=True)
+        merged = materialize(merged)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

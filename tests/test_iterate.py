@@ -1,0 +1,140 @@
+"""The shared loop primitives (operators/iterate.py): the durability policy
+of ``materialize`` and the round, stop and stats contract of ``iterate``."""
+
+from __future__ import annotations
+
+import contextlib
+
+from pyspark.sql import functions as F
+
+from ssidentity_spark.operators.iterate import iterate, materialize
+
+
+@contextlib.contextmanager
+def _checkpoint_dir(spark, path):
+    """A session checkpoint directory for one block. Spark has no public
+    unset, so the previous value is put back through the context's
+    setter: a directory left behind would make every later
+    ``materialize`` in the session reliable."""
+    sc = spark.sparkContext
+    before = sc.getCheckpointDir()
+    sc.setCheckpointDir(str(path))
+    try:
+        yield path
+    finally:
+        opt = sc._jvm.scala.Option
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            opt.apply(before) if before else opt.empty()
+        )
+    assert sc.getCheckpointDir() == before
+
+
+def _checkpointed_rdd(df):
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
+def test_materialize_is_local_without_a_checkpoint_dir(spark):
+    assert spark.sparkContext.getCheckpointDir() is None
+    out = materialize(spark.range(5))
+    rdd = _checkpointed_rdd(out)
+    assert rdd.isCheckpointed() and rdd.getCheckpointFile().isEmpty()
+    assert sorted(r.id for r in out.collect()) == list(range(5))
+
+
+def test_materialize_is_reliable_with_a_checkpoint_dir(spark, tmp_path):
+    with _checkpoint_dir(spark, tmp_path / "ckpt") as path:
+        out = materialize(spark.range(5))
+        rdd = _checkpointed_rdd(out)
+        assert rdd.isCheckpointed() and rdd.getCheckpointFile().isDefined()
+        assert str(path) in rdd.getCheckpointFile().get()
+        assert any(path.rglob("part-*"))
+        assert sorted(r.id for r in out.collect()) == list(range(5))
+
+
+def _countdown(spark):
+    """x in 0..4, each round x -> max(x - 1, 0): the fixpoint (all zero)
+    is reached in round 4."""
+    state = spark.range(5).select(F.col("id").alias("x"))
+    seen = []
+
+    def step(df, m):
+        seen.append(dict(m))
+        return df.select(F.greatest(F.col("x") - 1, F.lit(0)).alias("x"))
+
+    return state, step, seen
+
+
+def test_iterate_stops_at_the_fixpoint_and_fills_stats(spark):
+    state, step, seen = _countdown(spark)
+    stats = {}
+    out = iterate(
+        step,
+        state,
+        10,
+        metrics={"pos": F.count_if(F.col("x") > 0)},
+        done=lambda m, *_: m["pos"] == 0,
+        init={"pos": 4},
+        stats=stats,
+    )
+    assert [r.x for r in out.collect()] == [0] * 5
+    assert stats["iterations"] == 4 and stats["converged"] is True
+    assert stats["rows"] == [5, 5, 5, 5] and len(stats["seconds"]) == 4
+    # each step sees the previous round's observed values, init first
+    assert seen == [{"pos": 4}] + [{"rows": 5, "pos": p} for p in (3, 2, 1)]
+
+
+def test_iterate_respects_the_round_cap(spark):
+    state, step, _ = _countdown(spark)
+    stats = {}
+    out = iterate(
+        step,
+        state,
+        2,
+        metrics={"pos": F.count_if(F.col("x") > 0)},
+        done=lambda m, *_: m["pos"] == 0,
+        stats=stats,
+    )
+    assert sorted(r.x for r in out.collect()) == [0, 0, 0, 1, 2]
+    assert stats["iterations"] == 2 and stats["converged"] is False
+
+
+def test_a_round_launches_no_job_besides_its_checkpoint(spark):
+    """The fixpoint test reads the round's Observation: a narrow round is
+    exactly one job (its checkpoint), the stop decision included."""
+    sc = spark.sparkContext
+    state, step, _ = _countdown(spark)
+    group = "test-iterate-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        stats = {}
+        iterate(
+            step,
+            state,
+            10,
+            metrics={"pos": F.count_if(F.col("x") > 0)},
+            done=lambda m, *_: m["pos"] == 0,
+            stats=stats,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["iterations"] == 4
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
+def test_pagerank_ranks_equal_under_reliable_checkpoints(spark, tmp_path):
+    """The durability policy changes where round state is written, never
+    the ranks."""
+    from ssidentity_spark.operators.graph import pagerank
+
+    e = spark.createDataFrame(
+        [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("c", "d", 3.0)],
+        "src string, dst string, w double",
+    )
+    local = {r.node: r.rank for r in pagerank(e, iters=4).collect()}
+    with _checkpoint_dir(spark, tmp_path / "ckpt") as path:
+        reliable = {r.node: r.rank for r in pagerank(e, iters=4).collect()}
+        assert any(path.rglob("part-*"))
+    assert reliable == local

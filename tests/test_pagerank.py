@@ -59,40 +59,6 @@ def test_weights_steer_rank(spark):
     assert r["b"] > r["c"]
 
 
-def test_reliable_mode_requires_checkpoint_dir(spark):
-    e = _edges(spark, [("a", "b", 1.0)])
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("a prior test set a session checkpoint dir")
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        pagerank(e, lineage="reliable")
-
-
-def test_lineage_modes_agree(spark, tmp_path):
-    """All three durability modes compute the identical recurrence — the
-    mode only changes HOW round state is materialized (executor-local
-    blocks vs reliable checkpoint vs persisted lineage)."""
-    e = _edges(
-        spark,
-        [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("a", "c", 1.0)],
-    )
-    base = _ranks(pagerank(e, iters=4, lineage="local"))
-    assert _ranks(pagerank(e, iters=4, lineage="persist")) == base
-    had_dir = spark.sparkContext.getCheckpointDir() is not None
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        assert _ranks(pagerank(e, iters=4, lineage="reliable")) == base
-    finally:
-        if not had_dir:
-            # best effort: Spark has no unset API; later tests that need
-            # reliable checkpoints set their own dir anyway
-            pass
-
-
-def test_unknown_lineage_mode_rejected(spark):
-    with pytest.raises(ValueError, match="lineage"):
-        pagerank(_edges(spark, [("a", "b", 1.0)]), lineage="bogus")
-
-
 def test_join_strategy_modes_agree(spark):
     """r13: the contribution step picks broadcast-rank vs shuffle from
     the measured vertex count (broadcast_max_nodes). Both paths compute

@@ -63,6 +63,14 @@ def test_golden_ts_str(spark, labeled):
     assert row.ts_str == "07/21/16 - 11:41AM"
 
 
+def test_parse_maps_no_case(spark, labeled):
+    """``hex`` already emits 0-9A-F and ``date_format``'s ``a`` renders
+    AM/PM, so the parse needs no ``upper``, whose first use in a session
+    loads ICU case-mapping data (about a second of the first ingest)."""
+    plan = parse_observations(labeled)._jdf.queryExecution().optimizedPlan()
+    assert "upper(" not in plan.toString()
+
+
 def test_escape_alarm_flag(spark, labeled):
     rows = {r.sensor_id: r.ssid_was_escaped for r in parse_observations(labeled).collect()}
     assert rows["ssid_nonprintable"] is True

@@ -269,33 +269,6 @@ def test_grouped_assigner_requires_explicit_bucket(spark):
         assign_global_ids(df, ["v"], group_cols=["g"])
 
 
-def test_pagerank_checkpoint_cadence_invariant(spark):
-    """checkpoint_every changes WHEN lineage is cut, never WHAT is
-    computed: ranks are bit-identical at the rounded 6 dp across
-    cadences (and the cadence must be >= 1)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from ssidentity_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (1, 3, 3.0), (4, 1, 1.0)],
-        "src long, dst long, w double",
-    )
-    base = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, iters=5, checkpoint_every=1).collect()
-    }
-    for ck in (2, 5, 7):
-        got = {
-            r["node"]: r["rank"]
-            for r in pagerank(edges, iters=5, checkpoint_every=ck).collect()
-        }
-        assert got == base, ck
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        pagerank(edges, checkpoint_every=0)
-
-
 # ---------------------------------------------------------------------------
 # r12 mid-round additions: ID3 clusters, G5 assortativity, TS10 Holt
 # ---------------------------------------------------------------------------

@@ -60,34 +60,45 @@ def summary_flags(plan: str) -> str:
 
 def _pagerank_round(spark, sf_dir):
     from ssidentity_spark.io import load_table
-    from ssidentity_spark.operators.graph import pagerank
+    from ssidentity_spark.operators.graph import _pagerank_setup
     from ssidentity_spark.plans.graph import _DAMPING, _EDGES_SQL
 
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    # lineage='persist' keeps the round lazy — the exact loop body, visible
-    return pagerank(spark.sql(_EDGES_SQL), iters=1, damping=_DAMPING, lineage="persist")
+    step, ranks, init, _ = _pagerank_setup(
+        spark.sql(_EDGES_SQL), "src", "dst", "w", _DAMPING, None, 2_000_000
+    )
+    return step(ranks, init)
 
 
 def _cc_round(spark, sf_dir):
+    from pyspark.sql import functions as F
+
     from ssidentity_spark.io import load_table
-    from ssidentity_spark.operators.graph import connected_components_star
+    from ssidentity_spark.operators.graph import _star_round
     from ssidentity_spark.plans.dedup import _spark_lsh_pairs
 
     pairs = _spark_lsh_pairs(load_table(spark, sf_dir, "documents"))
-    return connected_components_star(
-        pairs, src="doc_a", dst="doc_b", max_iter=1, truncate=False
+    cur = (
+        pairs.filter(F.col("doc_a") != F.col("doc_b"))
+        .select(
+            F.greatest("doc_a", "doc_b").alias("u"),
+            F.least("doc_a", "doc_b").alias("v"),
+        )
+        .distinct()
     )
+    return _star_round(cur)
 
 
 def _lpa_round(spark, sf_dir):
-    # one representative LPA round, truncation off, INCLUDING the kNN
-    # edge build (the measured-quadratic surface the summary must show
-    # next to the round's two keyed exchanges — tools/lpa_blowup.py)
+    # one representative LPA round INCLUDING the kNN edge build (the
+    # measured-quadratic surface the summary must show next to the
+    # round's two keyed exchanges — tools/lpa_blowup.py)
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ssidentity_spark.io import load_table
-    from ssidentity_spark.operators.graph import label_propagation
+    from ssidentity_spark.operators.graph import _lpa_round as lpa_round
+    from ssidentity_spark.operators.graph import _lpa_sym
     from ssidentity_spark.plans.graph import _LPA_KNN
     from ssidentity_spark.plans.similarity import _dot, _norm_vec
 
@@ -112,7 +123,9 @@ def _lpa_round(spark, sf_dir):
         .filter(F.col("rnk") <= _LPA_KNN)
         .select("vec_id", "nbr", F.lit(1).alias("w"))
     )
-    return label_propagation(knn, src="vec_id", dst="nbr", iters=1, truncate=False)
+    sym = _lpa_sym(knn, "vec_id", "nbr", "w")
+    labels = sym.select(F.col("u").alias("vertex")).distinct()
+    return lpa_round(sym, labels.withColumn("label", F.col("vertex")))
 
 
 def _mmr_round(spark, sf_dir):
@@ -138,36 +151,25 @@ def _bpe_round(spark, sf_dir):
     )
 
 
-# VERDICT r6 watch item 2: explain() on a checkpoint-truncated iterative
-# operator sees only the post-checkpoint `Scan ExistingRDD`, so the
-# summary table read "narrow" for exactly the queries whose per-round
-# shuffle structure most needs auditing. Each builder here reconstructs
-# ONE representative round of the same loop body with truncation disabled
-# (pagerank: lineage='persist'; CC: truncate=False; BPE: the distributed
-# pair-count that is the round's whole cost — the merge apply is a narrow
-# map) so PLANS.md records the real join/agg/shuffle shape per iteration.
+# explain() on a materialized iterative operator sees only the
+# post-checkpoint `Scan ExistingRDD`, so the summary table reads "narrow"
+# for exactly the queries whose per-round shuffle structure most needs
+# auditing. Each function here runs ONE round of the same loop lazily
+# (the graph loops: the operator's own round function on its initial
+# state; MMR and fusion: their truncate=False hooks; BPE: the distributed
+# pair-count that is the round's whole cost — the merge apply is a
+# narrow map) so PLANS.md records the real join/agg/shuffle shape per
+# iteration.
 def _bfs_round(spark, sf_dir):
-    # graph_bfs_hops' summary row is the post-checkpoint assigned frame
+    # graph_bfs_hops' summary row is the post-checkpoint reached frame
     # ("narrow"); this records the edge build + ONE frontier-expansion
-    # round (edge join + distinct + anti-join) untruncated
-    from pyspark.sql import functions as F
-
+    # round (edge join + distinct + anti-join) unmaterialized
     from ssidentity_spark.io import load_table
-    from ssidentity_spark.plans.graph import _mutual_knn_edges
+    from ssidentity_spark.plans.graph import _bfs_round as bfs_round
+    from ssidentity_spark.plans.graph import _bfs_seed, _mutual_knn_edges
 
     sym = _mutual_knn_edges(load_table(spark, sf_dir, "embeddings"))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    seed = (
-        deg.orderBy(F.desc("c"), F.asc("u"))
-        .limit(1)
-        .select(F.col("u").alias("node"))
-    )
-    return (
-        sym.join(seed, sym.u == seed.node)
-        .select(F.col("v").alias("node"))
-        .distinct()
-        .join(seed, "node", "left_anti")
-    )
+    return bfs_round(sym, _bfs_seed(sym), {"hops": 0})
 
 
 def _fusion_scored_stage(spark, sf_dir):
