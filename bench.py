@@ -4,230 +4,92 @@ Runs the bench-tagged queries from the registry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], forcing full
 evaluation through the noop sink (no driver-side collect), and prints:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ...,
-     "per_query": {name: {"median": s, "stddev": s, "n": 5}, ...}}
+    {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+     "cpus": ..., "queries": {name: sec, ...}, "prev": <artifact>, ...}
 
-Methodology (VERDICT r2 ask #4): one discarded warm-up pass (JIT + codegen
-+ parquet footer caches), then n=5 timed runs per query; the headline
-number and the regression gate both use the MEDIAN, and per-query stddev
-ships in the artifact so sub-second flags are falsifiable (r2's 1.2x
-"regressions" on two scan-bound queries were best-of-2 noise).
+Methodology: one discarded warm-up pass (JIT + codegen + parquet footer
+caches), then n=5 timed runs per query; the headline number and the
+regression flags both use the MEDIAN, and per-query stddev ships in the
+artifact so a flag can be weighed against the run's own spread.
+
+Baseline: every run writes its full artifact to ``bench_history/`` (unless
+SPARK_GRAFT_RECORD=0, for ad-hoc runs that must not become the next
+baseline). ``prev`` is the newest recorded artifact with this run's ``sf``
+and ``cpus``; ``best`` is the per-query minimum median over all of them.
+Artifacts without a ``cpus`` field never match, so a machine with no
+recorded run of its own reports no baseline and no flags. A query is
+flagged when its median exceeds 1.3x its ``prev`` or ``best`` median.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
 import statistics
 import sys
 import time
+from datetime import datetime, timezone
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
+from perfbench.observe import host_facts, steal_seconds  # noqa: E402
 from ssidentity_spark.registry import bench_queries  # noqa: E402
 from ssidentity_spark.session import cpu_count, get_spark  # noqa: E402
 
 N_RUNS = 5
+FLAG_RATIO = 1.3
+FLAG_LISTS = ("regressions_over_1.3x", "regressions_over_1.3x_vs_best")
 
-# Recorded per-query MEDIAN seconds from the last completed round's bench
-# (round 10 driver run, sf0.1, median-of-5, bench_history/r10_sf0.1_full
-# .json — canary 1.45x vs best: a loaded session, so r11 ratios-vs-prev
-# read FAST against it; the canary normalization below is the honest
-# lens) — emitted alongside fresh numbers so each round's artifact
-# carries its own regression context (>1.3x flags a plan change).
-# r11 headliner swap (VERDICT r10 asks #3/#5): sim_ivfpq_rerank_topk is
-# un-benched (it retrains the model inline — a model-BUILD query whose
-# wall time billed training to a search row and drifted with machine
-# state); sim_ivfpq_pinned_topk benches the identical search path on a
-# pinned model, and w7_event_pattern gives the r10 pattern family a
-# regression tracker. Both seed via headliners_new at their first
-# recorded median.
-# r13 refresh: PREV_ROUND is now the r12 DRIVER run (bench_history/
-# r12_sf0.1_full.json, median-of-5) — the first prev-round table that
-# covers the full 22-headliner set (graph_kcore, id_behavior_linkage,
-# sim_ivfpq_pinned_topk, w7_event_pattern previously had no prev row).
-# CAUTION: that session was heavily loaded (canary 2.14x vs best), so
-# raw r13/r12 ratios read FAST; the canary normalization below remains
-# the honest lens, and the vs-best ratchet is unaffected.
-PREV_ROUND = {
-    "dedup_exact": 0.783,
-    "dedup_minhash_lsh_pairs": 3.307,
-    "dedup_semantic_cells": 1.412,
-    "flagship_hourly_top_types": 0.605,
-    "graph_kcore": 5.586,
-    "graph_pagerank": 5.15,
-    "id_behavior_linkage": 3.411,
-    "j10_bloom_pruned_join": 4.139,
-    "j1_region_revenue": 1.87,
-    "j4_range_join_funnel": 0.491,
-    "j9_q3_top_orders": 1.07,
-    "mm_png_decode": 1.25,
-    "pipe_decontaminate": 1.898,
-    "pipe_pack_sequences": 0.592,
-    "sim_ivfpq_pinned_topk": 4.261,
-    "sim_topk_bruteforce": 0.712,
-    "text_token_stats": 0.357,
-    "tpch_q1_pricing_summary": 0.475,
-    "tpch_q6_forecast_revenue": 0.297,
-    "ts_gapfill_interpolate": 1.398,
-    "w5_max_concurrency": 1.215,
-    "w7_event_pattern": 0.71,
-}
 
-# Per-query stddev from the same r12 driver run — the noise band each
-# flagged regression is adjudicated against (see noise adjudication
-# below).
-PREV_STDDEV = {
-    "dedup_exact": 0.356,
-    "dedup_minhash_lsh_pairs": 0.395,
-    "dedup_semantic_cells": 0.384,
-    "flagship_hourly_top_types": 0.201,
-    "graph_kcore": 0.886,
-    "graph_pagerank": 0.542,
-    "id_behavior_linkage": 0.656,
-    "j10_bloom_pruned_join": 0.657,
-    "j1_region_revenue": 0.684,
-    "j4_range_join_funnel": 0.077,
-    "j9_q3_top_orders": 0.091,
-    "mm_png_decode": 0.309,
-    "pipe_decontaminate": 1.016,
-    "pipe_pack_sequences": 0.095,
-    "sim_ivfpq_pinned_topk": 3.41,
-    "sim_topk_bruteforce": 0.071,
-    "text_token_stats": 0.016,
-    "tpch_q1_pricing_summary": 0.11,
-    "tpch_q6_forecast_revenue": 0.044,
-    "ts_gapfill_interpolate": 0.363,
-    "w5_max_concurrency": 0.246,
-    "w7_event_pattern": 0.084,
-}
+def compare(timings: dict[str, float], hist_dir: str, sf: float, cpus: int) -> dict:
+    """Ratios and regression flags of ``timings`` against the recorded
+    artifacts in ``hist_dir`` whose ``sf`` and ``cpus`` equal this run's."""
+    runs = []
+    for path in glob.glob(os.path.join(hist_dir, "*.json")):
+        with open(path) as f:
+            art = json.load(f)
+        if art.get("sf") == sf and art.get("cpus") == cpus:
+            runs.append((art.get("utc", ""), os.path.basename(path), art["queries"]))
+    runs.sort()
+    _, prev_name, prev = runs[-1] if runs else (None, None, {})
+    best: dict[str, float] = {}
+    for *_, queries in runs:
+        for name, t in queries.items():
+            best[name] = min(t, best.get(name, t))
 
-# Session-contention canary (VERDICT r7 ask #4): tpch_q6 is a pure
-# scan-filter-agg whose plan has been untouched since r2 — its
-# ratio-vs-best measures THE SESSION, not the code. r7's artifact
-# flagged q1/q6/j4 as regressions when all three were <=0.09 s deltas
-# at ~1 sigma under driver load (the repo's own A/B probe shows 1.4-2.4x
-# contention drift); the canary lets the artifact adjudicate that
-# itself instead of leaving the judge to cross-check stddevs.
-CANARY = "tpch_q6_forecast_revenue"
+    def ratios(base: dict[str, float]) -> dict[str, float]:
+        return {n: round(t / base[n], 2) for n, t in timings.items() if base.get(n)}
 
-# Best-ever per-query median across all completed rounds (VERDICT r5 ask
-# #3): the per-round ratchet compares only vs PREV_ROUND, which let
-# j1_region_revenue creep 0.994 → 1.258 s (+27%) over three rounds without
-# ever tripping the 1.3x bar. BEST_ROUND pins the historical floor — a
-# query over 1.3x of its own best is flagged even if each round-over-round
-# step stayed under the bar. (value, round) per query; sources: r1/r2 from
-# BENCH_r0{1,2}.json parsed.queries, r4/r5 from the artifact tails as
-# tabulated in VERDICT.md r5's performance table. New headliners seed at
-# their first recorded median.
-#
-# r6 j1 drift verdict (VERDICT r5 ask #3, second half): an isolated
-# 15-run probe (fresh session, warm-up discarded) measured j1 at median
-# 0.989 s — AT its r2 best (0.994) — with j4 at 0.282 and dedup_exact at
-# 0.180, both BELOW their recorded bests. The r5 "creep" was therefore
-# load variance in the full 12-headliner bench session, not a plan
-# regression (plan audit had already found the plans unchanged); j1's
-# wider spread (stdev 0.167 vs 0.018 for j4) comes from its AQE runtime
-# re-planning, which is the intended 100×-scale behaviour. The vs-best
-# gate stays: it is exactly what turned a suspicion into a 15-minute
-# falsifiable check.
-# r9 drift verdict (VERDICT r8 ask #3): a quiet-window 9-run probe
-# (fresh session, warm-up discarded, load avg 0.5) re-measured the three
-# r8-flagged queries WITH the untouched-plan canary first:
-#   tpch_q6 (canary)      0.281 s = 1.82x vs best   ← the machine factor
-#   j1_region_revenue     0.938 s = 1.38x vs best   → 0.76x normalized
-#   j4_range_join_funnel  0.299 s = 1.33x vs best   → 0.73x normalized
-#   sim_topk_bruteforce   0.482 s = 1.43x vs best   → 0.79x normalized
-# Every flagged query drifts LESS than the canary, so all three are
-# environmental (this box's best-ever rounds ran on a ~1.8x faster
-# machine state); no plan changed (git log confirms) and nothing needs a
-# fix. The BEST_ROUND floors stay as recorded — they are real numbers
-# this hardware has hit — and the canary ratio in each artifact is the
-# normalization the reader applies.
-# r10 drift verdict (VERDICT r9 ask #4): pipe_decontaminate's residual
-# (1.26-1.43x vs best across both r9 environments) now has a MEASURED
-# cause. Three-condition A/B probe (tools/decon_probe.py; one fresh
-# session each; canary timed first in-session):
-#   A isolated, loaded box:   canary 1.94x | decon 1.69x -> 0.87x normalized
-#   B bench-replica (full 19-headliner warm-up pass, the exact bench.py
-#     session state):         canary 1.18x | decon 1.30x -> 1.10x normalized
-#   C bench-replica + clearCache before each timed run:
-#                             canary 1.18x | decon 1.17x -> 0.99x normalized
-# Testdata regeneration is RULED OUT (row counts identical r6 vs r9 for
-# all 18 shared gated queries — the generator is seed-deterministic).
-# Named cause, two parts: (1) machine state (the canary factor, 1.18-1.94x
-# across probes); (2) ~10% block-manager cache pressure from the
-# warm-up pass's persisted frames (B vs C: 1.221 -> 1.098 s), paid by
-# decon's corpus-gram distinct — the largest shuffle in the suite.
-# NOT "fixed" by clearing caches in bench: condition C simultaneously
-# SLOWS dedup_semantic_cells 0.739 -> 1.096 s (it legitimately reuses
-# its warm centroid frame — also explaining ITS r9 "watch" residual:
-# the number measures cache warmth, not the plan). Both queries' plans
-# are unchanged and correct; the honest read of any future flag is the
-# canary-normalized ratio, now with the cache-pressure term quantified.
-# r11 curated-run context (bench_history/r11_sf0.1_full.json, canary
-# 1.18x): the two rows its adjudicator labels "drift" are the two the
-# r10 three-condition probe already root-caused — pipe_decontaminate
-# 1.40x raw = 1.19x normalized (the ~10% block-manager cache-pressure
-# term from the warm-up pass's persisted frames, measured at 1.10x in
-# probe condition B, plus margin), and sim_topk_bruteforce 1.39x raw =
-# 1.18x normalized (equal to the canary itself; the 1.05 session-noise
-# margin missed by 0.01). Neither plan changed this round (git log);
-# both remain environmental per the standing probe.
-BEST_ROUND = {
-    "dedup_exact": (0.162, "r9"),
-    "dedup_minhash_lsh_pairs": (0.975, "r7"),
-    "dedup_semantic_cells": (0.6, "r7"),
-    "flagship_hourly_top_types": (0.316, "r6"),
-    "graph_pagerank": (4.079, "r7"),
-    "j10_bloom_pruned_join": (1.248, "r9"),
-    "j1_region_revenue": (0.679, "r6"),
-    "j4_range_join_funnel": (0.225, "r6"),
-    "j9_q3_top_orders": (0.451, "r6"),
-    "mm_png_decode": (0.43, "r9"),
-    "pipe_decontaminate": (0.936, "r6"),
-    "pipe_pack_sequences": (0.269, "r9"),
-    # sim_ivfpq_rerank_topk left the headliner set in r11 (see PREV_ROUND
-    # note); its floor was (1.15, "r6"). The two r11 headliners seed at
-    # their first recorded medians (r11 curated run, canary 1.18x):
-    # pinned IVFPQ lands at 1.04x of the TRAINED row's floor while
-    # excluding training — the drift verdict from VERDICT r10 is cleared.
-    "sim_ivfpq_pinned_topk": (1.199, "r11"),
-    "w7_event_pattern": (0.313, "r11"),
-    # r12 headliner seeds: graph_kcore from the builder's curated r12 run
-    # (canary 1.58x; the driver's own run was 2.14x-loaded), and
-    # id_behavior_linkage from the driver run — its post-optimization
-    # 3.411 is below the curated pre-optimization 4.145.
-    "graph_kcore": (3.426, "r12"),
-    "id_behavior_linkage": (3.411, "r12"),
-    "sim_topk_bruteforce": (0.337, "r7"),
-    "text_token_stats": (0.171, "r9"),
-    "tpch_q1_pricing_summary": (0.225, "r9"),
-    "tpch_q6_forecast_revenue": (0.139, "r9"),
-    "ts_gapfill_interpolate": (0.583, "r9"),
-    "w5_max_concurrency": (0.609, "r9"),
-}
+    vs_prev, vs_best = ratios(prev), ratios(best)
+    return {
+        "prev": prev_name,
+        "n_baseline_runs": len(runs),
+        "best": best,
+        "ratio_vs_prev": vs_prev,
+        "ratio_vs_best": vs_best,
+        FLAG_LISTS[0]: sorted(n for n, r in vs_prev.items() if r > FLAG_RATIO),
+        FLAG_LISTS[1]: sorted(n for n, r in vs_best.items() if r > FLAG_RATIO),
+    }
+
+
+def artifact_name(utc: datetime, git_sha: str, sf: float, cpus: int) -> str:
+    sha = git_sha[:7] if re.fullmatch(r"[0-9a-f]{40}", git_sha) else "nogit"
+    return f"{utc:%Y%m%dT%H%M%SZ}_{sha}_sf{sf}_c{cpus}.json"
 
 
 def compact_line(compact: dict, budget: int = 1900) -> str:
     """One-line JSON for the driver's stdout tail.
 
-    r13 contract fix (VERDICT r12 item 1): ``queries`` is the one field
-    the driver's PERF/scaling comparison parses — it must NEVER be shed
-    (r12's overflow fallback dropped exactly it and silently cost the
-    round's entire per-query and scaling analysis). When the line
-    exceeds the driver's tail budget, shed the adjudication bloat first
-    — verdicts, then the two flag lists, each replaced by its count —
-    the full artifact keeps every shed field.
+    ``queries`` is the field the driver's per-query comparison parses, so
+    it is never shed. When the line exceeds the tail budget, the two flag
+    lists are shed in turn, each replaced by its count; the full artifact
+    keeps them.
     """
     line = json.dumps(compact)
-    for shed in (
-        "regression_verdicts",
-        "regressions_over_1.3x_vs_best",
-        "regressions_over_1.3x",
-    ):
+    for shed in FLAG_LISTS:
         if len(line) <= budget:
             break
         val = compact.pop(shed, None)
@@ -241,7 +103,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"(?:^|/)sf([0-9]+(?:\.[0-9]+)?)(?=/|$|[._-])", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    spark = get_spark("ssidentity-bench", cores=cpu_count())
+    cpus = cpu_count()
+    utc = datetime.now(timezone.utc)
+    load_start, steal_start = os.getloadavg(), steal_seconds()
+    spark = get_spark("ssidentity-bench", cores=cpus)
     # testdata files are ~1-10 MB: split smaller so scans parallelize across
     # local cores (cluster deployments keep the 128 MB default)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
@@ -258,160 +123,56 @@ def main() -> None:
         samples: list[float] = []
         for _ in range(N_RUNS):
             t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-        med = statistics.median(samples)
-        timings[name] = round(med, 3)
+        timings[name] = round(statistics.median(samples), 3)
         per_query[name] = {
-            "median": round(med, 3),
+            "median": timings[name],
             "stddev": round(statistics.stdev(samples), 3),
             "min": round(min(samples), 3),
             "n": N_RUNS,
         }
     total = round(sum(timings.values()), 3)
-    ratios = {
-        name: round(t / PREV_ROUND[name], 2)
-        for name, t in timings.items()
-        if name in PREV_ROUND
-    }
-    best_ratios = {
-        name: round(t / BEST_ROUND[name][0], 2)
-        for name, t in timings.items()
-        if name in BEST_ROUND
-    }
-    # NOISE ADJUDICATION (VERDICT r7 ask #4): each flagged regression
-    # carries its own noise-vs-drift verdict so the artifact is
-    # self-adjudicating. Two independent noise tests:
-    #   (a) session-wide: the canary's own ratio-vs-best — a plan that
-    #       cannot drift running 1.3x slow means the SESSION is 1.3x
-    #       loaded, so any query within ~the canary's ratio is session
-    #       noise, not code drift;
-    #   (b) per-query: the delta sits within 2 combined sigmas of the
-    #       measurement's own spread (this run's stddev or the recorded
-    #       prior stddev, whichever is larger).
-    # Only a flag failing BOTH is labelled drift.
-    canary_ratio = best_ratios.get(CANARY, 1.0)
-
-    def adjudicate(name: str, baseline: float) -> dict:
-        med = timings[name]
-        sd = max(per_query[name]["stddev"], PREV_STDDEV.get(name, 0.0))
-        sigmas = round((med - baseline) / sd, 1) if sd > 0 else None
-        session_noise = med / baseline <= canary_ratio * 1.05
-        within_band = sigmas is not None and sigmas <= 2.0
-        return {
-            "ratio": round(med / baseline, 2),
-            "delta_sec": round(med - baseline, 3),
-            "sigmas": sigmas,
-            "canary_ratio": round(canary_ratio, 2),
-            "verdict": "noise" if (session_noise or within_band) else "drift",
-        }
+    hist_dir = os.path.join(ROOT, "bench_history")
     full = {
         "metric": "headline-queries wall time (noop sink, local)",
         "value": total,
         "unit": "sec",
+        "utc": utc.isoformat(timespec="seconds"),
+        "sf": sf,
+        "cpus": cpus,
         "queries": timings,
         "per_query": per_query,
-        "sf": sf,
-        "prev_round": PREV_ROUND,
-        "prev_round_stat": (
-            "median-of-5 (r12 driver run, bench_history/r12_sf0.1_full.json,"
-            " canary 2.14x — a loaded session; normalize via canary)"
-        ),
-        # headliners with no prior entry seed next round's gates
-        "headliners_new": sorted(n for n in timings if n not in PREV_ROUND),
-        "ratio_vs_prev": ratios,
-        "prev_stddev": PREV_STDDEV,
-        "canary": CANARY,
-        "canary_ratio_vs_best": round(canary_ratio, 2),
-        "regressions_over_1.3x": sorted(n for n, r in ratios.items() if r > 1.3),
-        "regression_verdicts": {
-            n: adjudicate(n, PREV_ROUND[n])
-            for n, r in ratios.items()
-            if r > 1.3
+        "host": {
+            **host_facts(ROOT),
+            "loadavg_start": load_start,
+            "loadavg_end": os.getloadavg(),
+            "steal_s": round(steal_seconds() - steal_start, 2),
         },
-        # anti-creep ratchet (r6+): vs the best-ever median, so a
-        # slow monotonic drift that never trips the per-round bar
-        # still surfaces (j1_region_revenue's +27% over r2-r5
-        # motivated this).
-        "best_round": {n: v for n, (v, _) in BEST_ROUND.items()},
-        "best_round_source": {n: r for n, (_, r) in BEST_ROUND.items()},
-        "ratio_vs_best": best_ratios,
-        "regressions_over_1.3x_vs_best": sorted(
-            n for n, r in best_ratios.items() if r > 1.3
-        ),
-        "regression_verdicts_vs_best": {
-            n: adjudicate(n, BEST_ROUND[n][0])
-            for n, r in best_ratios.items()
-            if r > 1.3
-        },
+        **compare(timings, hist_dir, sf, cpus),
     }
-    # DURABILITY (VERDICT r6 ask #2): the driver keeps only the last
-    # 2000 chars of stdout, which truncated r6's per_query medians out of
-    # BENCH_r06.json. Two fixes: (a) the full artifact is written to the
-    # repo-tracked bench_history/ directory (the driver commits stray
-    # files at round end, so the history survives even when bench runs
-    # after this session's last commit); (b) stdout carries exactly ONE
-    # compact JSON line — medians, totals, and regression flags only —
-    # sized to always fit the 2000-char tail.
-    hist_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_history")
-    os.makedirs(hist_dir, exist_ok=True)
-    rounds = [
-        int(g.group(1))
-        for f in os.listdir(os.path.dirname(os.path.abspath(__file__)))
-        if (g := re.match(r"BENCH_r(\d+)\.json$", f))
-    ]
-    # round inference: the driver records BENCH_r{N}.json at the END of
-    # round N, so during round N the newest artifact is r{N-1} and max+1
-    # is correct. If bench is ever re-run AFTER the current round's
-    # artifact lands (inference would then mislabel the history file as
-    # next round's), set SPARK_GRAFT_ROUND explicitly.
-    this_round = int(os.environ.get("SPARK_GRAFT_ROUND", max(rounds, default=0) + 1))
-    # r13 contract fix (VERDICT r12 item 2): the driver runs the bench
-    # more than once per round (c32 main + c8 scaling), so the filename
-    # now carries the core count AND never overwrites — the r12 c8 run
-    # previously inferred round 13 and squatted next round's slot while
-    # the main run clobbered the curated quiet-window record.
-    base = f"r{this_round:02d}_sf{sf}_c{cpu_count()}_full"
-    full_path = os.path.join(hist_dir, f"{base}.json")
-    seq = 1
-    while os.path.exists(full_path):
-        seq += 1
-        full_path = os.path.join(hist_dir, f"{base}_{seq}.json")
-    # SPARK_GRAFT_RECORD=0: ad-hoc health-check runs (possibly under
-    # background contention) must not clobber the round's curated
-    # quiet-window record; the driver's real run records by default
+    # the driver keeps only the last 2000 chars of stdout: the full
+    # artifact goes to bench_history/, stdout carries one compact line
+    full_path = os.path.join(hist_dir, artifact_name(utc, full["host"]["git_sha"], sf, cpus))
     recorded = os.environ.get("SPARK_GRAFT_RECORD", "1") != "0"
     if recorded:
-        with open(full_path, "w") as f:
+        os.makedirs(hist_dir, exist_ok=True)
+        with open(full_path, "x") as f:
             json.dump(full, f, indent=1, sort_keys=True)
     compact = {
         "metric": full["metric"],
         "value": total,
         "unit": "sec",
         "sf": sf,
+        "cpus": cpus,
         # 2-dp in the compact line: 22 entries stay well under the char
         # budget (the full artifact keeps 3-dp + stddev/min)
         "queries": {n: round(t, 2) for n, t in timings.items()},
-        "regressions_over_1.3x": full["regressions_over_1.3x"],
-        "regressions_over_1.3x_vs_best": full["regressions_over_1.3x_vs_best"],
-        # per-entry noise-vs-drift verdicts (compact: verdict string
-        # only; the full artifact carries ratio/delta/sigmas/canary)
-        "regression_verdicts": {
-            n: v["verdict"]
-            for n, v in {
-                **full["regression_verdicts"],
-                **full["regression_verdicts_vs_best"],
-            }.items()
-        },
-        "canary_ratio_vs_best": full["canary_ratio_vs_best"],
-        # unrecorded runs must not point at a file they didn't write
-        # (the compact line's overflow fallback would otherwise discard
-        # this run's timings in favor of a missing/stale artifact)
+        "prev": full["prev"],
+        **{k: full[k] for k in FLAG_LISTS},
+        # unrecorded runs must not point at a file they did not write
         "full_artifact": (
-            os.path.join("bench_history", os.path.basename(full_path))
-            if recorded
-            else None
+            os.path.relpath(full_path, ROOT) if recorded else None
         ),
     }
     print(compact_line(compact))

@@ -6,7 +6,7 @@ same page share dictionary and backreference context. Clustering the
 corpus by a 32-bit SimHash before the write is measured at **-11.5%
 parquet bytes vs a shuffled corpus** at 30% planted near-dups (prefix
 sort manages only -4.6% — it can't see duplication past the first
-divergent byte; tools/layout_compression.py, SCALE.md "r9: layout").
+divergent byte; SCALE.md "r9: similarity-ordered text layout").
 
 The rewrite slot is OPTIMIZE's ``repartition_fn`` — the same hook
 Z-order uses for numeric box queries — so the layout is applied during

@@ -14,8 +14,8 @@ needed): write-path = ``df.repartitionByRange(zkey).sortWithinPartitions
 The interleave is generated as a fixed sum of shift/mask terms — exact
 integer ops both engines reproduce (the ``zorder_key`` query is
 hash-gated), and whole-stage codegen compiles it to straight-line long
-arithmetic. tools/zorder_study.py measures the actual row-group pruning
-win on parquet metadata; SCALE.md records it.
+arithmetic. The measured row-group pruning win on parquet metadata is in
+SCALE.md "r6: Z-order clustering".
 
 Reference impetus: the obs log is queried by (MAC, time window)
 (README.md:16-18) — exactly a 2-D box over a table date-partitioned on one

@@ -100,8 +100,8 @@ def deletion_neighborhood_join(
     (substitution: both delete the edited position; insert/delete: the
     shorter string IS a deletion of the longer), so blocking stops being
     a recall trade (fuzzy_self_join misses pairs whose typo falls in the
-    blocking token — measured 0.49-0.96 recall, tools/fuzzy_recall.py)
-    and becomes an index. Sharing a key does NOT bound the distance
+    blocking token — measured 0.49-0.96 recall, SCALE.md "r8:
+    approximate-join recall") and becomes an index. Sharing a key does NOT bound the distance
     ("ab"/"ba" both delete to "a"), so the levenshtein verify stays.
 
     Cost shape: the explode emits O(len) keys per string at k=1 and

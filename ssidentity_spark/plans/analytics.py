@@ -2140,8 +2140,8 @@ def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cosine tier then verifies ONLY those pairs: profile dots never
 # materialize outside the candidate set.
 #
-# Why top-K over threshold banding: measured at sf0.01 (SCALE.md r12
-# sweep, tools/linkage_sweep.py), OR-amplified threshold banding on these
+# Why top-K over threshold banding: measured at sf0.01 (SCALE.md "r12:
+# linkage index tier"), OR-amplified threshold banding on these
 # profiles CANNOT reach a useful corner — per-bit match/random agreement
 # is 0.575 vs ~0.60 raw (dense 24×type cells ⇒ correlated bits; centered
 # 0.575 vs 0.50) and the best measured banding point is 0.91 recall at

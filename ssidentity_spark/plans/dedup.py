@@ -36,8 +36,8 @@ HEX_LEN = 12  # 48-bit hash prefix (fits comfortably in BIGINT if needed)
 
 def band_key_expr(b: int):
     """md5 over band ``b``'s BAND_ROWS minhash columns — the LSH bucket
-    key. Shared with tools/dedup_blowup.py so blow-up measurements always
-    probe the exact banding the production pair-gen uses (ADVICE r5)."""
+    key, shared by the MinHash pair generation and ``band_index`` so
+    both band identically."""
     return F.md5(
         F.concat(
             F.lit(f"{b}|"),
@@ -910,11 +910,10 @@ def _semantic_oracle(cent_cte: str) -> str:
 def _assign_cells(base: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (vec_id, v, nrm, cell), PERSISTED —
     the frame has multiple downstream consumers (pair a-side, b-side,
-    final verdict; the blow-up probe's counters). Spark's cache manager
-    dedupes by canonical plan, so repeated invocations of the same query
-    reuse ONE entry (verified: 3 runs -> 1 persisted RDD) rather than
-    stacking copies — the entry lives until session end, like the
-    fixture caches."""
+    final verdict). Spark's cache manager dedupes by canonical plan, so
+    repeated invocations of the same query reuse ONE entry (verified: 3
+    runs -> 1 persisted RDD) rather than stacking copies — the entry
+    lives until session end, like the fixture caches."""
     from ssidentity_spark.plans.similarity import _dot
 
     scored = base.crossJoin(F.broadcast(cent)).select(
@@ -938,8 +937,7 @@ def _assign_cells(base: DataFrame, cent: DataFrame) -> DataFrame:
 def _cell_pair_cos(cells: DataFrame) -> DataFrame:
     """Intra-cell candidate pairs with exact cosine: (a_id, b_id, cos),
     a_id < b_id — the EQUI join on the cell id that bounds pairwise work
-    to O(sum cell_size^2). Shared by the verdict and the scale probe so
-    SCALE.md numbers are measured on the shipped semantics."""
+    to O(sum cell_size^2)."""
     from ssidentity_spark.plans.similarity import _dot
 
     a = cells.select(
@@ -1252,7 +1250,7 @@ def span_profile(
     Three plan shapes, measured against each other on a PLANTED
     90%-one-gram corpus (the boilerplate worst case VERDICT r8 ask #4
     named) and a verbatim-replicated corpus, 39M windows each
-    (tools/span_skew.py; full table in SCALE.md "span-dedup skew"):
+    (full table in SCALE.md "r9: span-dedup skew"):
 
     - ``repartition`` (SHIPPED): one explicit gram exchange of RAW
       window rows reused by the (gram, doc_id) aggregate and the
@@ -2058,7 +2056,7 @@ _LSH_EVAL_THRESHOLDS = (0.3, 0.5, 0.7)
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall and candidate-precision of the MinHash-LSH banding at
     three Jaccard thresholds, against exhaustive exact Jaccard ground
-    truth. tools/dedup_blowup.py measures the S-curve offline; this puts
+    truth. SCALE.md records the S-curve measured offline; this puts
     the number the banding is TUNED FOR in a driver artifact, so a band/
     row-count change that silently drops recall turns a row red.
 

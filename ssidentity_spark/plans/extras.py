@@ -254,8 +254,8 @@ def j11_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the EXHAUSTIVE all-pairs truth with no blocking clause at all —
     # the hash match itself proves the exact-recall claim: every
     # distance-1 pair in the corpus, found without the O(n²) scan.
-    # (tools/fuzzy_recall.py measures the same property at scale:
-    # recall 1.000 at 0.02-0.04% of the pair ceiling.)
+    # (SCALE.md "r8: approximate-join recall" measures the same property
+    # at scale: recall 1.000 at 0.02-0.04% of the pair ceiling.)
     oracle="""
     SELECT a.p_name AS name_a, b.p_name AS name_b,
            CAST(count(*) AS BIGINT) AS n_pairs

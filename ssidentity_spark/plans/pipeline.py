@@ -1637,9 +1637,9 @@ def _fusion_scored(
     pivot back to columns, and the RRF score — checkpointed (narrow:
     doc_id, three ranks, score — one row per doc) so the final rank
     assigner's two reads hit a materialized leaf instead of re-running
-    this whole stage. ``truncate=False`` skips the checkpoint so
-    tools/explain_audit.py records the full upstream plan (the
-    ROUND_PLANS convention for checkpoint-blinded explains)."""
+    this whole stage. ``truncate=False`` skips the checkpoint so the
+    upstream plan stays visible to ``explain`` (tests/test_r11_plans.py
+    pins its shape)."""
     from ssidentity_spark.operators.rowids import assign_global_ids
 
     d = load_table(spark, sf_dir, "documents")

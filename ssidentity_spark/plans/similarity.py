@@ -1048,8 +1048,9 @@ def filtered_ivf_candidates(em: DataFrame, n_probes: int) -> DataFrame:
     the query's label — the predicate intersects the index instead of
     replacing it (``sim_filtered_topk`` is the exact per-label scan;
     this is the sub-linear path for when a label's slice is itself too
-    big to scan). Split from the rank stage so tools/filtered_recall.py
-    can count EXACTLY what gets scored per probe setting."""
+    big to scan). Split from the rank stage, which ranks only what this
+    scores; SCALE.md "r9: filtered ANN" gives that count per probe
+    setting."""
     v = F.transform("embedding", lambda x: x.cast("double"))
     base = spread(em).select(
         "vec_id",
@@ -1192,7 +1193,7 @@ def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors the per-query candidate set is cell-sized-thinned-by-label,
     not label-sized (the exact tier's cost) and never corpus-sized.
     Recall vs the exact filtered scan is measured per-probe-count in
-    SCALE.md (tools/filtered_recall.py); rare labels stay on the exact
+    SCALE.md "r9: filtered ANN"; rare labels stay on the exact
     tier, which is precisely the two-tier production layout."""
     return filtered_ivf_topk(
         load_table(spark, sf_dir, "embeddings"), FILTERED_IVF_PROBES
@@ -1354,8 +1355,8 @@ def sim_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — this query composes them and puts the recall number itself under
     # the hash, so an index regression (probe count, assignment tie-break,
     # centroid drift) turns a driver row red instead of only moving an
-    # offline notebook curve (tools/ann_recall.py stays the parameter-sweep
-    # companion).
+    # offline curve (SCALE.md "Measured recall-vs-cost" holds the
+    # parameter sweep).
     oracle=f"""
     WITH {_DUCK_VEC}, {_PINNED_IVF_CTES}, ivf_top AS (
       SELECT query_id, neighbor_id FROM (
@@ -1680,11 +1681,9 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_select(cand, pc, _MMR_K, _MMR_LAM)
 
 
-def _mmr_pool(
-    spark: SparkSession, sf_dir: str, truncate: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """The exact-tier candidate pool and its pairwise-sim frame.
-    ``truncate=False`` keeps both lazy (the plan-audit hook)."""
+def _mmr_pool(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The exact-tier candidate pool and its pairwise-sim frame, both
+    materialized: each is pool-bounded and read twice per greedy round."""
     em = load_table(spark, sf_dir, "embeddings")
     corpus = _norm_vec(em)
     queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
@@ -1706,13 +1705,11 @@ def _mmr_pool(
     # frame 2x per round — truncating the lineage keeps round plans
     # constant-size (the pagerank/LPA convention) and the frame is
     # pool-bounded (queries x pool rows), so materialization is free
-    cand = (
+    cand = materialize(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= _MMR_POOL)
         .select("query_id", "vec_id", "rel")
     )
-    if truncate:
-        cand = materialize(cand)
     cv = corpus.select("vec_id", "v", "nrm")
     a = cand.select("query_id", F.col("vec_id").alias("va")).join(
         cv.select(
@@ -1744,8 +1741,7 @@ def _mmr_pool(
             ).alias("pcos"),
         )
     )
-    if truncate:
-        pc = materialize(pc)  # pool^2-bounded, like cand
+    pc = materialize(pc)  # pool^2-bounded, like cand
     return cand, pc
 
 
@@ -1754,13 +1750,11 @@ def mmr_select(
     pc: DataFrame,
     k: int,
     lam: float,
-    truncate: bool = True,
 ) -> DataFrame:
     """The greedy MMR policy over a (query_id, vec_id, rel) pool and its
     (query_id, va, vb, pcos) pairwise-sim frame — candidate-generation
     agnostic (the exact tier feeds it at gate scale, the IVF index at
-    100 TB). ``truncate=False`` keeps the round lazy — the plan-audit
-    hook (tools/explain_audit.py)."""
+    100 TB). The selected set is materialized after every round."""
     one_m = round(1.0 - lam, 6)
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("vec_id")
@@ -1808,9 +1802,7 @@ def mmr_select(
         # aggregate and the anti-join) and chains round-over-round — left
         # lazy, each pick's plan would re-embed every earlier round's
         # plan and analysis cost would grow quadratically in k
-        sel = sel.unionByName(pick)
-        if truncate:
-            sel = materialize(sel)
+        sel = materialize(sel.unionByName(pick))
     return sel.select(
         "query_id", F.col("rnk").cast("int").alias("rnk"), "vec_id", "rel", "score"
     )

@@ -299,7 +299,7 @@ def zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton key over (user_id, day) — the write-path clustering key that
     makes min/max row-group pruning work for BOTH dimensions of the
     reference's (MAC, time-window) box queries (README.md:16-18). The
-    measured pruning win lives in tools/zorder_study.py + SCALE.md."""
+    measured pruning win is in SCALE.md "r6: Z-order clustering"."""
     from ssidentity_spark.functions.zorder import morton_key
     from ssidentity_spark.io import load_table
 
@@ -1521,9 +1521,8 @@ def src_constraint_reject(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scrambled baseline (ADVICE r10: the STRICT size win is a property
     # of the parquet encoder, not this repo — a codec-default upgrade
     # could flip `<` with no repo bug, so the hash pins only `<=`; the
-    # measured -11.5% strict win lives in SCALE.md and
-    # tools/layout_compression.py where it belongs); `history_kept` —
-    # the pre-optimize version still time-travels.
+    # measured -11.5% strict win lives in SCALE.md where it belongs);
+    # `history_kept` — the pre-optimize version still time-travels.
     oracle="""
     SELECT doc_id, md5(text) AS text_md5,
            TRUE AS bytes_not_larger, TRUE AS history_kept

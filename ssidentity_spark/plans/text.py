@@ -1170,8 +1170,8 @@ def text_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def nb_classify(d: DataFrame) -> DataFrame:
     """The NB train+score pipeline over a (doc_id, lang, text) frame —
-    split out so the scale probes (tools/wave3_blowup.py) run it on
-    blown-up corpora without going through a table path."""
+    split from the table read so a test can run it on an in-memory
+    corpus."""
     scored = _nb_scored(d)
     w = Window.partitionBy("doc_id").orderBy(
         F.round("s", 6).desc(), F.col("lang").asc()
@@ -1370,8 +1370,8 @@ def text_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def logreg_train_score(d: DataFrame) -> DataFrame:
     """The 6-round train + score pipeline over a (doc_id, text) frame —
-    split out so the scale probes (tools/wave3_blowup.py) run it on
-    blown-up corpora without a table path."""
+    split from the table read like ``nb_classify``; its blow-up is in
+    SCALE.md "r9 wave 3" (logreg_train row)."""
     w_tok = F.filter(_words(), lambda x: x != "")
 
     def _count_of(v):
@@ -1675,7 +1675,7 @@ def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact (append-only tf/df refresh), DF_CAP bounds every posting
     list, and the pair aggregate is the only new exchange per refresh.
     DF_CAP is corpus-relative in production (a fixed absolute cap
-    tightens as the corpus grows — tools/wave6_blowup.py measures both
+    tightens as the corpus grows — SCALE.md "r9 wave 6" measures both
     regimes); the gate pins the fixed-cap form."""
     d = load_table(spark, sf_dir, "documents")
     return sparse_cosine_pairs(d, _SC_DF_CAP, _SC_THRESHOLD)
@@ -1684,8 +1684,8 @@ def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sparse_cosine_pairs(
     d: DataFrame, df_cap: int, threshold: float
 ) -> DataFrame:
-    """Parametrized body of text_sparse_cosine_pairs (blow-up probes scale
-    df_cap with corpus replication to keep semantics scale-invariant)."""
+    """Parametrized body of text_sparse_cosine_pairs: ``df_cap`` scales
+    with the corpus in production to keep semantics scale-invariant."""
     t = (
         spread(d.select("doc_id", "text"))
         .select("doc_id", F.split(F.lower(F.col("text")), r"\s+").alias("w"))

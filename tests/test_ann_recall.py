@@ -1,6 +1,6 @@
 """ANN quality pins (SCALE.md quality curve): recall@k of the approximate
 paths against brute-force ground truth — run at sf0.01 for speed; the full
-sf0.1 sweep lives in tools/ann_recall.py and its table in SCALE.md."""
+sf0.1 sweep's table is in SCALE.md "Measured recall-vs-cost"."""
 
 from __future__ import annotations
 

@@ -1,11 +1,10 @@
 """bench.py driver-contract pins (no Spark session needed).
 
-r12 post-mortem: the compact stdout line's overflow fallback shed the
-per-query ``queries`` dict — the one field the driver's PERF and scaling
-comparison parses — and silently cost the round its entire round-over-round
-analysis. These tests pin the r13 fix: ``queries`` survives any budget,
-adjudication bloat is shed first, and the history filename scheme cannot
-collide across the driver's multi-run sequence.
+The compact stdout line must keep ``queries`` — the one field the driver's
+per-query comparison parses — under any budget, shedding only the flag
+lists. The baseline is derived from ``bench_history/``: only artifacts with
+the run's ``sf`` and ``cpus`` count, the newest is ``prev`` and ``best`` is
+the per-query minimum over all of them.
 """
 
 from __future__ import annotations
@@ -13,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,12 +27,12 @@ def _compact(n_queries: int = 22, n_flags: int = 19) -> dict:
         "value": 40.99,
         "unit": "sec",
         "sf": 0.1,
+        "cpus": 4,
         "queries": {n: round(0.1 * i, 2) for i, n in enumerate(names)},
+        "prev": "20261019T063000Z_ed7b22f_sf0.1_c4.json",
         "regressions_over_1.3x": flagged,
         "regressions_over_1.3x_vs_best": flagged,
-        "regression_verdicts": {n: "noise" for n in flagged},
-        "canary_ratio_vs_best": 2.14,
-        "full_artifact": "bench_history/r13_sf0.1_c32_full.json",
+        "full_artifact": "bench_history/20261019T064500Z_ed7b22f_sf0.1_c4.json",
     }
 
 
@@ -47,7 +47,7 @@ def test_compact_line_fits_without_shedding_at_current_size():
 
 
 def test_compact_line_never_sheds_queries():
-    # r12's failure shape: 19 flags in both lists + 19 verdicts
+    # r12's failure shape: 19 flags in both lists
     c = _compact()
     line = bench.compact_line(c)
     parsed = json.loads(line)
@@ -57,32 +57,63 @@ def test_compact_line_never_sheds_queries():
     assert all(isinstance(v, float) or isinstance(v, int)
                for v in parsed["queries"].values())
     # shed fields are replaced by counts, not silently dropped
-    for shed in ("regression_verdicts",):
+    for shed in bench.FLAG_LISTS:
         if shed not in parsed:
             assert parsed[f"n_{shed}"] == 19
 
 
-def test_compact_line_sheds_verdicts_before_flag_lists():
+def test_compact_line_sheds_only_the_flag_lists():
     c = _compact()
     bench.compact_line(c, budget=1)  # force maximal shedding
-    assert "queries" in c  # never touched
-    assert "regression_verdicts" not in c
+    assert "queries" in c and "prev" in c  # never touched
     assert "regressions_over_1.3x" not in c
-    assert c["n_regression_verdicts"] == 19
+    assert "regressions_over_1.3x_vs_best" not in c
     assert c["n_regressions_over_1.3x"] == 19
+    assert c["n_regressions_over_1.3x_vs_best"] == 19
 
 
-def test_history_filename_carries_cpus_and_never_overwrites(tmp_path, monkeypatch):
-    # mirror of the naming block in main(): same round + sf + cpus twice
-    # must yield two distinct paths (the r12 c8 run overwrote/squatted)
-    base = "r13_sf0.1_c32_full"
-    first = tmp_path / f"{base}.json"
-    first.write_text("{}")
-    # replicate the collision loop
-    full_path = str(first)
-    seq = 1
-    while os.path.exists(full_path):
-        seq += 1
-        full_path = str(tmp_path / f"{base}_{seq}.json")
-    assert full_path.endswith("_2.json")
-    assert "c32" in os.path.basename(full_path)
+def _record(hist, name, queries, sf=0.1, cpus=4, utc="2026-10-19T06:00:00+00:00"):
+    art = {"sf": sf, "queries": queries, "utc": utc}
+    if cpus is not None:
+        art["cpus"] = cpus
+    (hist / name).write_text(json.dumps(art))
+
+
+def test_baseline_is_the_newest_matching_artifact_and_best_the_minimum(tmp_path):
+    _record(tmp_path, "old.json", {"a": 1.0, "b": 4.0}, utc="2026-10-19T06:00:00+00:00")
+    _record(tmp_path, "new.json", {"a": 2.0, "b": 3.0}, utc="2026-10-19T07:00:00+00:00")
+    # same sf, other core count: a different machine's numbers
+    _record(tmp_path, "c8.json", {"a": 0.1, "b": 0.1}, cpus=8, utc="2026-10-19T08:00:00+00:00")
+    # legacy artifact with no cpus field
+    _record(tmp_path, "legacy.json", {"a": 0.1, "b": 0.1}, cpus=None, utc="")
+    # same cpus, other scale factor
+    _record(tmp_path, "sf1.json", {"a": 0.1, "b": 0.1}, sf=1.0, utc="2026-10-19T09:00:00+00:00")
+
+    out = bench.compare({"a": 2.4, "b": 4.2}, str(tmp_path), 0.1, 4)
+    assert out["prev"] == "new.json"
+    assert out["n_baseline_runs"] == 2
+    assert out["best"] == {"a": 1.0, "b": 3.0}
+    assert out["ratio_vs_prev"] == {"a": 1.2, "b": 1.4}
+    assert out["ratio_vs_best"] == {"a": 2.4, "b": 1.4}
+    assert out["regressions_over_1.3x"] == ["b"]
+    assert out["regressions_over_1.3x_vs_best"] == ["a", "b"]
+
+
+def test_no_matching_artifact_means_no_baseline_and_no_flags(tmp_path):
+    _record(tmp_path, "c8.json", {"a": 0.1}, cpus=8)
+    _record(tmp_path, "legacy.json", {"a": 0.1}, cpus=None)
+    out = bench.compare({"a": 9.9}, str(tmp_path), 0.1, 4)
+    assert out["prev"] is None
+    assert out["best"] == {}
+    assert out["ratio_vs_prev"] == out["ratio_vs_best"] == {}
+    assert out["regressions_over_1.3x"] == []
+    assert out["regressions_over_1.3x_vs_best"] == []
+
+
+def test_artifact_name_carries_time_sha_sf_and_cpus():
+    utc = datetime(2026, 10, 19, 6, 30, 5, tzinfo=timezone.utc)
+    sha = "ed7b22fee960111e01a48538d5ddcdcea98d1ca6"
+    assert bench.artifact_name(utc, sha, 0.1, 4) == "20261019T063005Z_ed7b22f_sf0.1_c4.json"
+    assert bench.artifact_name(utc, "unknown (not a git checkout)", 0.1, 4).endswith(
+        "_nogit_sf0.1_c4.json"
+    )

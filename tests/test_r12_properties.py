@@ -121,7 +121,7 @@ def test_banded_recall_at_gate_scale_meets_the_corner(spark):
     at sf0.001 the index tier must agree with the exact tier for ≥ 90%
     of users (measured: 100% — K ≥ U−1 there), i.e. the shipped
     geometry's recall corner holds on driver data, not just in the
-    tools/linkage_sweep.py prototype."""
+    sweep SCALE.md "r12: linkage index tier" records."""
     sf = "/root/testdata/sf0.001"
     banded = {
         r["user_id"]: r["match_id"]
