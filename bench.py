@@ -18,7 +18,8 @@ baseline). ``prev`` is the newest recorded artifact with this run's ``sf``
 and ``cpus``; ``best`` is the per-query minimum median over all of them.
 Artifacts without a ``cpus`` field never match, so a machine with no
 recorded run of its own reports no baseline and no flags. A query is
-flagged when its median exceeds 1.3x its ``prev`` or ``best`` median.
+flagged when its median exceeds 1.3x its ``prev`` or ``best`` median by
+more than the two artifacts' summed per-query stddev.
 """
 
 from __future__ import annotations
@@ -44,34 +45,59 @@ FLAG_RATIO = 1.3
 FLAG_LISTS = ("regressions_over_1.3x", "regressions_over_1.3x_vs_best")
 
 
-def compare(timings: dict[str, float], hist_dir: str, sf: float, cpus: int) -> dict:
-    """Ratios and regression flags of ``timings`` against the recorded
-    artifacts in ``hist_dir`` whose ``sf`` and ``cpus`` equal this run's."""
+def compare(per_query: dict[str, dict], hist_dir: str, sf: float, cpus: int) -> dict:
+    """Ratios and regression flags of this run's ``per_query`` records
+    (``median``, ``stddev``) against the recorded artifacts in
+    ``hist_dir`` whose ``sf`` and ``cpus`` equal this run's.
+
+    A query is flagged when its median ratio exceeds ``FLAG_RATIO`` and,
+    where both artifacts record the query's stddev, the median delta also
+    exceeds the sum of the two stddevs: a slowdown inside the runs' own
+    spread is noise, not a regression."""
     runs = []
     for path in glob.glob(os.path.join(hist_dir, "*.json")):
         with open(path) as f:
             art = json.load(f)
         if art.get("sf") == sf and art.get("cpus") == cpus:
-            runs.append((art.get("utc", ""), os.path.basename(path), art["queries"]))
+            spread = art.get("per_query", {})
+            base = {
+                n: (t, spread.get(n, {}).get("stddev"))
+                for n, t in art["queries"].items()
+            }
+            runs.append((art.get("utc", ""), os.path.basename(path), base))
     runs.sort()
     _, prev_name, prev = runs[-1] if runs else (None, None, {})
-    best: dict[str, float] = {}
-    for *_, queries in runs:
-        for name, t in queries.items():
-            best[name] = min(t, best.get(name, t))
+    best: dict[str, tuple[float, float | None]] = {}
+    for *_, base in runs:
+        for name, rec in base.items():
+            best[name] = min(rec, best.get(name, rec), key=lambda r: r[0])
 
-    def ratios(base: dict[str, float]) -> dict[str, float]:
-        return {n: round(t / base[n], 2) for n, t in timings.items() if base.get(n)}
+    def ratios(base: dict[str, tuple]) -> dict[str, float]:
+        return {
+            n: round(q["median"] / base[n][0], 2)
+            for n, q in per_query.items()
+            if n in base and base[n][0]
+        }
+
+    def flags(base: dict[str, tuple], ratio: dict[str, float]) -> list[str]:
+        out = []
+        for n, r in ratio.items():
+            (t0, sd0), q = base[n], per_query[n]
+            sd = q.get("stddev")
+            noise = sd is not None and sd0 is not None and q["median"] - t0 <= sd + sd0
+            if r > FLAG_RATIO and not noise:
+                out.append(n)
+        return sorted(out)
 
     vs_prev, vs_best = ratios(prev), ratios(best)
     return {
         "prev": prev_name,
         "n_baseline_runs": len(runs),
-        "best": best,
+        "best": {n: t for n, (t, _) in best.items()},
         "ratio_vs_prev": vs_prev,
         "ratio_vs_best": vs_best,
-        FLAG_LISTS[0]: sorted(n for n, r in vs_prev.items() if r > FLAG_RATIO),
-        FLAG_LISTS[1]: sorted(n for n, r in vs_best.items() if r > FLAG_RATIO),
+        FLAG_LISTS[0]: flags(prev, vs_prev),
+        FLAG_LISTS[1]: flags(best, vs_best),
     }
 
 
@@ -149,7 +175,7 @@ def main() -> None:
             "loadavg_end": os.getloadavg(),
             "steal_s": round(steal_seconds() - steal_start, 2),
         },
-        **compare(timings, hist_dir, sf, cpus),
+        **compare(per_query, hist_dir, sf, cpus),
     }
     # the driver keeps only the last 2000 chars of stdout: the full
     # artifact goes to bench_history/, stdout carries one compact line

@@ -24,6 +24,7 @@ from ssidentity_spark.functions.timeutil import epoch_us
 from ssidentity_spark.io import load_table
 from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.registry import register
+from ssidentity_spark.streaming.funnel import FUNNEL_W_US
 
 # ---------------------------------------------------------------------------
 # Flagship (SURVEY §7 phase 0): scan → filter → project → groupBy →
@@ -1204,9 +1205,6 @@ def a13_analyze_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # windowFunnel.
 # ---------------------------------------------------------------------------
 
-_FUNNEL_W_US = 3_600_000_000  # 60 min
-
-
 @register(
     "w6_funnel_progression",
     # The oracle is the CLOSED FORM of the greedy-first-chain fold, not a
@@ -1241,12 +1239,12 @@ _FUNNEL_W_US = 3_600_000_000  # 60 min
                                   ORDER BY f.t, f.eid) AS rn
         FROM fe f JOIN sig g USING (user_id)
         WHERE f.s = 2 AND (f.t, f.eid) > (g.t1, g.e1)
-          AND f.t <= g.t1 + {_FUNNEL_W_US}) WHERE rn = 1
+          AND f.t <= g.t1 + {FUNNEL_W_US}) WHERE rn = 1
     ), pu AS (
       SELECT DISTINCT f.user_id
       FROM fe f JOIN sig g USING (user_id) JOIN vw USING (user_id)
       WHERE f.s = 3 AND (f.t, f.eid) > (vw.t2, vw.e2)
-        AND f.t <= g.t1 + {_FUNNEL_W_US}
+        AND f.t <= g.t1 + {FUNNEL_W_US}
     ), users AS (SELECT DISTINCT user_id FROM fe)
     SELECT u.user_id,
            CAST(CASE WHEN pu.user_id IS NOT NULL THEN 3
@@ -1302,7 +1300,7 @@ def w6_funnel_progression(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when((acc["s"] == 0) & (e["s"] == 1), start)
             .when(
                 (e["s"] == acc["s"] + 1)
-                & (e["t"] <= acc["t"] + F.lit(_FUNNEL_W_US)),
+                & (e["t"] <= acc["t"] + F.lit(FUNNEL_W_US)),
                 advance,
             )
             .otherwise(acc)

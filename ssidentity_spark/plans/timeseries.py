@@ -22,6 +22,12 @@ from pyspark.sql import functions as F
 from ssidentity_spark.io import load_table
 from ssidentity_spark.operators.timeseries import resample_interpolate
 from ssidentity_spark.registry import register
+from ssidentity_spark.streaming.ema import (
+    EMA_ALPHA,
+    EMA_GAIN,
+    HOLT_ALPHA,
+    HOLT_BETA,
+)
 
 _BUCKET = 4 * 3600  # 4-hour grid: ~37% bucket occupancy at sf0.01 — the
 # interpolation path (not just the pass-through) carries most rows
@@ -108,10 +114,11 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The fold runs in the SAME order with the SAME IEEE double ops in
     # both engines (sorted struct list → left fold, seed = first value),
     # so the result is bit-identical before the cosmetic round.
-    oracle="""
+    oracle=f"""
     SELECT user_id,
            round(list_reduce(list_transform(l, s -> s.v),
-                             (acc, x) -> acc * 0.9 + x * 0.1), 6) AS ema,
+                             (acc, x) -> acc * {EMA_ALPHA} + x * {EMA_GAIN}),
+                 6) AS ema,
            CAST(len(l) AS BIGINT) AS n_events
     FROM (
       SELECT user_id,
@@ -138,7 +145,7 @@ def ts_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = F.sort_array(F.collect_list(F.struct("ts", "event_id", "value")))
     vals = F.transform(arr, lambda s: s["value"])
     ema = _seed_first_fold(
-        vals, lambda acc, x: acc * F.lit(0.9) + x * F.lit(0.1)
+        vals, lambda acc, x: acc * F.lit(EMA_ALPHA) + x * F.lit(EMA_GAIN)
     )
     return ev.groupBy("user_id").agg(
         F.round(ema, 6).alias("ema"),
@@ -1271,8 +1278,8 @@ def ts_acf_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # folds learn the slope). Like EMA this is order-RECURSIVE — no map-side
 # combine — so the honest batch shape is the per-key ordered fold with
 # the same two documented 100 TB hatches as ts_ema: the O(1)-state
-# streaming form (streaming/ema.py generalizes directly: the pending
-# buffer is state-shape agnostic) and the truncated recent window
+# streaming form (streaming/ema.py:holt_stream, on the same sealed fold
+# as the EMA) and the truncated recent window
 # (ts_acf_windowed's row_number cut composes verbatim).
 #
 # Determinism: the ts_ema contract with a 2-component state — both
@@ -1282,9 +1289,6 @@ def ts_acf_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a temporary), so level/trend are bit-identical before the cosmetic
 # 6 dp round; nothing downstream selects on them.
 # ---------------------------------------------------------------------------
-
-_HOLT_ALPHA = 0.5
-_HOLT_BETA = 0.2
 
 
 @register(
@@ -1309,11 +1313,11 @@ _HOLT_BETA = 0.2
       SELECT list_reduce(
                list_transform(l, s -> [s.v, CAST(0.0 AS DOUBLE)]),
                (acc, x) -> [
-                 {_HOLT_ALPHA} * x[1]
-                   + {1 - _HOLT_ALPHA} * (acc[1] + acc[2]),
-                 {_HOLT_BETA} * ({_HOLT_ALPHA} * x[1]
-                     + {1 - _HOLT_ALPHA} * (acc[1] + acc[2]) - acc[1])
-                   + {1 - _HOLT_BETA} * acc[2]]) AS h
+                 {HOLT_ALPHA} * x[1]
+                   + {1 - HOLT_ALPHA} * (acc[1] + acc[2]),
+                 {HOLT_BETA} * ({HOLT_ALPHA} * x[1]
+                     + {1 - HOLT_ALPHA} * (acc[1] + acc[2]) - acc[1])
+                   + {1 - HOLT_BETA} * acc[2]]) AS h
     )
     """,
     survey="TS10,TS2,W2,A6",
@@ -1342,8 +1346,8 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         arr,
         lambda s: F.struct(s["value"].alias("l"), F.lit(0.0).alias("b")),
     )
-    a, ac = F.lit(_HOLT_ALPHA), F.lit(1 - _HOLT_ALPHA)
-    be, bc = F.lit(_HOLT_BETA), F.lit(1 - _HOLT_BETA)
+    a, ac = F.lit(HOLT_ALPHA), F.lit(1 - HOLT_ALPHA)
+    be, bc = F.lit(HOLT_BETA), F.lit(1 - HOLT_BETA)
     h = _seed_first_fold(
         states,
         lambda acc, x: F.struct(

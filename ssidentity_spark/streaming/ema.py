@@ -1,52 +1,29 @@
-"""Streaming per-key EMA — the O(1)-state form of ``ts_ema``.
+"""Streaming per-key EMA and Holt smoothing — the O(1)-state forms of
+``ts_ema`` and ``ts_holt_linear``.
 
-The batch operator folds each key's full history; on an unbounded stream
-the same recursion carries as a few numbers of state per key (the
-committed EMA and the fold frontier), which is the whole point: the
-order-recursive aggregation that can't map-side combine in batch becomes
-a trivially bounded stateful operator when the stream delivers in order.
-
-Ordering contract (upgraded in r11 alongside streaming/pattern.py): a
-recursive statistic cannot absorb a late row retroactively, so the state
-carries a small PENDING buffer — rows append on arrival, and only the
-prefix whose event time has passed the current watermark folds into the
-committed EMA (in (us, event_id) order; by then no admissible row can
-sort before it). Each emitted snapshot folds the still-pending suffix on
-a COPY of the committed state, so snapshots stay complete — the final
-snapshot per key (largest n_events; the counter is monotone) equals the
-batch fold even when micro-batches interleave out of event-time order
-within the watermark. The buffer is bounded by the watermark horizon per
-key; rows at or before the committed frontier are replays or
-watermark-expired and fold nothing (exactly-once replay safety).
-
-CHECKPOINT COMPATIBILITY: the r11 pending-buffer upgrade CHANGED the
-state schema (r10's ``last_us``/``last_id`` frontier pair became
-``folded_wm_us`` + the three pending arrays). applyInPandasWithState
-pins the state StructType into the checkpoint, so a checkpoint written
-by the r10 operator cannot be restored by this one — restarting an
-upgraded query REQUIRES a fresh checkpoint directory (and a source
-replay/backfill if continuity matters). Same break, same round, same
-remedy in streaming/funnel.py and streaming/pattern.py.
+The batch operators fold each key's full history; on an unbounded stream
+the same recursion carries as a few numbers of state per key, so the
+order-recursive aggregation that cannot map-side combine in batch becomes
+a bounded stateful operator. Both folds run on the watermark-sealed
+pending buffer of streaming/sealed_fold.py, which states the ordering
+contract. Each step is the batch query's IEEE expression verbatim, so the
+final snapshot per key (largest ``n_events``) equals the batch fold bit
+for bit. The weights are defined here and imported by the batch queries
+(plans/timeseries.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-EMA_ALPHA = 0.9  # same decay as the batch ts_ema query
+from ssidentity_spark.streaming.sealed_fold import SealedFold
+
+EMA_ALPHA = 0.9  # decay: acc * EMA_ALPHA + x * EMA_GAIN
+# the new value's weight, written out: 1.0 - EMA_ALPHA is 0.09999999999999998
+EMA_GAIN = 0.1
+HOLT_ALPHA = 0.5
+HOLT_BETA = 0.2
 
 EMA_OUTPUT_SCHEMA = StructType(
     [
@@ -56,89 +33,66 @@ EMA_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-EMA_STATE_SCHEMA = StructType(
+HOLT_OUTPUT_SCHEMA = StructType(
     [
-        StructField("ema", DoubleType()),
-        StructField("n", LongType()),
-        # committed fold frontier: events with us < folded_wm_us are in
-        StructField("folded_wm_us", LongType()),
-        StructField("pend_us", ArrayType(LongType())),
-        StructField("pend_id", ArrayType(LongType())),
-        StructField("pend_val", ArrayType(DoubleType())),
+        StructField("user_id", LongType()),
+        StructField("level", DoubleType()),
+        StructField("trend", DoubleType()),
+        StructField("n_events", LongType()),
     ]
 )
 
 
-def _ema_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if rows.empty:
-        return
-    rows = rows.assign(_us=rows["ts"].astype("int64") // 1_000)
-    if state.exists:
-        ema, n, folded_wm_us, pend_us, pend_id, pend_val = state.get
-        pending = {
-            (int(u), int(i)): float(v)
-            for u, i, v in zip(pend_us or [], pend_id or [], pend_val or [])
-        }
-    else:
-        ema, n, folded_wm_us = 0.0, 0, 0
-        pending = {}
-    for us, eid, val in zip(rows["_us"], rows["event_id"], rows["value"]):
-        us, eid = int(us), int(eid)
-        if us < folded_wm_us:
-            continue  # already folded (replay) or watermark-expired
-        pending[(us, eid)] = float(val)
-    wm_us = state.getCurrentWatermarkMs() * 1_000
-    keep: dict[tuple[int, int], float] = {}
-    for (us, eid), val in sorted(pending.items()):
-        if us < wm_us:
-            ema = val if n == 0 else ema * EMA_ALPHA + val * (1.0 - EMA_ALPHA)
-            n += 1
-        else:
-            keep[(us, eid)] = val
-    folded_wm_us = max(folded_wm_us, wm_us)
-    ks = sorted(keep)
-    state.update(
-        (
-            ema,
-            n,
-            folded_wm_us,
-            [k[0] for k in ks],
-            [k[1] for k in ks],
-            [keep[k] for k in ks],
-        )
+def _ema_step(acc: tuple, n: int, us: int, val: float) -> tuple:
+    return (val if n == 0 else acc[0] * EMA_ALPHA + val * EMA_GAIN,)
+
+
+def _holt_step(acc: tuple, n: int, us: int, val: float) -> tuple:
+    """Seed (x, 0) on the first element, then l' and b' with l'
+    recomputed inside b' (the same IEEE op order as the Spark/DuckDB
+    folds)."""
+    if n == 0:
+        return val, 0.0
+    l, b = acc
+    return (
+        HOLT_ALPHA * val + (1.0 - HOLT_ALPHA) * (l + b),
+        HOLT_BETA * (HOLT_ALPHA * val + (1.0 - HOLT_ALPHA) * (l + b) - l)
+        + (1.0 - HOLT_BETA) * b,
     )
-    # speculative snapshot: committed fold + the pending suffix
-    s_ema, s_n = ema, n
-    for k in ks:
-        v = keep[k]
-        s_ema = v if s_n == 0 else s_ema * EMA_ALPHA + v * (1.0 - EMA_ALPHA)
-        s_n += 1
-    yield pd.DataFrame(
-        {"user_id": [int(key[0])], "ema": [s_ema], "n_events": [s_n]}
-    )
+
+
+_ema_fn = SealedFold(
+    payload="value",
+    fields=(StructField("ema", DoubleType()),),
+    init=(0.0,),
+    step=_ema_step,
+    emit=lambda acc, n: (acc[0], n),
+    output=EMA_OUTPUT_SCHEMA,
+)
+
+_holt_fn = SealedFold(
+    payload="value",
+    fields=(StructField("l", DoubleType()), StructField("b", DoubleType())),
+    init=(0.0, 0.0),
+    step=_holt_step,
+    emit=lambda acc, n: (*acc, n),
+    output=HOLT_OUTPUT_SCHEMA,
+)
 
 
 def ema_stream(changes: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """(user_id, ts, event_id, value) stream → append-only per-batch
-    snapshots of each touched key's running EMA. Final snapshot per key
-    (max n_events — monotone) equals the batch fold, including under
-    cross-batch disorder within the watermark (module docstring)."""
-    return (
-        changes.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _ema_fn,
-            outputStructType=EMA_OUTPUT_SCHEMA,
-            stateStructType=EMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    snapshots of each touched key's running EMA. The final snapshot per
+    key (max n_events) equals the batch ts_ema fold."""
+    return _ema_fn.stream(changes, watermark)
+
+
+def holt_stream(changes: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """(user_id, ts, event_id, value) stream → append-only per-batch
+    snapshots of each touched key's running Holt (level, trend). The
+    final snapshot per key (max n_events) equals the batch
+    ts_holt_linear fold."""
+    return _holt_fn.stream(changes, watermark)
 
 
 def m4_downsample_stream(
@@ -194,133 +148,4 @@ def m4_downsample_stream(
         "role",
         F.col("p.ts_us").alias("ts_us"),
         F.col("p.value").alias("value"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# TS10 streaming twin (r12) — Holt linear smoothing with O(1) state per
-# key: the (level, trend) recursion folds across micro-batches exactly
-# like the EMA above, under the same watermark-sealed pending-buffer
-# ordering contract (module docstring; the buffer bookkeeping is
-# identical — only the fold step and the state payload differ). Each
-# fold step is the SAME IEEE expression sequence as the batch
-# ts_holt_linear (the l' expression recomputed inside b', no temporary
-# reordering), so the final snapshot per key is bit-identical to the
-# batch fold — pinned by the hypothesis property test and the
-# micro-batch parity test.
-# ---------------------------------------------------------------------------
-
-HOLT_ALPHA = 0.5  # matches plans/timeseries._HOLT_ALPHA (test-pinned)
-HOLT_BETA = 0.2
-
-HOLT_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("level", DoubleType()),
-        StructField("trend", DoubleType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-HOLT_STATE_SCHEMA = StructType(
-    [
-        StructField("l", DoubleType()),
-        StructField("b", DoubleType()),
-        StructField("n", LongType()),
-        StructField("folded_wm_us", LongType()),
-        StructField("pend_us", ArrayType(LongType())),
-        StructField("pend_id", ArrayType(LongType())),
-        StructField("pend_val", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _holt_step(l: float, b: float, n: int, val: float):
-    """One committed fold step — the batch query's expression verbatim:
-    seed (x, 0) on the first element, then l' and b' with l'
-    recomputed inside b' (same IEEE op order as the Spark/DuckDB
-    folds)."""
-    if n == 0:
-        return val, 0.0, 1
-    l2 = HOLT_ALPHA * val + (1.0 - HOLT_ALPHA) * (l + b)
-    b2 = (
-        HOLT_BETA
-        * (HOLT_ALPHA * val + (1.0 - HOLT_ALPHA) * (l + b) - l)
-        + (1.0 - HOLT_BETA) * b
-    )
-    return l2, b2, n + 1
-
-
-def _holt_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if rows.empty:
-        return
-    rows = rows.assign(_us=rows["ts"].astype("int64") // 1_000)
-    if state.exists:
-        l, b, n, folded_wm_us, pend_us, pend_id, pend_val = state.get
-        pending = {
-            (int(u), int(i)): float(v)
-            for u, i, v in zip(pend_us or [], pend_id or [], pend_val or [])
-        }
-    else:
-        l, b, n, folded_wm_us = 0.0, 0.0, 0, 0
-        pending = {}
-    for us, eid, val in zip(rows["_us"], rows["event_id"], rows["value"]):
-        us, eid = int(us), int(eid)
-        if us < folded_wm_us:
-            continue  # already folded (replay) or watermark-expired
-        pending[(us, eid)] = float(val)
-    wm_us = state.getCurrentWatermarkMs() * 1_000
-    keep: dict[tuple[int, int], float] = {}
-    for (us, eid), val in sorted(pending.items()):
-        if us < wm_us:
-            l, b, n = _holt_step(l, b, n, val)
-        else:
-            keep[(us, eid)] = val
-    folded_wm_us = max(folded_wm_us, wm_us)
-    ks = sorted(keep)
-    state.update(
-        (
-            l,
-            b,
-            n,
-            folded_wm_us,
-            [k[0] for k in ks],
-            [k[1] for k in ks],
-            [keep[k] for k in ks],
-        )
-    )
-    s_l, s_b, s_n = l, b, n
-    for k in ks:
-        s_l, s_b, s_n = _holt_step(s_l, s_b, s_n, keep[k])
-    yield pd.DataFrame(
-        {
-            "user_id": [int(key[0])],
-            "level": [s_l],
-            "trend": [s_b],
-            "n_events": [s_n],
-        }
-    )
-
-
-def holt_stream(changes: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """(user_id, ts, event_id, value) stream → append-only per-batch
-    snapshots of each touched key's running Holt (level, trend). Final
-    snapshot per key (max n_events — monotone) is bit-identical to the
-    batch ts_holt_linear fold, including under cross-batch disorder
-    within the watermark."""
-    return (
-        changes.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _holt_fn,
-            outputStructType=HOLT_OUTPUT_SCHEMA,
-            stateStructType=HOLT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )

@@ -1,50 +1,24 @@
 """Streaming funnel progression — the unbounded form of
 ``w6_funnel_progression`` (greedy-first-chain windowFunnel).
 
-Like the streaming EMA (streaming/ema.py), the order-recursive fold
-carries O(1) DFA state per key: (level, anchor time). Ordering contract
-(upgraded in r11 alongside streaming/pattern.py): the greedy chain is
-ORDER-SENSITIVE — an earlier signup arriving late re-anchors the window
-— so rows wait in a small per-key PENDING buffer and only the prefix the
-watermark has sealed folds into the committed state (in (us, event_id)
-order; by then no admissible row can sort before it). Each emitted
-snapshot folds the still-pending suffix on a COPY of the committed
-state, so snapshots stay complete: the final snapshot per key (largest
-n_events — the counter is monotone) equals the batch query even when
-micro-batches interleave out of event-time order within the watermark.
-Rows at or before the committed frontier are replays or
-watermark-expired and fold nothing (exactly-once replay safety). Emits a
-snapshot of each touched key's progression per batch — the live "who is
-about to convert" feed the batch query answers retrospectively.
-
-CHECKPOINT COMPATIBILITY: the r11 pending-buffer upgrade CHANGED the
-state schema (the r10 frontier pair became ``folded_wm_us`` + pending
-arrays). applyInPandasWithState pins the state StructType into the
-checkpoint, so a checkpoint written by the r10 operator cannot be
-restored by this one — restart with a FRESH checkpoint directory (and
-a source replay/backfill if continuity matters). Same break and remedy
-in streaming/ema.py and streaming/pattern.py.
+The fold carries O(1) state per key, (level, anchor time), on the
+watermark-sealed pending buffer of streaming/sealed_fold.py. The greedy
+chain is order-sensitive (an earlier signup arriving late re-anchors the
+window), which is what that buffer's ordering contract is for. Emits a
+snapshot of each touched key's progression per batch: the live "who is
+about to convert" feed the batch query answers retrospectively. The
+window is defined here and imported by the batch query
+(plans/analytics.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-FUNNEL_W_US = 3_600_000_000  # 60 min — same as the batch query
+from ssidentity_spark.streaming.sealed_fold import SealedFold
+
+FUNNEL_W_US = 3_600_000_000  # 60 min
 _STEPS = {"signup": 1, "view": 2, "purchase": 3}
 
 FUNNEL_OUTPUT_SCHEMA = StructType(
@@ -60,84 +34,25 @@ FUNNEL_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("level", IntegerType()),
-        StructField("t0", LongType()),
-        StructField("n", LongType()),
-        StructField("folded_wm_us", LongType()),
-        StructField("pend_us", ArrayType(LongType())),
-        StructField("pend_id", ArrayType(LongType())),
-        StructField("pend_s", StringType()),  # one step digit per event
-    ]
-)
 
-
-def _step(level: int, t0: int, us: int, s: int) -> tuple[int, int]:
+def _step(acc: tuple, n: int, us: int, event_type: str) -> tuple:
+    level, t0 = acc
+    s = _STEPS[event_type]
     if level == 0 and s == 1:
         return 1, us
     if s == level + 1 and us <= t0 + FUNNEL_W_US:
         return level + 1, t0
-    return level, t0
+    return acc
 
 
-def _funnel_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if rows.empty:
-        return
-    rows = rows.assign(_us=rows["ts"].astype("int64") // 1_000)
-    if state.exists:
-        level, t0, n, folded_wm_us, pend_us, pend_id, pend_s = state.get
-        pending = {
-            (int(u), int(i)): int(c)
-            for u, i, c in zip(pend_us or [], pend_id or [], pend_s or "")
-        }
-    else:
-        level, t0, n, folded_wm_us = 0, 0, 0, 0
-        pending = {}
-    for us, eid, etype in zip(rows["_us"], rows["event_id"], rows["event_type"]):
-        us, eid = int(us), int(eid)
-        if us < folded_wm_us:
-            continue  # already folded (replay) or watermark-expired
-        pending[(us, eid)] = _STEPS.get(str(etype), 0)
-    wm_us = state.getCurrentWatermarkMs() * 1_000
-    keep: dict[tuple[int, int], int] = {}
-    for (us, eid), s in sorted(pending.items()):
-        if us < wm_us:
-            level, t0 = _step(level, t0, us, s)
-            n += 1
-        else:
-            keep[(us, eid)] = s
-    folded_wm_us = max(folded_wm_us, wm_us)
-    ks = sorted(keep)
-    state.update(
-        (
-            level,
-            t0,
-            n,
-            folded_wm_us,
-            [k[0] for k in ks],
-            [k[1] for k in ks],
-            "".join(str(keep[k]) for k in ks),
-        )
-    )
-    # speculative snapshot: committed fold + the pending suffix
-    s_level, s_t0, s_n = level, t0, n
-    for (us, _eid) in ks:
-        s_level, s_t0 = _step(s_level, s_t0, us, keep[(us, _eid)])
-        s_n += 1
-    yield pd.DataFrame(
-        {
-            "user_id": [int(key[0])],
-            "funnel_level": [s_level],
-            "funnel_start_us": [s_t0],
-            "n_events": [s_n],
-        }
-    )
+_funnel_fn = SealedFold(
+    payload="event_type",
+    fields=(StructField("level", IntegerType()), StructField("t0", LongType())),
+    init=(0, 0),
+    step=_step,
+    emit=lambda acc, n: (*acc, n),
+    output=FUNNEL_OUTPUT_SCHEMA,
+)
 
 
 def funnel_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -151,15 +66,6 @@ def funnel_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame
     grow state with keys the semantics say don't exist)."""
     from pyspark.sql import functions as F
 
-    return (
-        events.filter(F.col("event_type").isin(*_STEPS))
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_fn,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _funnel_fn.stream(
+        events.filter(F.col("event_type").isin(*_STEPS)), watermark
     )

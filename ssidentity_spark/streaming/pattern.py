@@ -18,50 +18,21 @@ State machine (s=signup, c/v=browse, p=purchase, e=error):
   ARMED --s-->  ARMED(len=1)   (restart: the old anchor can never match)
   ARMED --e-->  IDLE
 
-Ordering and replay safety (ADVICE r10): the DFA is ORDER-SENSITIVE, so
-folding an event as it arrives would diverge from the batch twin whenever
-micro-batches interleave out of event-time order — and a plain
-"(us, event_id) <= last folded" replay guard would silently DROP a late
-event the watermark still admits. Instead the state carries a small
-PENDING buffer: rows append to it on arrival, and only the prefix whose
-event time has passed the current watermark is folded into the committed
-DFA state (in (us, event_id) order — by then no admissible row can sort
-before it, so the fold order is final). Each emitted snapshot folds the
-still-pending suffix on a COPY of the committed state, so snapshots stay
-complete (the final snapshot per key equals the batch query) while the
-commit order stays watermark-safe. The buffer is bounded by the
-watermark horizon per key, replays dedupe exactly against it, and events
-at or before the committed fold frontier are either already folded or
-watermark-expired — skipping them is the correct at-least-once behavior,
-not data loss.
-
-CHECKPOINT COMPATIBILITY: that r11 pending-buffer upgrade CHANGED the
-state schema (the r10 ``last_us``/``last_id`` frontier became
-``folded_wm_us`` + pending arrays). applyInPandasWithState pins the
-state StructType into the checkpoint, so a checkpoint written by the
-r10 operator cannot be restored by this one — restart with a FRESH
-checkpoint directory (and a source replay/backfill if continuity
-matters). Same break and remedy in streaming/ema.py and
-streaming/funnel.py.
+The fold runs on the watermark-sealed pending buffer of
+streaming/sealed_fold.py, whose ordering contract keeps this
+order-sensitive DFA equal to the batch twin under cross-batch disorder.
+An empty ``event_type`` is a zero-width character in the batch twin's
+per-key string (``substring('', 1, 1)`` adds nothing), so pattern_stream
+drops those rows before the fold: they neither count nor touch an
+episode.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from ssidentity_spark.streaming.sealed_fold import SealedFold
 
 PATTERN_OUTPUT_SCHEMA = StructType(
     [
@@ -73,29 +44,11 @@ PATTERN_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-PATTERN_STATE_SCHEMA = StructType(
-    [
-        StructField("armed", IntegerType()),
-        StructField("cur_len", LongType()),
-        StructField("n_events", LongType()),
-        StructField("n_matches", LongType()),
-        StructField("longest", LongType()),
-        StructField("browse", LongType()),
-        # committed fold frontier: every event with us < folded_wm_us is
-        # folded (or was dropped late by the upstream watermark filter)
-        StructField("folded_wm_us", LongType()),
-        # pending buffer — events admitted but not yet past the watermark
-        StructField("pend_us", ArrayType(LongType())),
-        StructField("pend_id", ArrayType(LongType())),
-        StructField("pend_ch", StringType()),  # one char per pending event
-    ]
-)
 
-
-def _step(
-    armed: int, cur_len: int, n_matches: int, longest: int, browse: int, ch: str
-) -> tuple[int, int, int, int, int]:
-    """One DFA transition — shared by the committed and speculative folds."""
+def _step(acc: tuple, n: int, us: int, event_type: str | None) -> tuple:
+    """One DFA transition on the event type's first character."""
+    armed, cur_len, n_matches, longest, browse = acc
+    ch = str(event_type)[:1]
     if armed:
         if ch in ("c", "v"):
             cur_len += 1
@@ -113,122 +66,31 @@ def _step(
     return armed, cur_len, n_matches, longest, browse
 
 
-def _pattern_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if rows.empty:
-        return
-    rows = rows.assign(_us=rows["ts"].astype("int64") // 1_000)
-    if state.exists:
-        (
-            armed,
-            cur_len,
-            n_events,
-            n_matches,
-            longest,
-            browse,
-            folded_wm_us,
-            pend_us,
-            pend_id,
-            pend_ch,
-        ) = state.get
-        pending = {
-            (int(u), int(i)): c
-            for u, i, c in zip(pend_us or [], pend_id or [], pend_ch or "")
-        }
-    else:
-        armed, cur_len, n_events, n_matches, longest, browse = 0, 0, 0, 0, 0, 0
-        folded_wm_us = 0
-        pending = {}
-    # admit new rows: anything before the committed frontier is either a
-    # replayed already-folded row or watermark-expired; duplicates of a
-    # pending row (crash replay before its fold committed) dedupe by key.
-    # An EMPTY event_type is skipped outright — the batch twin encodes it
-    # as a zero-width character (substring('',1,1) adds nothing to the
-    # per-key string, so it neither counts in n_events nor touches an
-    # episode), and storing '' here would also desynchronize the
-    # pend_ch string from the pend_us/pend_id arrays on restore
-    for us, eid, etype in zip(rows["_us"], rows["event_id"], rows["event_type"]):
-        us, eid = int(us), int(eid)
-        if us < folded_wm_us:
-            continue
-        ch = str(etype)[:1]
-        if not ch:
-            continue
-        pending[(us, eid)] = ch
-    # fold the prefix the watermark has sealed — its (us, event_id) order
-    # is final because no admissible future row can sort before it
-    wm_us = state.getCurrentWatermarkMs() * 1_000
-    keep: dict[tuple[int, int], str] = {}
-    for (us, eid), ch in sorted(pending.items()):
-        if us < wm_us:
-            n_events += 1
-            armed, cur_len, n_matches, longest, browse = _step(
-                armed, cur_len, n_matches, longest, browse, ch
-            )
-        else:
-            keep[(us, eid)] = ch
-    folded_wm_us = max(folded_wm_us, wm_us)
-    ks = sorted(keep)
-    state.update(
-        (
-            armed,
-            cur_len,
-            n_events,
-            n_matches,
-            longest,
-            browse,
-            folded_wm_us,
-            [k[0] for k in ks],
-            [k[1] for k in ks],
-            "".join(keep[k] for k in ks),
-        )
-    )
-    # speculative snapshot: committed state + the pending suffix, so the
-    # emitted totals are complete as of everything seen for this key
-    s_armed, s_cur, s_matches, s_longest, s_browse = (
-        armed,
-        cur_len,
-        n_matches,
-        longest,
-        browse,
-    )
-    s_events = n_events
-    for k in ks:
-        s_events += 1
-        s_armed, s_cur, s_matches, s_longest, s_browse = _step(
-            s_armed, s_cur, s_matches, s_longest, s_browse, keep[k]
-        )
-    yield pd.DataFrame(
-        {
-            "user_id": [int(key[0])],
-            "n_events": [s_events],
-            "n_matches": [s_matches],
-            "longest_match": [s_longest],
-            "n_browse_steps": [s_browse],
-        }
-    )
+_pattern_fn = SealedFold(
+    payload="event_type",
+    fields=(
+        StructField("armed", IntegerType()),
+        StructField("cur_len", LongType()),
+        StructField("n_matches", LongType()),
+        StructField("longest", LongType()),
+        StructField("browse", LongType()),
+    ),
+    init=(0, 0, 0, 0, 0),
+    step=_step,
+    emit=lambda acc, n: (n, *acc[2:]),
+    output=PATTERN_OUTPUT_SCHEMA,
+)
 
 
 def pattern_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """(user_id, ts, event_id, event_type) stream → append-only per-batch
     snapshots of each touched key's episode totals. The final snapshot
-    per key (the one with the largest n_events — the counter is
-    monotone) equals the batch query's row for that key, including under
-    cross-batch event-time disorder within the watermark: out-of-order
-    rows wait in the per-key pending buffer and fold only once the
-    watermark seals their position (module docstring)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _pattern_fn,
-            outputStructType=PATTERN_OUTPUT_SCHEMA,
-            stateStructType=PATTERN_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    per key (the one with the largest n_events) equals the batch query's
+    row for that key."""
+    from pyspark.sql import functions as F
+
+    et = F.col("event_type")
+    # a null event_type is kept: it folds as a non-pattern event
+    return _pattern_fn.stream(
+        events.filter(et.isNull() | (F.length(et) > 0)), watermark
     )

@@ -4,7 +4,8 @@ The compact stdout line must keep ``queries`` — the one field the driver's
 per-query comparison parses — under any budget, shedding only the flag
 lists. The baseline is derived from ``bench_history/``: only artifacts with
 the run's ``sf`` and ``cpus`` count, the newest is ``prev`` and ``best`` is
-the per-query minimum over all of them.
+the per-query minimum over all of them. A flag needs the median delta to
+exceed the two artifacts' summed stddev wherever both record one.
 """
 
 from __future__ import annotations
@@ -72,11 +73,22 @@ def test_compact_line_sheds_only_the_flag_lists():
     assert c["n_regressions_over_1.3x_vs_best"] == 19
 
 
-def _record(hist, name, queries, sf=0.1, cpus=4, utc="2026-10-19T06:00:00+00:00"):
+def _record(
+    hist, name, queries, sf=0.1, cpus=4, utc="2026-10-19T06:00:00+00:00", stddev=None
+):
     art = {"sf": sf, "queries": queries, "utc": utc}
     if cpus is not None:
         art["cpus"] = cpus
+    if stddev is not None:
+        art["per_query"] = {
+            n: {"median": t, "stddev": stddev[n]} for n, t in queries.items()
+        }
     (hist / name).write_text(json.dumps(art))
+
+
+def _run(medians, stddev=0.0):
+    """This run's per-query records, as main() passes them to compare()."""
+    return {n: {"median": t, "stddev": stddev} for n, t in medians.items()}
 
 
 def test_baseline_is_the_newest_matching_artifact_and_best_the_minimum(tmp_path):
@@ -89,7 +101,7 @@ def test_baseline_is_the_newest_matching_artifact_and_best_the_minimum(tmp_path)
     # same cpus, other scale factor
     _record(tmp_path, "sf1.json", {"a": 0.1, "b": 0.1}, sf=1.0, utc="2026-10-19T09:00:00+00:00")
 
-    out = bench.compare({"a": 2.4, "b": 4.2}, str(tmp_path), 0.1, 4)
+    out = bench.compare(_run({"a": 2.4, "b": 4.2}), str(tmp_path), 0.1, 4)
     assert out["prev"] == "new.json"
     assert out["n_baseline_runs"] == 2
     assert out["best"] == {"a": 1.0, "b": 3.0}
@@ -102,12 +114,40 @@ def test_baseline_is_the_newest_matching_artifact_and_best_the_minimum(tmp_path)
 def test_no_matching_artifact_means_no_baseline_and_no_flags(tmp_path):
     _record(tmp_path, "c8.json", {"a": 0.1}, cpus=8)
     _record(tmp_path, "legacy.json", {"a": 0.1}, cpus=None)
-    out = bench.compare({"a": 9.9}, str(tmp_path), 0.1, 4)
+    out = bench.compare(_run({"a": 9.9}), str(tmp_path), 0.1, 4)
     assert out["prev"] is None
     assert out["best"] == {}
     assert out["ratio_vs_prev"] == out["ratio_vs_best"] == {}
     assert out["regressions_over_1.3x"] == []
     assert out["regressions_over_1.3x_vs_best"] == []
+
+
+def test_slowdown_inside_both_runs_spread_is_not_flagged(tmp_path):
+    # two back-to-back runs of identical code: 0.469 -> 0.616 s is 1.31x,
+    # but the 0.147 s delta is inside the summed stddevs 0.118 + 0.087
+    _record(tmp_path, "prev.json", {"pipe_decontaminate": 0.469},
+            stddev={"pipe_decontaminate": 0.118})
+    out = bench.compare(_run({"pipe_decontaminate": 0.616}, stddev=0.087),
+                        str(tmp_path), 0.1, 4)
+    assert out["ratio_vs_prev"] == {"pipe_decontaminate": 1.31}
+    assert out["regressions_over_1.3x"] == []
+    assert out["regressions_over_1.3x_vs_best"] == []
+
+
+def test_doubling_beyond_a_small_spread_is_flagged(tmp_path):
+    _record(tmp_path, "prev.json", {"a": 0.5}, stddev={"a": 0.02})
+    out = bench.compare(_run({"a": 1.0}, stddev=0.03), str(tmp_path), 0.1, 4)
+    assert out["regressions_over_1.3x"] == ["a"]
+    assert out["regressions_over_1.3x_vs_best"] == ["a"]
+
+
+def test_artifact_without_per_query_flags_on_the_ratio_alone(tmp_path):
+    # no recorded stddev on the baseline side: the 1.3x ratio decides,
+    # however wide this run's own spread
+    _record(tmp_path, "legacy_c4.json", {"a": 0.469})
+    out = bench.compare(_run({"a": 0.616}, stddev=0.5), str(tmp_path), 0.1, 4)
+    assert out["regressions_over_1.3x"] == ["a"]
+    assert out["regressions_over_1.3x_vs_best"] == ["a"]
 
 
 def test_artifact_name_carries_time_sha_sf_and_cpus():

@@ -491,10 +491,9 @@ def test_w7_stream_folds_cross_batch_disorder_within_watermark(spark, tmp_path):
 def test_w7_stream_skips_empty_event_type_like_batch(spark, tmp_path):
     """An empty event_type is a ZERO-WIDTH character in the batch twin's
     per-key string (substring('',1,1) contributes nothing): the stream
-    must skip it — not count it, not kill an episode with it, and not
-    desynchronize the pending-buffer encoding across a batch boundary
-    (the r11 review catch: '' stored in pend_ch shifted every later
-    pending char on restore)."""
+    must skip it — not count it and not kill an episode with it, also
+    across a batch boundary (pattern_stream filters such rows out before
+    the fold)."""
     schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"

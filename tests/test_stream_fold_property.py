@@ -1,7 +1,8 @@
-"""Property tests for the watermark-sealed pending-buffer fold shared by
-the three order-recursive streaming twins (streaming/pattern.py, ema.py,
-funnel.py) — no Spark session needed: the fold functions are driven
-directly with a fake GroupState, exactly as applyInPandasWithState would.
+"""Property tests for the watermark-sealed pending-buffer fold
+(streaming/sealed_fold.py) shared by the four order-recursive streaming
+twins (pattern, EMA, Holt and funnel) — no Spark session needed: the
+per-key fold functions are driven directly with a fake GroupState,
+exactly as applyInPandasWithState would.
 
 The simulated harness reproduces Spark's contract:
 - rows are assigned to micro-batches in ARBITRARY order (cross-batch
@@ -146,7 +147,7 @@ def test_pattern_fold_matches_regex_under_disorder_and_replay(
     replay=st.integers(0, 3),
 )
 def test_ema_fold_matches_ordered_recursion_under_disorder(vals, splits, replay):
-    from ssidentity_spark.streaming.ema import EMA_ALPHA, _ema_fn
+    from ssidentity_spark.streaming.ema import _ema_fn
 
     rows = [(us, 1000 + i, v) for i, (us, v) in enumerate(vals)]
     batches = [[] for _ in range(4)]
@@ -158,10 +159,10 @@ def test_ema_fold_matches_ordered_recursion_under_disorder(vals, splits, replay)
         return
     acc, n = 0.0, 0
     for _, _, v in sorted(admitted):
-        acc = v if n == 0 else acc * EMA_ALPHA + v * (1.0 - EMA_ALPHA)
+        acc = v if n == 0 else acc * 0.9 + v * 0.1  # ts_ema's expression
         n += 1
     assert final["n_events"] == n
-    assert abs(final["ema"] - acc) < 1e-9
+    assert final["ema"] == acc
 
 
 @settings(max_examples=60, deadline=None)
@@ -212,7 +213,7 @@ def test_funnel_fold_matches_greedy_chain_under_disorder(events, splits, replay)
     replay=st.integers(0, 3),
 )
 def test_holt_fold_matches_ordered_recursion_under_disorder(vals, splits, replay):
-    """The r12 Holt twin under the same contract as the EMA fold: the
+    """The Holt twin under the same contract as the EMA fold: the
     final snapshot equals the ordered (level, trend) recursion over the
     admitted rows — BIT-equal, since the committed/speculative folds run
     the identical IEEE step as the ground truth here."""
@@ -247,10 +248,3 @@ def test_holt_fold_matches_ordered_recursion_under_disorder(vals, splits, replay
     assert final["level"] == l
     assert final["trend"] == b
 
-
-def test_holt_stream_constants_match_the_batch_query():
-    from ssidentity_spark.plans.timeseries import _HOLT_ALPHA, _HOLT_BETA
-    from ssidentity_spark.streaming.ema import HOLT_ALPHA, HOLT_BETA
-
-    assert HOLT_ALPHA == _HOLT_ALPHA
-    assert HOLT_BETA == _HOLT_BETA

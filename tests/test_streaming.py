@@ -1558,3 +1558,69 @@ def test_holt_stream_final_snapshot_equals_batch_query(spark, tmp_path):
         for r in REGISTRY["ts_holt_linear"].fn(spark, sf).collect()
     }
     assert final == batch
+
+
+def test_sealed_fold_twins_match_batch_in_one_trigger(spark, tmp_path):
+    """Each of the four sealed-fold twins (EMA, Holt, funnel, pattern)
+    builds its state schema through applyInPandasWithState and runs one
+    trigger over a few rows; its final snapshot per user equals the
+    registered batch query on the same rows (EMA and Holt at the batch
+    queries' 6 dp round)."""
+    from ssidentity_spark.registry import REGISTRY, _ensure_loaded
+    from ssidentity_spark.streaming.ema import ema_stream, holt_stream
+    from ssidentity_spark.streaming.funnel import funnel_stream
+    from ssidentity_spark.streaming.pattern import pattern_stream
+
+    _ensure_loaded()
+    base = dt.datetime(2026, 6, 1, 8, 0, 0)
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    seqs = {1: "scvpsvp", 2: "svcep", 3: "cvp"}
+    rows = [
+        (100 * u + i, base + dt.timedelta(minutes=7 * i), u,
+         {"s": "signup", "c": "click", "v": "view", "p": "purchase",
+          "e": "error"}[ch], 1.5 * i - u, "{}")
+        for u, seq in seqs.items()
+        for i, ch in enumerate(seq)
+    ]
+    sf = str(tmp_path)
+    src = f"{sf}/events.parquet"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+
+    def final(twin, name):
+        q = (
+            twin(spark.readStream.schema(schema).parquet(src))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        best = {}
+        for r in spark.table(name).collect():
+            if r["n_events"] > best.get(r["user_id"], {"n_events": -1})["n_events"]:
+                best[r["user_id"]] = r.asDict()
+        return best
+
+    def batch(query):
+        return {
+            r["user_id"]: r.asDict() for r in REGISTRY[query].fn(spark, sf).collect()
+        }
+
+    for twin, query, cols in (
+        (ema_stream, "ts_ema", ("ema",)),
+        (holt_stream, "ts_holt_linear", ("level", "trend")),
+        (funnel_stream, "w6_funnel_progression", ("funnel_level", "funnel_start_us")),
+        (pattern_stream, "w7_event_pattern",
+         ("n_events", "n_matches", "longest_match", "n_browse_steps")),
+    ):
+        got, want = final(twin, f"sealed_{query}"), batch(query)
+        assert set(got) == set(want), query
+        for u, w in want.items():
+            g = {c: got[u][c] for c in cols}
+            if query in ("ts_ema", "ts_holt_linear"):
+                g = {c: round(v, 6) for c, v in g.items()}
+            assert g == {c: w[c] for c in cols}, (query, u, got[u], w)
