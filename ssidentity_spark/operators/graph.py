@@ -315,7 +315,6 @@ def pagerank(
     iters: int = 6,
     damping: float = 0.85,
     round_dp: int = 6,
-    partitions: int | None = None,
     broadcast_max_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Weighted PageRank by plain joins + aggregations, fixed ``iters``
@@ -338,13 +337,14 @@ def pagerank(
     static recurrence the DuckDB oracle unrolls; float summation order
     differs between engines and the final ``round(round_dp)`` absorbs it.
 
-    ``partitions`` fixes the loop's shuffle width. By default it is
-    derived from the edge count, about 2M edges per partition with a
-    floor of 1, so a small graph does not run
-    ``spark.sql.shuffle.partitions`` tasks per round and a large one
-    still gets thousands. Every per-round exchange is pinned to this
-    width and key, so the cached edge side and the state side are never
-    re-shuffled inside the loop.
+    The loop's shuffle width is the session's
+    ``spark.sql.shuffle.partitions``, or about one partition per 2M
+    edges when that is more. Both cached sides are hash-partitioned at
+    that width, which is the width ``EnsureRequirements`` asks of the
+    state join, so a round re-shuffles neither of them (on the broadcast
+    path below its only jobs are the rank broadcast and the checkpoint).
+    A width of 1 would plan as ``SinglePartition``, which the join
+    re-shuffles every round.
 
     The contribution join's strategy comes from the observed node count:
 
@@ -363,7 +363,7 @@ def pagerank(
     inside each ``dst``'s sum differs, which the rounding absorbs.
     """
     step, ranks, init, caches = _pagerank_setup(
-        edges, src, dst, weight, damping, partitions, broadcast_max_nodes
+        edges, src, dst, weight, damping, broadcast_max_nodes
     )
     # dm: the rank a round leaves on dangling nodes, spread by the next
     dm = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
@@ -379,7 +379,6 @@ def _pagerank_setup(
     dst: str,
     weight: str,
     damping: float,
-    partitions: int | None,
     broadcast_max_nodes: int,
 ) -> tuple:
     """pagerank's loop-invariant frames, built once: returns the round
@@ -393,8 +392,11 @@ def _pagerank_setup(
         ),
         n=F.count(F.lit(1)),
     )
-    if partitions is None:
-        partitions = max(1, -(-ec["n"] // 2_000_000))
+    spark = edges.sparkSession
+    partitions = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        -(-ec["n"] // 2_000_000),
+    )
     out_w = e.groupBy("src").agg(F.sum("w").alias("wout"))
     nodes = (
         e.select(F.col("src").alias("node"))

@@ -22,9 +22,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
+
+from ssidentity_spark.operators.blocktopk import cos6, top_rows
 
 # The probe/LUT builders below collect the QUERY vectors to the driver —
 # sound only while the query set is broadcast-sized. The cap turns a
@@ -194,11 +196,6 @@ def ivf_topk(
         F.col("nrm").alias("qnrm"),
     ).join(F.broadcast(probes), "query_id")
 
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     scored = (
         base.join(
             F.broadcast(qside),
@@ -208,13 +205,8 @@ def ivf_topk(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(dot / (F.col("qnrm") * F.col("nrm")), 6).alias("cos"),
+            cos6("qv", "qnrm", "v", "nrm").alias("cos"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    return top_rows(scored, top_k).select("query_id", "neighbor_id", "cos", "rnk")

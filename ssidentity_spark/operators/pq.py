@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
+from ssidentity_spark.operators.blocktopk import cos6, top_rows
+
 
 def _normalized_sample(
     em: DataFrame, sample_mod: int = 1, max_sample: int = 4096
@@ -229,26 +231,16 @@ def ivf_pq_rerank_topk(
         F.col("v").alias("qv"),
         F.col("nrm").alias("qnrm"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     scored = (
         base.join(F.broadcast(cands), F.col("vec_id") == F.col("neighbor_id"))
         .join(F.broadcast(qside), "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot / (F.col("qnrm") * F.col("nrm")), 6).alias("cos"),
+            cos6("qv", "qnrm", "v", "nrm").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    return top_rows(scored, top_k).select("query_id", "neighbor_id", "cos", "rnk")
 
 
 def pq_adc_topk(

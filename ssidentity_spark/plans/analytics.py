@@ -1682,14 +1682,14 @@ def id_behavior_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a query: two identifiers that behave identically are one device
     candidate.
 
-    Plan shape: candidates come from the SPARSE cell join — only pairs
-    sharing at least one profile cell ever materialize, grouped
-    map-side by the (user, match) key; norms are a broadcast-sized
-    dimension joined back; one user-keyed rank. The profile space here
-    (24×types) is deliberately dense at gate scale — every cell is hot
-    (occupancy ≈ 43% of users at sf0.01) — so the honest 100 TB path is
-    stated, not hidden: cap candidate-generation cells by occupancy
-    (the text_sparse_cosine_pairs df-cap, recall trade measured there)
+    Plan shape: one profile aggregate, then one integer block product
+    over the dense (user × cell) count matrix keeps every user's best
+    match; pairs sharing no profile cell are never candidates. The
+    profile space here (24×types) is deliberately dense at gate scale —
+    every cell is hot (occupancy ≈ 43% of users at sf0.01) — so the
+    honest 100 TB path is stated, not hidden: cap candidate-generation
+    cells by occupancy (the text_sparse_cosine_pairs df-cap, recall
+    trade measured there)
     or band the profile vectors through the existing sign-LSH
     machinery (dedup_simhash/sim_lsh_bucketed) and verify exactly
     within buckets, exactly as this query verifies.
@@ -1697,168 +1697,51 @@ def id_behavior_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integer counts, BIGINT dots/norms (order-free exact),
     one pinned cosine expression (IEEE sqrt), argmax on bit-identical
     doubles with deterministic ties — no rounding anywhere."""
-    # three consumers below (both join sides + norms): persist so the
-    # events scan + profile aggregate plan ONCE, not per branch (repo
-    # convention for multi-consumed frames, cf. ts_sax_discords). The
-    # frame stays cached for the process (narrow; the accretion across a
-    # full gate run is intended — LRU evicts under pressure).
-    prof = behavior_profiles(load_table(spark, sf_dir, "events")).persist()
-    return _exact_linkage(prof)
-
-
-# Broadcast guard for the exact-linkage cell join (ADVICE r12): the
-# build side is the FULL profile frame, which grows linearly with user
-# count — unconditional broadcast would hit Spark's 8 GB / 512M-row
-# broadcast cap and executor memory long before 100 TB. 5M profile rows
-# (≈ 200 MB framed at ~40 B/row) is comfortably inside every executor
-# while covering ~35k users at the ≤144-cells/user profile grain; past
-# it the join degrades gracefully to the pre-r12 shuffle shape instead
-# of hard-failing. (At that scale the exact all-pairs tier is the
-# verification tier anyway — ID2's signature index is the declared
-# 100 TB candidate path; the low-cardinality cell key makes the shuffle
-# fallback skew-prone, which is exactly why the index tier exists.)
-_LNK_BCAST_MAX_CELL_ROWS = 5_000_000
+    return _exact_linkage(behavior_profiles(load_table(spark, sf_dir, "events")))
 
 
 def _cell_pair_width(n_rows: int, conf_width: int) -> int:
-    """Shuffle width for the Σ cell² pair stage: ~2000 profile rows per
-    task (≈1.3M generated pair rows at the measured sf0.1 blow-up),
-    clamped to the session conf. The floor keeps tiny inputs (sf0.001
-    oracle gates, vanilla 200-partition driver sessions) from pinning a
-    conf-width wave of empty tasks that AQE cannot coalesce behind an
-    explicit-width repartition (ADVICE r12)."""
+    """Shuffle width for a profile-row stage that fans each row out (the
+    LSH plane projections): ~2000 profile rows per task, clamped to the
+    session conf. The floor keeps tiny inputs (sf0.001 oracle gates,
+    vanilla 200-partition driver sessions) from pinning a conf-width wave
+    of empty tasks that AQE cannot coalesce behind an explicit-width
+    repartition (ADVICE r12)."""
     return max(1, min(conf_width, -(-n_rows // 2000)))
 
 
-def _cell_dots(
-    prof: DataFrame,
-    left: str,
-    right: str,
-    include_shared: bool = False,
-) -> DataFrame:
-    """Pairwise profile dot products through the shared-cell join —
-    the body of ID1's exact tier, shared by _exact_linkage and
-    id_linkage_clusters.
+def _profile_topk(prof: DataFrame, k: int, mutual: bool = False) -> DataFrame:
+    """Each user's top-``k`` other users by exact profile cosine, ties to
+    the smaller id, pairs sharing no cell left out (operators/blocktopk.py
+    integer tier): ``(qid, cid, n_cells, shared_cells, dot, cosine, rnk)``."""
+    from ssidentity_spark.operators.blocktopk import block_topk_int
 
-    Small profile frames (≤ _LNK_BCAST_MAX_CELL_ROWS) take the r12
-    one-exchange shape: probe side pre-clustered on the user key at a
-    row-count-clamped width, build side broadcast, so the Σ cell² pair
-    space is aggregated where it is produced. Larger frames fall back
-    to the shuffle join on the cell key (see the guard note above).
-
-    Output: (left, right, dot [, shared_cells]) — integer sums, exact
-    under any partitioning or join order."""
-    spark = prof.sparkSession
-    conf_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # count() on the callers' persisted/checkpointed frame — cheap, and
-    # doubles as the cache warm-up the pair join wants anyway
-    n_rows = prof.count()
-    a = prof.alias("a")
-    b = prof.alias("b")
-    cond = (
-        (F.col("a.hod") == F.col("b.hod"))
-        & (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.user_id") != F.col("b.user_id"))
+    return block_topk_int(
+        prof, k, "user_id", ["hod", "event_type"], "c", mutual=mutual
     )
-    if n_rows <= _LNK_BCAST_MAX_CELL_ROWS:
-        # Explicit width, NOT repartition("user_id") alone: AQE sizes a
-        # keyless-width repartition by the INPUT frame (a few MB of
-        # profile rows → coalesced to 1 partition), but this exchange's
-        # downstream is the Σ cell² pair join (~650× blow-up at sf0.1)
-        # — measured 30.8 s single-task vs 1.7 s at the session width.
-        n_parts = _cell_pair_width(n_rows, conf_width)
-        a = prof.repartition(n_parts, "user_id").alias("a")
-        joined = a.join(F.broadcast(b), cond)
-    else:
-        joined = a.join(b, cond)
-    aggs = [F.sum(F.col("a.c") * F.col("b.c")).cast("long").alias("dot")]
-    if include_shared:
-        aggs.append(F.count(F.lit(1)).cast("long").alias("shared_cells"))
-    return joined.groupBy(
-        F.col("a.user_id").alias(left), F.col("b.user_id").alias(right)
-    ).agg(*aggs)
 
 
 def _exact_linkage(prof: DataFrame) -> DataFrame:
-    """Per-user exact top-1 cosine linkage over a (shared, ideally
-    persisted) ``behavior_profiles`` frame — the body of
-    ``id_behavior_linkage``, extracted so the eval/index queries
-    (``id_linkage_lsh_recall_eval``, ``id_linkage_banded``) reuse ONE
-    persisted profile frame for both their candidate tier and this
-    exact tier instead of re-deriving it from raw events.
+    """Per-user exact top-1 cosine linkage over a ``behavior_profiles``
+    frame — the body of ``id_behavior_linkage``, shared with the
+    eval/index queries (``id_linkage_lsh_recall_eval``,
+    ``id_linkage_banded``) so they reuse one profile frame for both their
+    candidate tier and this exact tier.
 
-    Plan shape (r12 optimization round): the probe side is pre-clustered
-    by ``user_id`` ONCE, and everything downstream rides that single
-    exchange (guide §2.4 "two operations keyed the same way share one
-    exchange"):
-
-    - the cell join broadcasts the build side, so the probe side's
-      HashPartitioning(user_id) survives the join;
-    - partitioning on user_id satisfies the clustering requirement of
-      the (user_id, match_id) dot aggregate — every pair row a task
-      produces is aggregated IN that task, so the Σ cell² pair space
-      (~50M rows at sf0.1) never crosses an exchange. The r11 shape
-      aggregated pairs keyed (user_id, match_id) across a shuffle whose
-      map-side partials barely reduced (a pair's shared cells scatter
-      over tasks ⇒ ~1 row in, ~1 row out), shuffling ~the full pair
-      space, then paid a second full exchange + sort for the window
-      rank;
-    - the norm joins are broadcasts (vertex-sized dimension), preserving
-      the partitioning again;
-    - the per-user top-1 is ONE struct-min aggregate — min over
-      (-cosine, match_id) is exactly (cosine DESC, match_id ASC), the
-      previous row_number ordering — which the same partitioning also
-      satisfies, replacing the rank window's exchange + O(n log n) sort
-      with a hash fold.
-
-    Measured at sf0.1 (median-of-5, same session): 2 exchanges + window
-    sort → 1 slim exchange; see OPTIMIZATION_r12.md. Determinism
-    unchanged: the cosine expression is bit-identical, negation is exact
-    (cosine > 0 always: integer dots ≥ 1), and struct-min tie-breaks on
-    match_id exactly as the rank's ASC tiebreaker did."""
-    norms = prof.groupBy("user_id").agg(
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("n2"),
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-    )
-    dots = _cell_dots(prof, "user_id", "match_id", include_shared=True)
-    na = norms.alias("na")
-    nb = norms.alias("nb")
-    d = dots.alias("d")
-    scored = (
-        d.join(
-            F.broadcast(na), F.col("d.user_id") == F.col("na.user_id")
-        )
-        .join(F.broadcast(nb), F.col("d.match_id") == F.col("nb.user_id"))
-        .select(
-            F.col("d.user_id").alias("user_id"),
-            F.col("d.match_id").alias("match_id"),
-            F.col("na.n_cells").alias("n_cells"),
-            F.col("d.shared_cells").alias("shared_cells"),
-            F.col("d.dot").alias("dot"),
-            (
-                F.col("d.dot")
-                / (F.sqrt(F.col("na.n2")) * F.sqrt(F.col("nb.n2")))
-            ).alias("cosine"),
-        )
-    )
-    best = scored.groupBy("user_id").agg(
-        F.min(
-            F.struct(
-                (-F.col("cosine")).alias("nc"),
-                F.col("match_id").alias("match_id"),
-                F.col("n_cells").alias("n_cells"),
-                F.col("shared_cells").alias("shared_cells"),
-                F.col("dot").alias("dot"),
-            )
-        ).alias("s")
-    )
-    return best.select(
-        "user_id",
-        F.col("s.match_id").alias("match_id"),
-        F.col("s.n_cells").alias("n_cells"),
-        F.col("s.shared_cells").alias("shared_cells"),
-        F.col("s.dot").alias("dot"),
-        (-F.col("s.nc")).alias("cosine"),
+    Plan shape: the profile rows are collected once into a dense
+    (user × cell) count matrix and every user's best match comes out of
+    one integer block product (operators/blocktopk.py) — the cell pair
+    join, the norm joins and the argmax aggregate it replaces did the
+    same exact arithmetic one pair row at a time. Determinism: BIGINT
+    dots and norms, one pinned cosine expression, ties to the smaller
+    ``match_id``."""
+    return _profile_topk(prof, 1).select(
+        F.col("qid").alias("user_id"),
+        F.col("cid").alias("match_id"),
+        "n_cells",
+        "shared_cells",
+        "dot",
+        "cosine",
     )
 
 
@@ -1910,6 +1793,48 @@ def _lnk_sign() -> F.Column:
         <= "7",
         F.lit(1),
     ).otherwise(F.lit(-1))
+
+
+def _lnk_projections(prof: DataFrame, n_bits: int) -> DataFrame:
+    """(user_id, pn, pr): each user's mean-centred profile projected on
+    ``n_bits`` seeded ±1 planes, in exact integers (centering multiplied
+    through by the user count U).
+
+    The sign is a pure function of (pn, hod, event_type), so its table is
+    built once (cells × planes rows, one md5 each) and broadcast-joined
+    in, and the plane-independent (c·U − s) term is projected before the
+    plane fan-out. The profile rows cross one slim exchange on user_id
+    ahead of the fan-out, which every per-user aggregate after it rides
+    with no further exchange; integer sums are bit-exact under any
+    partitioning."""
+    spark = prof.sparkSession
+    u = prof.select(F.countDistinct("user_id").cast("long").alias("u"))
+    cellsum = prof.groupBy("hod", "event_type").agg(F.sum("c").cast("long").alias("s"))
+    planes = spark.range(1, n_bits + 1).select(F.col("id").cast("long").alias("pn"))
+    signs = (
+        cellsum.select("hod", "event_type")
+        .crossJoin(F.broadcast(planes))
+        .withColumn("sgn", _lnk_sign())
+    )
+    width = _cell_pair_width(
+        prof.count(), int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    )
+    centered = (
+        prof.repartition(width, "user_id")
+        .join(F.broadcast(cellsum), ["hod", "event_type"])
+        .crossJoin(F.broadcast(u))
+        .select(
+            "user_id",
+            "hod",
+            "event_type",
+            (F.col("c") * F.col("u") - F.col("s")).alias("ctr"),
+        )
+    )
+    return (
+        centered.join(F.broadcast(signs), ["hod", "event_type"])
+        .groupBy("user_id", "pn")
+        .agg(F.sum(F.col("ctr") * F.col("sgn")).alias("pr"))
+    )
 
 
 @register(
@@ -1995,62 +1920,10 @@ def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself. Determinism: integer-scaled centering keeps projections
     exact BIGINT sums (order-free); recall/ratio are pinned divisions
     of exact counts — no rounding anywhere."""
-    # ~12 consumers across the banded tier, the exact tier
-    # (_exact_linkage — one shared frame, r11-advice dedup) and the
-    # recall join: eagerly CHECKPOINT the narrow profile frame so every
-    # branch reads a materialized leaf — with persist the r12 PLANS
-    # audit printed the profile build once per InMemoryTableScan (78
-    # flagged exchanges for ~15 executed); the checkpoint makes the
-    # printed plan match what actually runs (eval-only query, lineage
-    # truncation is the documented trade)
+    # the projection tier and the exact tier both read the profile
+    # frame: checkpoint it once, so each reads a materialized leaf
     prof = materialize(behavior_profiles(load_table(spark, sf_dir, "events")))
-    u = prof.select(F.countDistinct("user_id").cast("long").alias("u"))
-    cellsum = prof.groupBy("hod", "event_type").agg(
-        F.sum("c").cast("long").alias("s")
-    )
-    planes = spark.range(1, _LNK_BITS + 1).select(
-        F.col("id").cast("long").alias("pn")
-    )
-    # r12 optimization: the ±1 sign is a pure function of (pn, hod,
-    # event_type) — ≤ cells × planes distinct values — but the r11 shape
-    # evaluated its md5 on every (profile row × plane) pair. Precompute
-    # the sign TABLE once (cells × planes rows, one md5 each) and
-    # broadcast-join it in; the per-pair work drops to one long multiply.
-    # The (c·U − s) centering term is likewise plane-independent, so it
-    # is projected BEFORE the plane blow-up (guide §2.3 "project before
-    # the exchange" applied to a broadcast fan-out).
-    signs = (
-        cellsum.select("hod", "event_type")
-        .crossJoin(F.broadcast(planes))
-        .withColumn("sgn", _lnk_sign())
-    )
-    # r13 optimization (the id_linkage_banded shape): one slim
-    # profile-row exchange on user_id ahead of the plane fan-out — the
-    # projection AND band-signature aggregates both ride it with no
-    # further exchange; integer sums are bit-exact under any
-    # partitioning.
-    centered = (
-        prof.repartition(
-            _cell_pair_width(
-                prof.count(),
-                int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            ),
-            "user_id",
-        )
-        .join(F.broadcast(cellsum), ["hod", "event_type"])
-        .crossJoin(F.broadcast(u))
-        .select(
-            "user_id",
-            "hod",
-            "event_type",
-            (F.col("c") * F.col("u") - F.col("s")).alias("ctr"),
-        )
-    )
-    proj = (
-        centered.join(F.broadcast(signs), ["hod", "event_type"])
-        .groupBy("user_id", "pn")
-        .agg(F.sum(F.col("ctr") * F.col("sgn")).alias("pr"))
-    )
+    proj = _lnk_projections(prof, _LNK_BITS)
     bits_per = _LNK_BITS // _LNK_BANDS
     sig = (
         proj.withColumn(
@@ -2091,11 +1964,10 @@ def id_linkage_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted copy via id_behavior_linkage(spark, sf_dir) — re-derived
     # the profile aggregate from raw events; r11-advice plan dedup)
     #
-    # r12 optimization: materialize both tiers once — `exact` feeds two
-    # branches (n_users + the recall join) and `cand` feeds two
-    # (n_candidates + the recall join); without the cut each branch
-    # re-ran its full pair pass (the exact tier's Σ cell² join twice,
-    # the band join twice). Both frames are user/candidate-sized.
+    # materialize both tiers once — `exact` feeds two branches (n_users +
+    # the recall join) and `cand` feeds two (n_candidates + the recall
+    # join); without the cut each branch re-ran its pair pass. Both
+    # frames are user/candidate-sized.
     exact = materialize(
         _exact_linkage(prof)
         .select(F.col("user_id").alias("u1"), F.col("match_id").alias("u2"))
@@ -2278,54 +2150,7 @@ def id_linkage_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intended to stay cached for the process (narrow frame)
     prof = behavior_profiles(load_table(spark, sf_dir, "events")).persist()
     u = prof.select(F.countDistinct("user_id").cast("long").alias("u"))
-    cellsum = prof.groupBy("hod", "event_type").agg(
-        F.sum("c").cast("long").alias("s")
-    )
-    planes = spark.range(1, _LNK_SKETCH_BITS + 1).select(
-        F.col("id").cast("long").alias("pn")
-    )
-    # r12 optimization (same as id_linkage_lsh_recall_eval): signs are a
-    # pure function of (pn, hod, event_type) — precompute the cells ×
-    # 512-plane sign table once (one md5 each) instead of evaluating md5
-    # on all ~40M (profile row × plane) pairs at sf0.1, and project the
-    # plane-independent (c·U − s) centering before the 512× fan-out.
-    signs = (
-        cellsum.select("hod", "event_type")
-        .crossJoin(F.broadcast(planes))
-        .withColumn("sgn", _lnk_sign())
-    )
-    # r13 optimization (guide §2.4 "share one exchange"): pre-cluster
-    # the PROFILE rows by user_id once, BEFORE the 512× plane fan-out —
-    # hash(user_id) satisfies the clustering requirement of all three
-    # stacked aggregates below (user×plane projections, user×word
-    # packing, per-user signature), so the ~40M fan-out rows at sf0.1
-    # are projected, multiplied and fully aggregated inside one stage
-    # with ZERO exchanges after this slim profile-row one (the r12
-    # shape partial-aggregated the fan-out, then exchanged at
-    # (user, plane) grain and twice more at word/user grain). Integer
-    # sums: bit-exact under any partitioning.
-    centered = (
-        prof.repartition(
-            _cell_pair_width(
-                prof.count(),
-                int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            ),
-            "user_id",
-        )
-        .join(F.broadcast(cellsum), ["hod", "event_type"])
-        .crossJoin(F.broadcast(u))
-        .select(
-            "user_id",
-            "hod",
-            "event_type",
-            (F.col("c") * F.col("u") - F.col("s")).alias("ctr"),
-        )
-    )
-    proj = (
-        centered.join(F.broadcast(signs), ["hod", "event_type"])
-        .groupBy("user_id", "pn")
-        .agg(F.sum(F.col("ctr") * F.col("sgn")).alias("pr"))
-    )
+    proj = _lnk_projections(prof, _LNK_SKETCH_BITS)
     words = (
         proj.withColumn(
             "w", F.expr(f"CAST((pn - 1) DIV {_LNK_WORD_BITS} AS BIGINT)")
@@ -2359,9 +2184,8 @@ def id_linkage_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = sig.alias("a")
     b = sig.alias("b")
     # r12 optimization: unrolled XOR-popcount over the 16 words inside a
-    # CASE WHEN guard (the plans/similarity._dot pattern — higher-order
-    # lambdas evaluate interpreted, the guarded unrolled chain compiles
-    # through codegen); integer sums are order-free so the fold is
+    # CASE WHEN guard (higher-order lambdas evaluate interpreted, the
+    # guarded unrolled chain compiles through codegen); integer sums are order-free so the fold is
     # exactly equivalent, and a non-16-word signature falls back to the
     # general HOF form unchanged.
     _wa, _wb = F.col("a.wds"), F.col("b.wds")
@@ -2543,15 +2367,13 @@ def id_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity pipeline, downstream of ID1's per-user best match and
     ID2's index tier.
 
-    Plan shape: the pair stage is ID1's sparse cell join (only pairs
-    sharing ≥1 profile cell materialize, map-side combined on the pair
-    key; norms broadcast back); one user-keyed rank cuts top-K, and
-    the mutual filter is a self-join of the K·U-row kNN frame —
-    edge-bounded from there on (degree ≤ K by construction, so the
-    closure never sees corpus-sized data; the K=2 operating point and
-    the measured degeneracy of both the τ-floor and K=3 alternatives
-    are in the banner comment above). The
-    components use the shared HashMin operator (operators/graph.py —
+    Plan shape: the top-K and the mutual filter are ID1's integer block
+    product (operators/blocktopk.py; pairs sharing no profile cell are
+    never candidates), edge-bounded from there on (degree ≤ K by
+    construction, so the closure never sees corpus-sized data; the K=2
+    operating point and the measured degeneracy of both the τ-floor and
+    K=3 alternatives are in the banner comment above). The components
+    use the shared HashMin operator (operators/graph.py —
     O(diameter) rounds, checkpoint-truncated; star variant for
     adversarial diameters per SCALE.md r6). The 100 TB candidate path
     is ID2's signature index feeding this same rank.
@@ -2563,38 +2385,12 @@ def id_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ssidentity_spark.operators.graph import connected_components
 
     prof = behavior_profiles(load_table(spark, sf_dir, "events")).persist()
-    norms = prof.groupBy("user_id").agg(
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("n2")
-    )
-    # r12 optimization (the _exact_linkage shape), r13: shared via
-    # _cell_dots — pre-clustered probe side + broadcast build under the
-    # size guard, shuffle-join fallback past it (ADVICE r12); the top-K
-    # rank window below still rides the single u1 exchange.
-    dots = _cell_dots(prof, "u1", "u2")
-    na = norms.select(F.col("user_id").alias("u1"), F.col("n2").alias("na2"))
-    nb = norms.select(F.col("user_id").alias("u2"), F.col("n2").alias("nb2"))
-    w = Window.partitionBy("u1").orderBy(
-        F.desc(F.col("dot") / (F.sqrt("na2") * F.sqrt("nb2"))), F.asc("u2")
-    )
-    knn = (
-        dots.join(F.broadcast(na), "u1")
-        .join(F.broadcast(nb), "u2")
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= _LNK_MUTUAL_K)
-        .select("u1", "u2")
-    )
-    # r12 optimization pass 2: materialize the post-rank kNN frame (K·U
-    # rows, two longs each) before the mutual filter — `rev`'s renamed
-    # columns defeat ReuseExchange, so the lazy form re-ran the full
-    # Σ cell² pair aggregation + window for the semi-join's build side.
-    # Interleaved A/B at sf0.1 (4 rounds): 19.8 s → 12.2 s median
-    # (1.6×), exceptAll-identical output. (The same cut LOST in
-    # graph_kcore, whose build sits behind sym.cache() — measured both.)
-    knn = materialize(knn)
-    rev = knn.select(F.col("u2").alias("u1"), F.col("u1").alias("u2"))
+    # mutual top-K pairs, each once (u1 < u2); the kNN frame is K·U rows
+    # and every step after it is edge-bounded
     pairs = (
-        knn.join(rev, ["u1", "u2"], "left_semi")
-        .where(F.col("u1") < F.col("u2"))
+        _profile_topk(prof, _LNK_MUTUAL_K, mutual=True)
+        .where(F.col("qid") < F.col("cid"))
+        .select(F.col("qid").alias("u1"), F.col("cid").alias("u2"))
     )
     labels = connected_components(pairs, src="u1", dst="u2")
     users = prof.select("user_id").distinct()

@@ -441,39 +441,21 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     of synchronous weighted label propagation over the mutual-kNN cosine
     graph — argmax-weight label adoption, smallest-label tie-break.
 
-    Plan shape: the kNN edge build here is the exact brute tier (fine at
-    gate scale; at 100 TB candidate generation swaps to
-    :func:`ivf_knn_edges` — TESTED full-probe-identical in r11, with the
+    Plan shape: the kNN edge build here is the exact block tier
+    (operators/blocktopk.py; fine at gate scale; at 100 TB candidate
+    generation swaps to :func:`ivf_knn_edges` — TESTED full-probe-identical in r11, with the
     partial-probe recall/partition-fidelity trade measured in SCALE.md —
     with LPA unchanged), then two keyed exchanges per round
     (operators/graph.py:label_propagation), checkpoint-truncated. The
     oracle replays the identical recurrence as unrolled CTEs, so the
     training loop itself is hash-gated."""
+    from ssidentity_spark.operators.blocktopk import block_topk
     from ssidentity_spark.operators.graph import label_propagation
-    from ssidentity_spark.plans.similarity import _dot, _norm_vec
+    from ssidentity_spark.plans.similarity import _vectors
 
     em = load_table(spark, sf_dir, "embeddings")
-    corpus = _norm_vec(em)
-    nbrs = corpus.select(
-        F.col("vec_id").alias("nbr"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    knn = (
-        corpus.join(F.broadcast(nbrs), F.col("vec_id") != F.col("nbr"))
-        .select(
-            "vec_id",
-            "nbr",
-            F.round(
-                _dot(F.col("v"), F.col("cv"))
-                / (F.col("nrm") * F.col("cnrm")),
-                6,
-            ).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _LPA_KNN)
-        .select("vec_id", "nbr", F.lit(1).alias("w"))
+    knn = block_topk(_vectors(em), _LPA_KNN).select(
+        F.col("qid").alias("vec_id"), F.col("cid").alias("nbr"), F.lit(1).alias("w")
     )
     labels = label_propagation(knn, src="vec_id", dst="nbr", iters=_LPA_ITERS)
     sizes = labels.groupBy("label").agg(
@@ -610,7 +592,8 @@ def ivf_knn_edges(
     assumed."""
     import pandas as pd
 
-    from ssidentity_spark.plans.similarity import _dot, _norm_vec
+    from ssidentity_spark.operators.blocktopk import cos6
+    from ssidentity_spark.plans.similarity import _norm_vec
 
     spark = corpus.sparkSession
     # pass-through only when BOTH derived columns are present (a frame
@@ -658,11 +641,7 @@ def ivf_knn_edges(
         .select(
             F.col("p.qid").alias("vec_id"),
             F.col("c.vec_id").alias("nbr"),
-            F.round(
-                _dot(F.col("q.qv"), F.col("c.v"))
-                / (F.col("q.qn") * F.col("c.nrm")),
-                6,
-            ).alias("cos"),
+            cos6("q.qv", "q.qn", "c.v", "c.nrm").alias("cos"),
         )
         # a vector probing 2 cells can meet the same candidate once per
         # probe only if cell assignment were ambiguous — it is not (rn=1
@@ -763,36 +742,28 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping >= {_KCORE_K} mutual neighbors after {_KCORE_ROUNDS} rounds
     of recursive peeling, with each survivor's within-core degree.
 
-    Plan shape: the mutual-kNN build is the exact brute tier (gate
-    scale; at 100 TB candidates come from :func:`ivf_knn_edges`, same
-    trade as G3). Each peel round is two keyed SEMI-joins of the edge
-    list against the shrinking alive set plus one count aggregate —
-    alive only ever SHRINKS, so round cost is monotonically
-    non-increasing; ``iterate`` materializes each round and ends the loop
-    once the observed alive count stops changing. Peeling is pure integer degree counting: no
+    Plan shape: the mutual-kNN build is the exact block tier
+    (operators/blocktopk.py; at 100 TB candidates come from
+    :func:`ivf_knn_edges`, same trade as G3). Each peel round is one
+    semi-join of the edge endpoints against one broadcast of the
+    shrinking alive set plus two count aggregates — alive only ever
+    SHRINKS, so round cost is monotonically non-increasing; ``iterate``
+    materializes each round and ends the loop once the observed alive
+    count stops changing. Peeling is pure integer degree counting: no
     float anywhere after the 6-dp kNN ranks, so every round sits under
     the driver hash exactly."""
-    # shared mutual-kNN edge builder (G4/G6 — _mutual_knn_edges)
-    em = load_table(spark, sf_dir, "embeddings")
-    # r13 (VERDICT r12 ask #8): cache the edge frame at a width derived
-    # from its size (~2M edges/partition, floor 1 — the pagerank
-    # derivation) instead of whatever width the kNN window left behind.
-    # Every peel round runs two semi-joins + an aggregate against this
-    # cache; at gate scale the derived width is 1, cutting the ~32-task
-    # waves per round to single-task stages (interleaved A/B ×2
-    # sessions: medians 5.69→5.55 and 6.79→5.89 s, narrow wins 6/8
-    # rounds, outputs identical); at 10⁹ edges the same formula keeps
-    # thousands of partitions. The width comes from the cheap UPPER
-    # bound |vectors|·K ≥ |mutual edges| (a parquet row-count scan), so
-    # the edge pipeline is never built twice just to size its cache.
-    n_vec = em.count()
-    width = max(1, (n_vec * _KCORE_KNN) // 2_000_000)
-    sym = _mutual_knn_edges(em).repartition(width, "u").cache()
+    # cached hash-partitioned on u at the session width, so a peel
+    # round's counts need no exchange (see _alive_edges)
+    width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    sym = (
+        _mutual_knn_edges(load_table(spark, sf_dir, "embeddings"))
+        .repartition(width, "u")
+        .cache()
+    )
 
     def peel(alive: DataFrame, _m: dict) -> DataFrame:
         deg = (
-            sym.join(alive, "u", "left_semi")
-            .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
+            _alive_edges(sym, alive)
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -811,15 +782,29 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recompute the full O(n²) kNN build at action time — the cache only
     # ever benefited the peel rounds). The eager checkpoint is small
     # (core edges only) and truncates the sym lineage for good.
-    core_edges = materialize(
-        sym.join(alive, "u", "left_semi")
-        .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
-    )
+    core_edges = materialize(_alive_edges(sym, alive))
     sym.unpersist()
     return (
         core_edges.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
         .select(F.col("u").alias("vec_id"), "core_degree")
+    )
+
+
+def _alive_edges(sym: DataFrame, alive: DataFrame) -> DataFrame:
+    """The edges of ``sym`` with both ends in ``alive``, through ONE
+    broadcast of ``alive``: each edge meets it once per endpoint and
+    survives with both. (Two semi-joins, one per endpoint, broadcast
+    ``alive`` twice: a checkpointed leaf joined to itself never reuses
+    the other side's exchange.) ``sym`` hash-partitioned on ``u`` keeps
+    the per-edge count free of any exchange."""
+    ends = sym.select("u", "v", F.explode(F.array("u", "v")).alias("x"))
+    return (
+        ends.join(F.broadcast(alive.select(F.col("u").alias("x"))), "x", "left_semi")
+        .groupBy("u", "v")
+        .count()
+        .filter(F.col("count") == 2)
+        .select("u", "v")
     )
 
 
@@ -994,7 +979,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, within a fixed round budget — unweighted single-source
     shortest paths as frontier BFS.
 
-    Plan shape: the mutual edge build is graph_kcore's (exact brute
+    Plan shape: the mutual edge build is graph_kcore's (exact block
     tier at gate scale; ivf_knn_edges is the 100 TB candidate path,
     same trade as G3/G4), checkpointed once and read by every round.
     Each round is ONE keyed join of the edge list against the current
@@ -1047,38 +1032,12 @@ def _bfs_round(sym: DataFrame, reached: DataFrame, m: dict) -> DataFrame:
 
 
 def _mutual_knn_edges(em: DataFrame) -> DataFrame:
-    """The mutual-kNN symmetric edge list shared by graph_kcore and
-    graph_bfs_hops (exact brute cosine tier, 6-dp ranks, K =
-    _KCORE_KNN)."""
-    from ssidentity_spark.plans.similarity import _dot, _norm_vec
+    """The mutual-kNN symmetric edge list (u, v) shared by graph_kcore and
+    graph_bfs_hops: K = _KCORE_KNN by exact 6-dp cosine, ties to the
+    smaller id, each edge once per direction."""
+    from ssidentity_spark.operators.blocktopk import block_topk
+    from ssidentity_spark.plans.similarity import _vectors
 
-    corpus = _norm_vec(em)
-    nbrs = corpus.select(
-        F.col("vec_id").alias("nbr"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    knn = (
-        corpus.join(F.broadcast(nbrs), F.col("vec_id") != F.col("nbr"))
-        .select(
-            "vec_id",
-            "nbr",
-            F.round(
-                _dot(F.col("v"), F.col("cv"))
-                / (F.col("nrm") * F.col("cnrm")),
-                6,
-            ).alias("cos"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KCORE_KNN)
-        .select(F.col("vec_id").alias("u"), F.col("nbr").alias("v"))
-    )
-    return (
-        knn.alias("a")
-        .join(
-            knn.alias("b"),
-            (F.col("a.u") == F.col("b.v")) & (F.col("a.v") == F.col("b.u")),
-        )
-        .select(F.col("a.u").alias("u"), F.col("a.v").alias("v"))
+    return block_topk(_vectors(em), _KCORE_KNN, mutual=True).select(
+        F.col("qid").alias("u"), F.col("cid").alias("v")
     )

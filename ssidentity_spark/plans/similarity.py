@@ -1,11 +1,11 @@
 """Similarity search over the ``embeddings`` table (SURVEY §2.9 U5 +
 BASELINE.json north star).
 
-- ``sim_topk_bruteforce`` — exact top-k cosine for a query subset: the query
-  side is tiny → broadcast nested-loop against the corpus, dot products as
-  native ``zip_with``/``aggregate`` expressions (JVM-side, no UDF), ranked
-  per-query with a window. At 100 TB the corpus side stays partitioned and
-  is scanned once; cost is O(|corpus| × |queries|) with |queries| broadcast.
+- ``sim_topk_bruteforce`` — exact top-k cosine for a query subset: one
+  block product of the query rows against the corpus matrix
+  (operators/blocktopk.py), which keeps each query's top k in the same
+  task. Cost is O(|corpus| × |queries|); past the operator's broadcast
+  budget the corpus is split into blocks whose partial top-k lists merge.
 - ``sim_lsh_bucketed`` — the scale path: deterministic random-projection
   signs bucket the corpus; queries only score candidates within their own
   bucket, turning brute force into a bucket-local search (recall < 1 by
@@ -22,6 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table, spread
+from ssidentity_spark.operators.blocktopk import block_topk, cos6, top_rows
 from ssidentity_spark.operators.iterate import materialize
 from ssidentity_spark.registry import register
 
@@ -34,34 +35,74 @@ PQ_M, PQ_K, PQ_ITERS = 8, 16, 5
 RERANK_CANDIDATES = 100
 
 
-def _norm_vec(em: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def _norm_vec(em: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, v, nrm): the embedding widened to doubles and its
+    fold-ordered norm."""
     # spread first: everything downstream of this frame (norms here, then
     # per-row dot products / projections / cell assignments) is rows ×
     # vector-dim work, and a small embeddings file scans as ONE partition
     # — io.spread is a no-op once the scan is already byte-wide
     v = F.transform("embedding", lambda x: x.cast("double"))
     return spread(em).select(
-        F.col(id_col),
+        "vec_id",
+        *keep,
         v.alias("v"),
         F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)).alias("nrm"),
     )
 
 
-def _dot_hof(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+def _probed(cells: DataFrame, probes: DataFrame, *qkeep: str) -> DataFrame:
+    """IVF candidates: ``probes`` (query_id, cell, ...) joined to the other
+    vectors of each probed cell of ``cells`` (vec_id, v, nrm, cell, ...),
+    with the query's own vector as ``qv``/``qnrm`` and its ``qkeep``
+    columns prefixed ``q``."""
+    qv = cells.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+        *(F.col(c).alias("q" + c) for c in qkeep),
+    )
+    return (
+        cells.join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(qv), "query_id")
+    )
 
 
-# _dot stays the higher-order-function fold. A guarded 64-term unrolled
-# chain (CASE WHEN size==64 THEN a0*b0 + ...) won an ISOLATED microbench
-# 3.4x (4M 64-dim pairs through a bare projection), but interleaved A/B of
-# the REAL queries reversed the verdict: sim_topk_bruteforce 0.59-0.97 s
-# (HOF) vs 1.03-1.53 s (unrolled), dedup_semantic_cells 0.86-1.91 vs
-# 1.76-2.57, graph_kcore a wash — the generated-code compile/JIT cost of
-# the 64-term chain inside each consumer's whole-stage-codegen context
-# swamps the per-row win at gate-scale row counts. Both forms are
-# bit-exact (same fold order, verified == over all 4M sf0.1 pairs), so
-# this is purely a measured performance call at bench scale.
-_dot = _dot_hof
+def _vectors(em: DataFrame) -> DataFrame:
+    """The ``(id, v)`` frame block_topk reads, straight off
+    ``embeddings``: the block widens each float to a double and folds
+    the norms itself, so no Spark-side cast, norm or spread runs."""
+    return em.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+
+
+def pinned_centroids(base: DataFrame) -> DataFrame:
+    """The pinned IVF model (cid, cv, cnrm): the ``vec_id % PINNED_CENT_MOD
+    == 0`` subset of a ``_norm_vec`` frame."""
+    return base.filter(F.col("vec_id") % PINNED_CENT_MOD == 0).select(
+        F.col("vec_id").alias("cid"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("cnrm"),
+    )
+
+
+def nearest_cells(base: DataFrame, cent: DataFrame, k: int) -> DataFrame:
+    """``base`` (vec_id, v, nrm, ...) with each vector's ``k`` nearest
+    centroids of ``cent`` (cid, cv, cnrm) by 6-dp cosine, ties to the
+    smaller cid: base's columns plus ``cid`` and its rank ``rn``. A
+    cross join against the broadcast model, not a block product: with a
+    model of a few dozen centroids the JVM fold beats a Python task's
+    fixed cost (sf0.1 sim_ivf_pinned_topk: 0.51 s here, 0.92 s through
+    block_topk)."""
+    scored = base.crossJoin(F.broadcast(cent)).withColumn(
+        "cell_cos", cos6("v", "nrm", "cv", "cnrm")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cell_cos"), F.asc("cid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("cv", "cnrm", "cell_cos")
+    )
 
 
 _DUCK_VEC = """
@@ -93,28 +134,10 @@ _DUCK_VEC = """
     bench=True,
 )
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    em = load_table(spark, sf_dir, "embeddings")
-    corpus = _norm_vec(em)
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos", "rnk")
+    corpus = _vectors(load_table(spark, sf_dir, "embeddings"))
+    top = block_topk(corpus, TOP_K, corpus.filter(F.col("id") < N_QUERIES))
+    return top.select(
+        F.col("qid").alias("query_id"), F.col("cid").alias("neighbor_id"), "cos", "rnk"
     )
 
 
@@ -267,18 +290,11 @@ def lsh_topk(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos"),
+            cos6("qv", "qnrm", "v", "nrm").alias("cos"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    return top_rows(scored, top_k).select("query_id", "neighbor_id", "cos", "rnk")
 
 
 N_FLIPS = 3  # multi-probe: flip the 3 lowest-margin sign bits per query
@@ -665,60 +681,29 @@ def sim_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign → probe → exact-cosine pipeline SQL-expressible and lets the
     driver hash-verify the search machinery the trained variants reuse.
 
-    Scale shape (identical to operators/ivf.py): assignment is the
-    inherent O(corpus × k) broadcast pass (centroid set is model-sized),
-    one corpus shuffle for the per-vector argmax window, then the probe
-    join prunes scoring to the ≤ n_probes cells each query selected —
+    Scale shape: assignment is the inherent O(corpus × k) pass against
+    the broadcast centroid set (:func:`nearest_cells`; it is
+    model-sized) with one per-vector argmax window, then the probe join
+    prunes scoring to the ≤ n_probes cells each query selected —
     candidates, not corpus, reach the exact-cosine stage. Cosines are
     rounded to 6 dp before every rank on both engines; ties break on id.
     """
     em = load_table(spark, sf_dir, "embeddings")
     base = _norm_vec(em)
-    cent = base.filter(F.col("vec_id") % PINNED_CENT_MOD == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        "cid",
-        F.round(
-            _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 6
-        ).alias("cell_cos"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cell_cos"), F.asc("cid"))
-    ranked = scored.withColumn("rn", F.row_number().over(w_assign))
+    cent = pinned_centroids(base)
+    ranked = nearest_cells(base, cent, N_PINNED_PROBES)
     cells = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "v", "nrm", F.col("cid").alias("cell")
     )
     probes = ranked.filter(
         (F.col("vec_id") < N_QUERIES) & (F.col("rn") <= N_PINNED_PROBES)
     ).select(F.col("vec_id").alias("query_id"), F.col("cid").alias("cell"))
-    qv = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
+    cand = _probed(cells, probes).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cos6("qv", "qnrm", "v", "nrm").alias("cos"),
     )
-    cand = (
-        cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    return top_rows(cand, TOP_K).select("query_id", "neighbor_id", "cos", "rnk")
 
 
 @register(
@@ -1006,13 +991,7 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rare labels; exactness is by construction and the oracle recomputes
     the whole filtered search."""
     em = load_table(spark, sf_dir, "embeddings")
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    base = spread(em).select(
-        "vec_id",
-        "label",
-        v.alias("v"),
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)).alias("nrm"),
-    )
+    base = _norm_vec(em, "label")
     queries = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),
@@ -1026,15 +1005,10 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         F.col("qlabel").alias("label"),
         F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("cos"),
+        cos6("qv", "qnrm", "v", "nrm").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "label", "neighbor_id", "cos", F.col("rnk").cast("int").alias("rnk"))
+    return top_rows(scored, TOP_K).select(
+        "query_id", "label", "neighbor_id", "cos", F.col("rnk").cast("int").alias("rnk")
     )
 
 
@@ -1051,52 +1025,21 @@ def filtered_ivf_candidates(em: DataFrame, n_probes: int) -> DataFrame:
     big to scan). Split from the rank stage, which ranks only what this
     scores; SCALE.md "r9: filtered ANN" gives that count per probe
     setting."""
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    base = spread(em).select(
-        "vec_id",
-        "label",
-        v.alias("v"),
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)).alias("nrm"),
-    )
-    cent = base.filter(F.col("vec_id") % PINNED_CENT_MOD == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "label",
-        "v",
-        "nrm",
-        "cid",
-        F.round(
-            _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 6
-        ).alias("cell_cos"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cell_cos"), F.asc("cid")
-    )
+    base = _norm_vec(em, "label")
+    cent = pinned_centroids(base)
     # THREE consumers downstream (cells feeds the probe join AND qv;
     # probes reads ranked again) — pin one materialization of the
     # O(corpus × centroids) assignment, the query's most expensive
     # subtree (the containment-pairs lesson)
-    ranked = scored.withColumn("rn", F.row_number().over(w_assign)).persist()
+    ranked = nearest_cells(base, cent, n_probes).persist()
     cells = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "label", "v", "nrm", F.col("cid").alias("cell")
     )
     probes = ranked.filter(
         (F.col("vec_id") < N_QUERIES) & (F.col("rn") <= n_probes)
     ).select(F.col("vec_id").alias("query_id"), F.col("cid").alias("cell"))
-    qv = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
     return (
-        cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qv), "query_id")
+        _probed(cells, probes, "label")
         # the FILTER composes with the index here: same-label only, and
         # it prunes before any exact cosine is computed
         .filter(F.col("label") == F.col("qlabel"))
@@ -1104,10 +1047,7 @@ def filtered_ivf_candidates(em: DataFrame, n_probes: int) -> DataFrame:
             "query_id",
             F.col("qlabel").alias("label"),
             F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")),
-                6,
-            ).alias("cos"),
+            cos6("qv", "qnrm", "v", "nrm").alias("cos"),
         )
     )
 
@@ -1115,20 +1055,8 @@ def filtered_ivf_candidates(em: DataFrame, n_probes: int) -> DataFrame:
 def filtered_ivf_topk(em: DataFrame, n_probes: int) -> DataFrame:
     """Rank stage over :func:`filtered_ivf_candidates` — the shipped
     filtered-IVF search."""
-    cand = filtered_ivf_candidates(em, n_probes)
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "label",
-            "neighbor_id",
-            "cos",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
+    return top_rows(filtered_ivf_candidates(em, n_probes), TOP_K).select(
+        "query_id", "label", "neighbor_id", "cos", F.col("rnk").cast("int").alias("rnk")
     )
 
 
@@ -1276,40 +1204,28 @@ def sim_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the harness the ANN tiers (LSH/IVF/IVFPQ) are tuned
     against; having it AS a query means index regressions show up in a
     hash-gated artifact, not just in offline notebooks. Plan shape: the
-    scoring is the brute-force broadcast (queries tiny by construction),
-    the rank is one per-query window, the metrics one aggregate, and
-    label counts a broadcast-sized dimension. At 100 TB the eval set
+    scoring and the per-query top-k are one block product
+    (operators/blocktopk.py; queries tiny by construction), the metrics
+    one aggregate, and labels and label counts broadcast-sized
+    dimensions. At 100 TB the eval set
     stays a fixed sample — cost is O(|corpus| x |queries|) like
     sim_topk_bruteforce, with the ANN variants evaluated by swapping the
     ranking subtree."""
     em = load_table(spark, sf_dir, "embeddings")
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    base = spread(em).select(
-        "vec_id",
-        "label",
-        v.alias("v"),
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)).alias("nrm"),
-    )
-    queries = base.filter(F.col("vec_id") % _EVAL_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = base.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "qlabel",
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("label") == F.col("qlabel")).alias("rel"),
-        F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6).alias(
-            "cos"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    top = scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= _EVAL_K
+    corpus = _vectors(em)
+    labels = em.select("vec_id", "label")
+    ql = labels.select(F.col("vec_id").alias("qid"), F.col("label").alias("qlabel"))
+    cl = labels.select(F.col("vec_id").alias("cid"), "label")
+    top = (
+        block_topk(corpus, _EVAL_K, corpus.filter(F.col("id") % _EVAL_STRIDE == 0))
+        .join(F.broadcast(ql), "qid")
+        .join(F.broadcast(cl), "cid")
+        .select(
+            F.col("qid").alias("query_id"),
+            "qlabel",
+            (F.col("label") == F.col("qlabel")).alias("rel"),
+            "rnk",
+        )
     )
     m = top.groupBy("query_id", "qlabel").agg(
         F.sum(F.when(F.col("rel"), 1).otherwise(0)).cast("long").alias("hits"),
@@ -1485,24 +1401,8 @@ def sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/k, so the averages are hash-stable at 6 dp."""
     em = load_table(spark, sf_dir, "embeddings")
     base = _norm_vec(em)
-    cent = base.filter(F.col("vec_id") % PINNED_CENT_MOD == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        "cid",
-        F.round(
-            _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 6
-        ).alias("cell_cos"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cell_cos"), F.asc("cid")
-    )
-    ranked = scored.withColumn("rn", F.row_number().over(w_assign)).persist()
+    cent = pinned_centroids(base)
+    ranked = nearest_cells(base, cent, _CURVE_MAX_PROBES).persist()
     cells = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "v", "nrm", F.col("cid").alias("cell")
     )
@@ -1516,30 +1416,14 @@ def sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_probes", F.col("vec_id").alias("query_id"), F.col("cid").alias("cell")
         )
     )
-    qv = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cand = (
-        cells.join(F.broadcast(probes_all), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "n_probes",
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos"),
-        )
-    )
-    w_rank = Window.partitionBy("n_probes", "query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
+    cand = _probed(cells, probes_all).select(
+        "n_probes",
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cos6("qv", "qnrm", "v", "nrm").alias("cos"),
     )
     ivf_top = (
-        cand.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= TOP_K)
+        top_rows(cand, TOP_K, "n_probes", "query_id")
         .select("n_probes", "query_id", "neighbor_id")
         .withColumn("hit", F.lit(1))
     )
@@ -1671,7 +1555,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact candidate pool: greedy argmax of
     lam*rel - (1-lam)*max-sim-to-selected, vec_id tie-break.
 
-    Plan shape: the pool comes from the exact brute tier (swap for the
+    Plan shape: the pool comes from the exact block tier (swap for the
     IVF index at 100 TB — candidate generation is a parameter, the
     policy is unchanged); the pool and its pairwise-sim frame are
     query-bounded (pool^2 per query, never corpus-sized), and each of
@@ -1686,62 +1570,35 @@ def _mmr_pool(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     materialized: each is pool-bounded and read twice per greedy round."""
     em = load_table(spark, sf_dir, "embeddings")
     corpus = _norm_vec(em)
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = corpus.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("rel"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
+    ids = _vectors(em)
     # eager materialize, not persist: the greedy loop references this
     # frame 2x per round — truncating the lineage keeps round plans
     # constant-size (the pagerank/LPA convention) and the frame is
     # pool-bounded (queries x pool rows), so materialization is free
     cand = materialize(
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _MMR_POOL)
-        .select("query_id", "vec_id", "rel")
-    )
-    cv = corpus.select("vec_id", "v", "nrm")
-    a = cand.select("query_id", F.col("vec_id").alias("va")).join(
-        cv.select(
-            F.col("vec_id").alias("va"),
-            F.col("v").alias("av"),
-            F.col("nrm").alias("anrm"),
-        ),
-        "va",
-    )
-    b = cand.select("query_id", F.col("vec_id").alias("vb")).join(
-        cv.select(
-            F.col("vec_id").alias("vb"),
-            F.col("v").alias("bv"),
-            F.col("nrm").alias("bnrm"),
-        ),
-        "vb",
-    )
-    pc = (
-        a.join(b, "query_id")
-        .where(F.col("va") != F.col("vb"))
-        .select(
-            "query_id",
-            "va",
-            "vb",
-            F.round(
-                _dot(F.col("av"), F.col("bv"))
-                / (F.col("anrm") * F.col("bnrm")),
-                6,
-            ).alias("pcos"),
+        block_topk(ids, _MMR_POOL, ids.filter(F.col("id") < N_QUERIES)).select(
+            F.col("qid").alias("query_id"),
+            F.col("cid").alias("vec_id"),
+            F.col("cos").alias("rel"),
         )
     )
-    pc = materialize(pc)  # pool^2-bounded, like cand
+
+    def pool(x: str) -> DataFrame:  # (query_id, vx, xv, xnrm)
+        return cand.select("query_id", F.col("vec_id").alias("v" + x)).join(
+            corpus.select(
+                F.col("vec_id").alias("v" + x),
+                F.col("v").alias(x + "v"),
+                F.col("nrm").alias(x + "nrm"),
+            ),
+            "v" + x,
+        )
+
+    pc = materialize(  # pool^2-bounded, like cand
+        pool("a")
+        .join(pool("b"), "query_id")
+        .where(F.col("va") != F.col("vb"))
+        .select("query_id", "va", "vb", cos6("av", "anrm", "bv", "bnrm").alias("pcos"))
+    )
     return cand, pc
 
 

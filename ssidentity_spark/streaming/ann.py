@@ -29,16 +29,17 @@ input (the operator contract the driver's batch gate extends to here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table
+from ssidentity_spark.operators.blocktopk import cos6, dot
 from ssidentity_spark.plans.similarity import (
     N_PINNED_PROBES,
-    PINNED_CENT_MOD,
     TOP_K,
-    _dot,
     _norm_vec,
+    nearest_cells,
+    pinned_centroids,
 )
 
 # The model ships as a LITERAL array-of-structs expression in the plan
@@ -71,20 +72,8 @@ def _index_from_centroids(
         )
     rows = cent.collect()
     model = [(r.cid, list(r.cv), float(r.cnrm)) for r in rows]
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        "cid",
-        F.round(
-            _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 6
-        ).alias("cell_cos"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cell_cos"), F.asc("cid"))
-    cells = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "nrm", F.col("cid").alias("cell"))
+    cells = nearest_cells(base, cent, 1).select(
+        "vec_id", "v", "nrm", F.col("cid").alias("cell")
     )
     return model, cells
 
@@ -98,14 +87,8 @@ def build_pinned_index(
     subset (the driver-hash-verified construction of sim_ivf_pinned_topk);
     every corpus vector is assigned to its best cell once, batch-side.
     """
-    em = load_table(spark, sf_dir, "embeddings")
-    base = _norm_vec(em)
-    cent = base.filter(F.col("vec_id") % PINNED_CENT_MOD == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    return _index_from_centroids(base, cent)
+    base = _norm_vec(load_table(spark, sf_dir, "embeddings"))
+    return _index_from_centroids(base, pinned_centroids(base))
 
 
 def build_trained_index(
@@ -178,7 +161,7 @@ def probe_stream(
         lambda c: F.struct(
             (
                 -F.round(
-                    _dot(F.col("qv"), c["cv"]) / (F.col("qnrm") * c["cnrm"]), 6
+                    dot(F.col("qv"), c["cv"]) / (F.col("qnrm") * c["cnrm"]), 6
                 )
             ).alias("neg_cos"),
             c["cid"].alias("cid"),
@@ -200,9 +183,7 @@ def probe_stream(
         "ts",
         "query_id",
         F.col("vec_id"),
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-        ).alias("cos"),
+        cos6("qv", "qnrm", "v", "nrm").alias("cos"),
     )
     # bounded per-key state: candidates from <= n_probes cells.
     # collect_SET, not list: at-least-once upstream delivery can put the

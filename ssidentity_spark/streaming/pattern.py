@@ -21,10 +21,11 @@ State machine (s=signup, c/v=browse, p=purchase, e=error):
 The fold runs on the watermark-sealed pending buffer of
 streaming/sealed_fold.py, whose ordering contract keeps this
 order-sensitive DFA equal to the batch twin under cross-batch disorder.
-An empty ``event_type`` is a zero-width character in the batch twin's
-per-key string (``substring('', 1, 1)`` adds nothing), so pattern_stream
-drops those rows before the fold: they neither count nor touch an
-episode.
+A null or empty ``event_type`` is a zero-width character in the batch
+twin's per-key string (``substring`` gives null or ``''``, which
+``array_join`` drops or joins as nothing), so pattern_stream drops those
+rows before the fold: they neither count nor touch an episode, and a key
+with no other event emits no snapshot.
 """
 
 from __future__ import annotations
@@ -89,8 +90,6 @@ def pattern_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFram
     row for that key."""
     from pyspark.sql import functions as F
 
-    et = F.col("event_type")
-    # a null event_type is kept: it folds as a non-pattern event
     return _pattern_fn.stream(
-        events.filter(et.isNull() | (F.length(et) > 0)), watermark
+        events.filter(F.length("event_type") > 0), watermark
     )

@@ -100,24 +100,14 @@ def test_lsh_recall_high_in_near_dup_regime(spark):
     em = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
 
     # ground truth: top-3 by brute force for the first 10 vectors
-    from ssidentity_spark.plans.similarity import _dot, _norm_vec
+    from ssidentity_spark.operators.blocktopk import block_topk
+    from ssidentity_spark.plans.similarity import _vectors
 
-    corpus = _norm_vec(em)
-    queries = corpus.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    from pyspark.sql import Window
-
-    scored = corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    corpus = _vectors(em)
     truth = _topk_sets(
-        scored.withColumn("rnk", F.row_number().over(w)).filter("rnk <= 3")
+        block_topk(corpus, 3, corpus.filter(F.col("id") < 10)).select(
+            F.col("qid").alias("query_id"), F.col("cid").alias("neighbor_id")
+        )
     )
 
     got = _topk_sets(lsh_topk(em, n_proj=8, n_queries=10, top_k=3, n_bands=4))

@@ -259,31 +259,15 @@ def test_lpa_edges_through_ivf_full_probe_identical(spark):
     from ssidentity_spark.operators.graph import label_propagation
     from ssidentity_spark.operators.ivf import train_centroids
     from ssidentity_spark.plans.graph import ivf_knn_edges
-    from ssidentity_spark.plans.similarity import _dot, _norm_vec
-    from pyspark.sql import Window, functions as F
+    from ssidentity_spark.operators.blocktopk import block_topk
+    from ssidentity_spark.plans.similarity import _norm_vec, _vectors
+    from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
     em = load_table(spark, sf, "embeddings")
     corpus = _norm_vec(em).cache()
     K = 8
-    nbrs = corpus.select(
-        F.col("vec_id").alias("nbr"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    brute = (
-        corpus.join(F.broadcast(nbrs), F.col("vec_id") != F.col("nbr"))
-        .select(
-            "vec_id",
-            "nbr",
-            F.round(
-                _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 6
-            ).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= K)
-        .select("vec_id", "nbr")
-    )
-    bset = {(r.vec_id, r.nbr) for r in brute.collect()}
+    bset = {(r.qid, r.cid) for r in block_topk(_vectors(em), K).collect()}
 
     cents = train_centroids(em, k=16, iters=3)
     full = ivf_knn_edges(corpus, cents, k=K, n_probes=len(cents))

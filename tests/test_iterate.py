@@ -98,30 +98,81 @@ def test_iterate_respects_the_round_cap(spark):
     assert stats["iterations"] == 2 and stats["converged"] is False
 
 
+def _jobs(spark, group, fn) -> int:
+    """The number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_a_round_launches_no_job_besides_its_checkpoint(spark):
     """The fixpoint test reads the round's Observation: a narrow round is
     exactly one job (its checkpoint), the stop decision included."""
-    sc = spark.sparkContext
     state, step, _ = _countdown(spark)
-    group = "test-iterate-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        stats = {}
-        iterate(
+    stats = {}
+    n = _jobs(
+        spark,
+        "test-iterate-jobs",
+        lambda: iterate(
             step,
             state,
             10,
             metrics={"pos": F.count_if(F.col("x") > 0)},
             done=lambda m, *_: m["pos"] == 0,
             stats=stats,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        ),
+    )
     assert stats["iterations"] == 4
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert n == 4
+
+
+def test_a_pagerank_round_launches_at_most_two_jobs(spark):
+    """One more round costs the rank broadcast and the checkpoint: the
+    cached edge and state sides sit at the session shuffle width, so the
+    state join never re-shuffles them."""
+    from ssidentity_spark.operators.graph import pagerank
+
+    e = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 3) % 20}", 1.0) for i in range(20)]
+        + [(f"n{i}", f"n{(i + 1) % 20}", 1.0) for i in range(20)],
+        "src string, dst string, w double",
+    )
+    n2, n3 = (
+        _jobs(spark, f"test-pagerank-{it}", lambda it=it: pagerank(e, iters=it))
+        for it in (2, 3)
+    )
+    assert n3 - n2 <= 2
+
+
+def test_a_kcore_peel_round_broadcasts_alive_once(spark):
+    """A peel round over a checkpointed alive set: one broadcast of the
+    alive set and the round's checkpoint, and the edges it keeps are
+    exactly those with both ends alive."""
+    from ssidentity_spark.plans.graph import _alive_edges
+
+    edges = [(u, v) for u in range(12) for v in range(12) if u != v and (u + v) % 3]
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sym = spark.createDataFrame(edges, "u long, v long").repartition(width, "u").cache()
+    sym.count()  # the loop's edge cache, filled before its first round
+    alive = materialize(spark.range(10).select(F.col("id").alias("u")))
+    out = []
+    n = _jobs(
+        spark,
+        "test-kcore-peel",
+        lambda: out.append(materialize(_alive_edges(sym, alive))),
+    )
+    assert n == 2
+    assert sorted(map(tuple, out[0].collect())) == [
+        (u, v) for u, v in edges if u < 10 and v < 10
+    ]
+    sym.unpersist()
 
 
 def test_pagerank_ranks_equal_under_reliable_checkpoints(spark, tmp_path):

@@ -521,6 +521,31 @@ def test_w7_stream_skips_empty_event_type_like_batch(spark, tmp_path):
     assert got[11]["longest_match"] == 2  # s then p, nothing between
 
 
+def test_w7_stream_skips_null_event_type_like_batch(spark, tmp_path):
+    """A null event_type is skipped by the batch twin (substring(NULL, 1, 1)
+    is null and array_join drops it): user 11 = signup, NULL, purchase is
+    one match over two events, and user 12 = NULL alone counts nothing,
+    so the stream emits no snapshot for it."""
+    from ssidentity_spark.plans.analytics import w7_event_pattern
+
+    t0 = dt.datetime(2024, 3, 2, 12, 0, 0)
+    rows = [
+        (eid, t0 + dt.timedelta(minutes=eid), uid, etype, 1.0, "{}")
+        for eid, uid, etype in ((1, 11, "signup"), (2, 11, None), (3, 11, "purchase"), (4, 12, None))
+    ]
+    src, sf = str(tmp_path / "nl_src"), str(tmp_path / "nl_sf")
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    spark.read.parquet(src).write.parquet(sf + "/events.parquet")
+    got = _run_pattern_stream(spark, tmp_path, src, "nl")
+    want = {r["user_id"]: r.asDict() for r in w7_event_pattern(spark, sf).collect()}
+    assert got[11] == want[11] == {
+        "user_id": 11, "n_events": 2, "n_matches": 1,
+        "longest_match": 2, "n_browse_steps": 0,
+    }
+    assert 12 not in got and want[12]["n_events"] == 0
+
+
 # ---------------------------------------------------------------------------
 # X28: order-statistic winsorization (plans/pipeline.py:pipe_winsorize)
 # ---------------------------------------------------------------------------

@@ -142,11 +142,11 @@ def test_winsorize_fence_join_is_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_linkage_norms_join_is_broadcast_and_no_cartesian(spark):
-    """ID1: the norms dimension reaches the pair frame as broadcasts,
-    candidate pairs come from the equi cell join (never a cartesian),
-    and nothing drops to Python."""
+def test_linkage_plan_is_one_block_product(spark):
+    """ID1: the profile matrix is collected while the plan is built, so
+    the query runs as one Python block product (operators/blocktopk.py)
+    with no pair join, cartesian or exchange behind it."""
     plan = _plan(REGISTRY["id_behavior_linkage"].fn(spark, SF))
-    assert "Python" not in plan and "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    assert plan.count("MapInPandas") == 1
+    for node in ("Join", "CartesianProduct", "Exchange"):
+        assert node not in plan, node

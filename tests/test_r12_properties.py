@@ -428,30 +428,46 @@ def test_bfs_hops_gate_scale_distribution(spark):
     assert sorted(set(out)) == list(range(max(out) + 1))
 
 
-def test_cell_dots_shuffle_fallback_equals_broadcast(spark, tmp_path, monkeypatch):
-    """r13 broadcast guard (ADVICE r12): past _LNK_BCAST_MAX_CELL_ROWS
-    the exact-tier cell join falls back to a shuffle join instead of
-    broadcasting an unboundedly growing frame. Both paths are integer
-    sums over the identical pair set — results must match exactly."""
-    from ssidentity_spark.plans import analytics as A
+def test_block_topk_past_broadcast_budget_equals_broadcast(spark, monkeypatch):
+    """The block operator's size switch, pinned on both sides: past
+    BROADCAST_ROWS it splits both sides into hash blocks and merges each
+    (query block, corpus block) pair's partial top-K lists, and with many
+    query blocks against one broadcast matrix the mutual check moves to a
+    merge task. On both the float (6-dp cosine kNN, mutual and not) and
+    the integer (profile linkage) path every variant gives the rows of
+    the single broadcast block."""
+    from pyspark.sql import functions as F
 
-    sf = _write_events(spark, tmp_path, _clone_corpus())
     from ssidentity_spark.io import load_table
+    from ssidentity_spark.operators import blocktopk as B
+    from ssidentity_spark.plans import analytics as A
+    from ssidentity_spark.plans.similarity import _norm_vec
 
-    prof = A.behavior_profiles(load_table(spark, sf, "events")).persist()
-    bcast = A._cell_dots(prof, "u1", "u2", include_shared=True)
-    monkeypatch.setattr(A, "_LNK_BCAST_MAX_CELL_ROWS", 0)
-    shuffle = A._cell_dots(prof, "u1", "u2", include_shared=True)
-    assert sorted(map(tuple, bcast.collect())) == sorted(
-        map(tuple, shuffle.collect())
+    sf = "/root/testdata/sf0.001"
+    corpus = _norm_vec(load_table(spark, sf, "embeddings")).select(
+        F.col("vec_id").alias("id"), "v"
     )
-    assert bcast.exceptAll(shuffle).count() == 0
+    prof = A.behavior_profiles(load_table(spark, sf, "events")).persist()
+    runs = {
+        "knn": lambda: B.block_topk(corpus, 8, mutual=True),
+        "queries": lambda: B.block_topk(corpus, 5, corpus.filter("id < 40")),
+        "linkage": lambda: A._profile_topk(prof, 1),
+        "mutual_linkage": lambda: A._profile_topk(prof, 2, mutual=True),
+    }
+    bcast = {k: sorted(map(tuple, run().collect())) for k, run in runs.items()}
+    assert all(bcast.values())
+    # many query blocks against the broadcast matrix, then past the budget
+    for name, value in (("_BLOCK_CELLS", 20_000), ("BROADCAST_ROWS", 200)):
+        monkeypatch.setattr(B, name, value)  # 500 vectors, 766 cells
+        for k, run in runs.items():
+            assert sorted(map(tuple, run().collect())) == bcast[k], (name, k)
     prof.unpersist()
 
 
 def test_cell_pair_width_clamps_to_input(spark):
-    """Tiny inputs no longer pin a conf-width task wave (ADVICE r12):
-    width scales with rows/2000, floors at 1, caps at the session conf."""
+    """Tiny inputs do not pin a conf-width task wave in the LSH plane
+    fan-out (ADVICE r12): width scales with rows/2000, floors at 1, caps
+    at the session conf."""
     from ssidentity_spark.plans.analytics import _cell_pair_width
 
     assert _cell_pair_width(100, 200) == 1
