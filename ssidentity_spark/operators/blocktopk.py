@@ -9,15 +9,16 @@ block-partitioned exact search with a top-K merge of EDBT 2019
 top-K similarity). A per-pair SQL fold, rank window and pair join do the
 same arithmetic one row at a time.
 
-The size switch is the operator's only one. A corpus of at most
-``BROADCAST_ROWS`` rows (vectors, or profile cells) is collected once and
+The size switch is the operator's only one: ``BROADCAST_BYTES`` of
+corpus matrix (ids x width x 8). A corpus within it is collected once and
 shipped with the task closure, and query rows run in few, large blocks
 (each Python task has a fixed cost). Past it, both sides are packed into
-hash blocks, each (query block, corpus block) pair keeps its partial
-top-K, and a merge per query id keeps the global one. ``mutual=True``
-(self-scoring only) keeps a pair only if each side is in the other's
-top-K: inside the block when one block holds every query, else in one
-merge task over the K-per-query lists.
+hash blocks whose matrices fit the budget, each (query block, corpus
+block) pair keeps its partial top-K, and a merge per query id keeps the
+global one. Every task scores at most ``_BLOCK_CELLS`` pairs at once.
+``mutual=True`` (self-scoring only) keeps a pair only if each side is in
+the other's top-K: inside the block when one block holds every query,
+else in one merge task over the K-per-query lists.
 
 Exactness, so that the rows equal the SQL tiers' bit for bit:
 
@@ -42,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ssidentity_spark.operators.iterate import materialize
+
 # The same arithmetic as SQL expressions, for the pairs a candidate join
 # (LSH bucket, IVF cell, MMR pool) or a stream produces.
 
@@ -64,8 +67,13 @@ def top_rows(scored: DataFrame, k: int, *by: str) -> DataFrame:
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-# corpus rows (one vector, or one profile cell) a broadcast matrix holds
-BROADCAST_ROWS = 1 << 17
+# corpus matrix bytes (ids x width x 8) the broadcast path ships; the
+# driver and every Python worker hold a copy. 128 MB is 262,144 vectors of
+# the 64-dim embeddings, or about 140,000 users at the 120-cell (hour x
+# event type) profile grain: more than the ~98,000 users (at sf0.1's 51
+# cells a user) that the SQL tier's 5M-row, about 200 MB framed,
+# broadcast guard covered.
+BROADCAST_BYTES = 1 << 27
 # score-matrix cells one block computes at once (32 MB of doubles)
 _BLOCK_CELLS = 1 << 22
 _6DP = Decimal("0.000001")
@@ -174,6 +182,19 @@ def _rank(df: pd.DataFrame, key: str, k: int) -> pd.DataFrame:
     return df[df["rnk"] <= k]
 
 
+def _scored(kind, q: _Block, c: _Block, k: int, cells: int) -> pd.DataFrame:
+    """``kind.block`` of ``q`` against ``c`` in pieces of at most ``cells``
+    scores, merged to each query's top ``k``."""
+    cstep = max(1, min(len(c.ids), cells))
+    qstep = max(1, cells // cstep)
+    out = pd.concat([
+        kind.block(q.rows(i, i + qstep), c.rows(j, j + cstep), k)
+        for i in range(0, max(len(q.ids), 1), qstep)
+        for j in range(0, max(len(c.ids), 1), cstep)
+    ])
+    return out if cstep >= len(c.ids) else _rank(out.drop(columns="rnk"), kind.key, k)
+
+
 def _mutual(df: pd.DataFrame) -> pd.DataFrame:
     fwd = pd.MultiIndex.from_arrays([df["qid"], df["cid"]])
     return df[fwd.isin(pd.MultiIndex.from_arrays([df["cid"], df["qid"]]))]
@@ -196,12 +217,23 @@ class _Kind(NamedTuple):
     build: Callable  # (pandas rows, cell index) -> _Block
     block: Callable  # (query _Block, corpus _Block, k) -> ranked rows
     index: Callable | None  # corpus rows -> cell index
+    width: Callable  # corpus frame -> least matrix cells a row adds
+    shape: Callable  # (pandas rows, cell index) -> (ids, matrix width)
 
 
-_FLOAT = _Kind("qid long, cid long, cos double, rnk int", "cos", _Vectors, _float_block, None)
+def _vector_width(df: DataFrame) -> int:
+    row = df.select(F.size("v")).first()
+    return max(1, row[0]) if row else 1
+
+
+_FLOAT = _Kind(
+    "qid long, cid long, cos double, rnk int", "cos", _Vectors, _float_block, None,
+    _vector_width, lambda pdf, cells: (len(pdf), len(pdf["v"].iloc[0]) if len(pdf) else 0),
+)
 _INT = _Kind(
     "qid long, cid long, n_cells long, shared_cells long, dot long, cosine double, rnk int",
     "cosine", _Profiles, _int_block, _cell_index,
+    lambda df: 1, lambda pdf, cells: (pdf["id"].nunique(), len(cells)),
 )
 
 
@@ -238,30 +270,31 @@ def block_topk_int(
 
 
 def _block_topk(kind: _Kind, corpus, queries, k, mutual) -> DataFrame:
-    head = corpus.limit(BROADCAST_ROWS + 1).toPandas()
-    if len(head) > BROADCAST_ROWS:
-        return _block_pairs(kind, corpus, queries, k, mutual)
+    if mutual and queries is not None:
+        raise ValueError("mutual=True ranks a corpus against itself: pass no queries")
+    # past this many rows no matrix fits the budget, so the collect stops there
+    cap = BROADCAST_BYTES // (8 * kind.width(corpus))
+    head = corpus.limit(cap + 1).toPandas()
     cells = kind.index(head) if kind.index else None
+    n, width = kind.shape(head, cells)
+    if len(head) > cap or 8 * n * width > BROADCAST_BYTES:
+        return _block_pairs(kind, corpus, queries, k, mutual, head[:1])
     cmat = kind.build(head, cells)
-    step = max(1, _BLOCK_CELLS // max(len(cmat.ids), 1))  # query rows a block
     if queries is not None:
 
         def run_queries(qpdf):
-            qmat = kind.build(qpdf, cells)
-            return pd.concat(
-                [kind.block(qmat.rows(lo, lo + step), cmat, k)
-                 for lo in range(0, max(len(qmat.ids), 1), step)]
-            )
+            return _scored(kind, kind.build(qpdf, cells), cmat, k, _BLOCK_CELLS)
 
         return queries.mapInPandas(_whole(run_queries), kind.schema)
     # self-scoring: the query blocks are row ranges of the shipped matrix
+    step = max(1, _BLOCK_CELLS // max(len(cmat.ids), 1))  # query rows a task
     n_blocks = max(1, -(-len(cmat.ids) // step))
     one = mutual and n_blocks == 1
 
     def run_self(blocks):
         for part in blocks:
             for b in part["id"].tolist():
-                out = kind.block(cmat.rows(b * step, (b + 1) * step), cmat, k)
+                out = _scored(kind, cmat.rows(b * step, (b + 1) * step), cmat, k, _BLOCK_CELLS)
                 yield _mutual(out) if one else out
 
     out = corpus.sparkSession.range(n_blocks, numPartitions=n_blocks).mapInPandas(
@@ -270,31 +303,33 @@ def _block_topk(kind: _Kind, corpus, queries, k, mutual) -> DataFrame:
     return out.coalesce(1).mapInPandas(_whole(_mutual), kind.schema) if mutual and not one else out
 
 
-def _block_pairs(kind: _Kind, corpus, queries, k, mutual) -> DataFrame:
-    """Past the broadcast budget: hash blocks of about ``BROADCAST_ROWS``
-    rows on each side, one task per (query block, corpus block) pair
-    keeping its partial top-K, then a merge per query id."""
+def _block_pairs(kind: _Kind, corpus, queries, k, mutual, sample) -> DataFrame:
+    """Past the broadcast budget: hash blocks whose matrices fit
+    ``BROADCAST_BYTES`` on each side, one task per (query block, corpus
+    block) pair keeping its partial top-K, then a merge per query id."""
     spark = corpus.sparkSession
+    corpus = materialize(corpus)  # read by the cell index, the id counts and the packing
     cells = kind.index(corpus.drop("id", "c").distinct().toPandas()) if kind.index else None
-    q = corpus if queries is None else queries
-    n_cb = max(1, -(-corpus.count() // BROADCAST_ROWS))
-    n_qb = n_cb if queries is None else max(1, -(-q.count() // BROADCAST_ROWS))
+    per_block = max(1, BROADCAST_BYTES // (8 * max(kind.shape(sample, cells)[1], 1)))
 
-    def packed(df, n, name):
-        return df.groupBy(F.pmod(F.xxhash64("id"), F.lit(n)).alias(name + "b")).agg(
+    def packed(df, name):
+        n = max(1, -(-df.select("id").distinct().count() // per_block))
+        return n, df.groupBy(F.pmod(F.xxhash64("id"), F.lit(n)).alias(name + "b")).agg(
             F.collect_list(F.struct(*df.columns)).alias(name)
         )
+
+    n_qb, qb = packed(corpus if queries is None else queries, "q")
+    n_cb, cb = packed(corpus, "c")
 
     def run_pair(it):
         for part in it:
             for qrows, crows in zip(part["q"], part["c"]):
                 qmat, cmat = (kind.build(pd.DataFrame(list(x)), cells) for x in (qrows, crows))
-                yield kind.block(qmat, cmat, k)
+                yield _scored(kind, qmat, cmat, k, _BLOCK_CELLS)
 
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     merged = (
-        packed(q, n_qb, "q")
-        .crossJoin(packed(corpus, n_cb, "c"))
+        qb.crossJoin(cb)
         .repartition(n_qb * n_cb)
         .mapInPandas(run_pair, kind.schema)
         .repartition(width, "qid")

@@ -1728,13 +1728,9 @@ def _exact_linkage(prof: DataFrame) -> DataFrame:
     ``id_linkage_banded``) so they reuse one profile frame for both their
     candidate tier and this exact tier.
 
-    Plan shape: the profile rows are collected once into a dense
-    (user × cell) count matrix and every user's best match comes out of
-    one integer block product (operators/blocktopk.py) — the cell pair
-    join, the norm joins and the argmax aggregate it replaces did the
-    same exact arithmetic one pair row at a time. Determinism: BIGINT
-    dots and norms, one pinned cosine expression, ties to the smaller
-    ``match_id``."""
+    Plan shape: one integer block product over the dense (user × cell)
+    count matrix (operators/blocktopk.py). Determinism: BIGINT dots and
+    norms, one pinned cosine expression, ties to the smaller ``match_id``."""
     return _profile_topk(prof, 1).select(
         F.col("qid").alias("user_id"),
         F.col("cid").alias("match_id"),

@@ -8,6 +8,7 @@ import random
 from decimal import Decimal
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table
@@ -49,3 +50,38 @@ def test_block_cosines_equal_spark_round_of_the_fold_on_every_pair(spark):
     }
     assert len(got) == n * (n - 1)
     assert got == want
+
+
+def test_scored_pieces_stay_within_block_cells_and_merge_to_the_whole():
+    """Float and integer blocks: no piece scores more than the cell
+    budget, even when the corpus alone holds more rows than the budget,
+    and the merged pieces give the rows of one whole block."""
+    import pandas as pd
+
+    from ssidentity_spark.operators import blocktopk as B
+
+    rnd = np.random.default_rng(3)
+    vec = pd.DataFrame({"id": np.arange(60), "v": list(rnd.normal(size=(60, 8)))})
+    prof = pd.DataFrame({"id": rnd.integers(0, 40, 300), "hod": rnd.integers(0, 6, 300),
+                         "c": rnd.integers(1, 5, 300)}).drop_duplicates(["id", "hod"])
+    for kind, pdf in ((B._FLOAT, vec), (B._INT, prof)):
+        cells = kind.index(pdf) if kind.index else None
+        m = kind.build(pdf, cells)
+        seen = []
+
+        def block(q, c, k, kind=kind, seen=seen):
+            seen.append(len(q.ids) * len(c.ids))
+            return kind.block(q, c, k)
+
+        whole = kind.block(m, m, 3).reset_index(drop=True)
+        for budget in (500, 37, 1):
+            got = B._scored(kind._replace(block=block), m, m, 3, budget)
+            assert max(seen) <= budget
+            pd.testing.assert_frame_equal(got.reset_index(drop=True), whole)
+            seen.clear()
+
+
+def test_mutual_needs_self_scoring(spark):
+    corpus = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id long, v array<double>")
+    with pytest.raises(ValueError):
+        block_topk(corpus, 1, corpus, mutual=True)

@@ -430,12 +430,12 @@ def test_bfs_hops_gate_scale_distribution(spark):
 
 def test_block_topk_past_broadcast_budget_equals_broadcast(spark, monkeypatch):
     """The block operator's size switch, pinned on both sides: past
-    BROADCAST_ROWS it splits both sides into hash blocks and merges each
-    (query block, corpus block) pair's partial top-K lists, and with many
-    query blocks against one broadcast matrix the mutual check moves to a
-    merge task. On both the float (6-dp cosine kNN, mutual and not) and
-    the integer (profile linkage) path every variant gives the rows of
-    the single broadcast block."""
+    BROADCAST_BYTES of corpus matrix it splits both sides into hash
+    blocks and merges each (query block, corpus block) pair's partial
+    top-K lists, and with many query blocks against one broadcast matrix
+    the mutual check moves to a merge task. On both the float (6-dp
+    cosine kNN, mutual and not) and the integer (profile linkage) path
+    every variant gives the rows of the single broadcast block."""
     from pyspark.sql import functions as F
 
     from ssidentity_spark.io import load_table
@@ -456,11 +456,21 @@ def test_block_topk_past_broadcast_budget_equals_broadcast(spark, monkeypatch):
     }
     bcast = {k: sorted(map(tuple, run().collect())) for k, run in runs.items()}
     assert all(bcast.values())
-    # many query blocks against the broadcast matrix, then past the budget
-    for name, value in (("_BLOCK_CELLS", 20_000), ("BROADCAST_ROWS", 200)):
-        monkeypatch.setattr(B, name, value)  # 500 vectors, 766 cells
-        for k, run in runs.items():
-            assert sorted(map(tuple, run().collect())) == bcast[k], (name, k)
+    monkeypatch.setattr(B, "_BLOCK_CELLS", 20_000)  # many query blocks
+    for k, run in runs.items():
+        assert sorted(map(tuple, run().collect())) == bcast[k], k
+    # past the budget: 200 of the 500 64-dim vectors, or 7 of the 15
+    # users' 120-cell profiles, a block
+    pairs = []
+    monkeypatch.setattr(B, "_block_pairs", lambda *a, f=B._block_pairs: pairs.append(a) or f(*a))
+    for budget, names in (
+        (200 * 64 * 8, ("knn", "queries")),
+        (7 * 120 * 8, ("linkage", "mutual_linkage")),
+    ):
+        monkeypatch.setattr(B, "BROADCAST_BYTES", budget)
+        for k in names:
+            assert sorted(map(tuple, runs[k]().collect())) == bcast[k], (budget, k)
+    assert len(pairs) == 4
     prof.unpersist()
 
 
