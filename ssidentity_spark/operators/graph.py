@@ -1,8 +1,8 @@
 """Relational graph analytics over the co-occurrence network (the
 reference's README.md:15-19, "things that can be correlated"): connected
-components (HashMin and large-star/small-star), weighted label
-propagation and weighted PageRank, built from joins and aggregations
-rather than a graph engine.
+components (pointer jumping with tree hooking, O(log diameter) rounds),
+weighted label propagation and weighted PageRank, built from joins and
+aggregations rather than a graph engine.
 
 Every loop here runs through :func:`~ssidentity_spark.operators.iterate.
 iterate`: each round's state is written out by ``materialize`` (so plans
@@ -22,186 +22,96 @@ from ssidentity_spark.operators.iterate import (
 )
 
 
+# Rounds to the fixpoint grow with log(diameter): 11 on a 1,000-edge
+# path, 12 with its ids shuffled. Reaching this ceiling means a fault,
+# never a deep graph, so it raises instead of returning under-merged
+# labels.
+_MAX_ROUNDS = 64
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "mac_a",
     dst: str = "mac_b",
-    max_iter: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
-    """HashMin label propagation: every vertex adopts the smallest label in
-    its neighborhood until fixpoint. Returns (vertex, component) where
-    component is the lexicographically smallest member id. When ``stats``
-    is passed, ``iterate`` records the round count, whether the fixpoint
-    was reached, and rows and seconds per round.
+    """Connected components of the undirected graph ``edges``: returns
+    ``(vertex, component)``, the component being its smallest member id.
+    Every endpoint is a vertex, so a vertex whose only edge is a self-loop
+    comes back as its own singleton. When ``stats`` is passed, ``iterate``
+    records the round count, whether the fixpoint was reached, and rows
+    and seconds per round.
 
-    HashMin converges in O(component diameter) rounds; the r5 blow-up
-    study measured 18 rounds on chain-shaped 10-replica clusters, so the
-    default ceiling carries headroom (the fixpoint early-exit makes the
-    extra budget free on converged graphs). For graphs with unknown or
-    adversarial diameter use ``connected_components_star`` — O(log
-    diameter) rounds, measured 161 vs 9 on a 160-edge path (SCALE.md).
-    HashMin remains the default because shallow co-occurrence/near-dup
-    graphs converge in a handful of rounds at lower per-round cost.
-    """
-    # undirected: symmetrize once
+    The state is one parent pointer ``p`` per vertex, first the vertex
+    itself, and a round runs the hook-and-shortcut steps of
+    Shiloach-Vishkin as FastSV (Zhang, Azad, Hu 2020) orders them:
+
+    (a) ``gp[u] = p[p[u]]``, a self-join of the state;
+    (b) ``m[u]``, the least ``gp`` over u's closed neighbourhood, one join
+        with the symmetrized edges (self-edges included) and one group-by;
+    (c) tree hooking, ``h[x]``: the least ``m[u]`` over the vertices u
+        whose parent is x;
+    (d) ``p' = least(m, h)``. (c) and (d) are one group-by over the union
+        of the rows ``(u, m[u])`` and ``(p[u], m[u])``.
+
+    Pointers only ever fall and stay inside their component. At the
+    fixpoint every tree is a star rooted at its component's minimum,
+    reached in O(log diameter) rounds: 8 on an 80-edge path, 9 on a
+    160-edge one and 10 with its ids shuffled. Without (c), min-label
+    propagation with the shortcut is logarithmic only when ids run in
+    path order. The change count is observed on the round's checkpoint,
+    so the stop test runs no job."""
+    # one run of the caller's edge plan: each union branch below reads it
+    raw = materialize(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    # closed neighbourhoods: both directions plus a self-edge per vertex
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .unionByName(raw.select("u", F.col("u").alias("v")))
+        .unionByName(raw.select(F.col("v").alias("u"), "v"))
         .distinct()
         .cache()
     )
-    labels = (
-        sym.select(F.col("u").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
+    state = sym.where(F.col("u") == F.col("v")).select(
+        F.col("u").alias("vertex"), F.col("u").alias("p")
     )
 
-    def step(labels: DataFrame, _m: dict) -> DataFrame:
-        # candidate labels: own label + min neighbor label; the round's
-        # join sees old and new label side by side, so the change flag
-        # rides the state and its count is observed on the checkpoint
-        neighbor_min = (
-            sym.join(labels, sym.v == labels.vertex)
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        nbr = F.coalesce("nbr_min", F.col("component"))
-        return labels.join(neighbor_min, "vertex", "left").select(
-            "vertex",
-            F.least(F.col("component"), nbr).alias("component"),
-            (nbr < F.col("component")).alias("chg"),
-        )
-
-    labels = iterate(
-        step,
-        labels,
-        max_iter,
-        metrics={"chg": F.count_if("chg")},
-        done=lambda m, *_: m["chg"] == 0,
-        stats=stats,
-    )
-    sym.unpersist()
-    return labels.select("vertex", "component")
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "mac_a",
-    dst: str = "mac_b",
-    max_iter: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    pointer-doubling counterpart to HashMin: converges in O(log diameter)
-    rounds instead of O(diameter), the difference the r5 blow-up study
-    measured on chain-shaped near-dup clusters (18 HashMin rounds at 10×;
-    see SCALE.md). Same relational building blocks — one keyed shuffle per
-    star phase, checkpoint-truncated — so the per-round cost matches
-    HashMin and the round COUNT is the win on long-chain graphs.
-
-    large-star: every node links its larger neighbors to the minimum of
-    its closed neighborhood; small-star: every node links its smaller-or-
-    equal neighbors likewise. The edge set converges to a star forest
-    whose centers are the component minima. Returns (vertex, component),
-    identical to ``connected_components`` (equivalence is pytest-pinned
-    on random graphs).
-    """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # r12 optimization pass 2: `cur` and `vertices` below BOTH eagerly
-    # checkpoint from `raw`, so an unpersisted caller's edge pipeline
-    # (e.g. dedup_cc_clusters' full shingle→minhash→band build) ran
-    # TWICE before the first star round. Materialize the two-column edge
-    # projection once; a caller that already persisted its pairs only
-    # pays one extra edge-list-sized copy. Interleaved A/B at sf0.1
-    # (dedup_cc_clusters, 4 rounds): 8.05 → 7.22 s median, faster every
-    # round, exceptAll-identical output.
-    raw = materialize(raw)
-    cur, init = materialize_observed(
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct(),
-        rows=F.count(F.lit(1)),
-    )
-    # vertex set from the UNFILTERED edges: a vertex whose only edges are
-    # self-loops must still appear (as its own singleton component), or
-    # this function disagrees with connected_components on such graphs
-    vertices = materialize(
-        raw.select(F.col("u").alias("vertex"))
-        .unionByName(raw.select(F.col("v").alias("vertex")))
-        .distinct()
-    )
-
-    def same_edges(m: dict, prev: dict, new: DataFrame, old: DataFrame) -> bool:
-        # fixpoint: the edge multiset stopped changing. The counts are
-        # observed; the exact test runs only once they agree
-        return m["rows"] == prev["rows"] and new.exceptAll(old).limit(1).count() == 0
-
-    cur = iterate(
-        _star_round,
-        cur,
-        max_iter,
-        done=same_edges,
-        init=init,
-        stats=stats,
-    )
-    # converged: a star forest — every non-min vertex carries exactly one
-    # (vertex, min) edge; the min-agg is belt-and-braces if max_iter cut
-    # convergence short on an adversarial graph
-    comp = cur.groupBy(F.col("u").alias("vertex")).agg(
-        F.min("v").alias("component")
-    )
-    return (
-        vertices.join(comp, "vertex", "left")
-        .select(
-            "vertex", F.coalesce("component", F.col("vertex")).alias("component")
-        )
-    )
-
-
-def _star(e: DataFrame, large: bool) -> DataFrame:
-    """One large-star (``large``) or small-star phase over canonical
-    ``(u > v)`` edges."""
-    # closed neighborhood of u: neighbors over both directions + u
-    nbrs = e.select("u", "v").unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    # no .distinct() on the self-edges: the only consumer is the
-    # duplicate-insensitive min() below, so deduping here would be a
-    # pure-waste extra shuffle per star phase
-    with_self = nbrs.unionByName(nbrs.select("u", F.col("u").alias("v")))
-    m = with_self.groupBy("u").agg(F.min("v").alias("m"))
-    joined = nbrs.join(m, "u")
-    if large:
-        # connect strictly larger neighbors to the neighborhood min
-        linked = joined.filter(F.col("v") > F.col("u")).select(
-            F.col("v").alias("a"), F.col("m").alias("b")
-        )
-    else:
-        # connect smaller-or-equal neighbors AND u itself to the min
-        linked = (
-            joined.filter(F.col("v") <= F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                m.select(F.col("u").alias("a"), F.col("m").alias("b"))
+    def step(s: DataFrame, _m: dict) -> DataFrame:
+        parent = s.select(F.col("vertex").alias("p"), F.col("p").alias("gp"))
+        gp = s.join(parent, "p").select("vertex", "p", "gp")
+        # the self-edge carries u's own parent through the group-by
+        m = (
+            sym.join(gp, sym.v == gp.vertex)
+            .groupBy("u")
+            .agg(
+                F.min("gp").alias("m"),
+                F.min(F.when(F.col("u") == F.col("v"), F.col("p"))).alias("p"),
             )
         )
-    linked = linked.select("a", "b")
-    return (
-        linked.filter(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+        hooks = m.select(F.col("u").alias("vertex"), "m", F.col("p").alias("old"))
+        hooks = hooks.unionByName(
+            m.select(F.col("p").alias("vertex"), "m", F.lit(None).alias("old"))
         )
-        .distinct()
+        return (
+            hooks.groupBy("vertex")
+            .agg(F.min("m").alias("p"), F.min("old").alias("old"))
+            .select("vertex", "p", (F.col("p") < F.col("old")).alias("chg"))
+        )
+
+    run = {} if stats is None else stats
+    labels = iterate(
+        step,
+        state,
+        _MAX_ROUNDS,
+        metrics={"chg": F.count_if("chg")},
+        done=lambda m, _prev: m["chg"] == 0,
+        stats=run,
     )
-
-
-def _star_round(e: DataFrame, _m: dict | None = None) -> DataFrame:
-    """One connected_components_star round: large-star, then small-star."""
-    return _star(_star(e, large=True), large=False)
+    sym.unpersist()
+    if not run["converged"]:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {_MAX_ROUNDS} rounds"
+        )
+    return labels.select("vertex", F.col("p").alias("component"))
 
 
 def label_propagation(

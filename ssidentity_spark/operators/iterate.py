@@ -48,7 +48,7 @@ def iterate(
     state: DataFrame,
     max_iter: int,
     metrics: dict[str, Column] | None = None,
-    done: Callable[[dict, dict, DataFrame, DataFrame], bool] | None = None,
+    done: Callable[[dict, dict], bool] | None = None,
     init: dict | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -57,10 +57,9 @@ def iterate(
 
     ``m`` holds the previous round's observed values (``init`` before the
     first round): ``rows``, the state's row count, plus one entry per
-    ``metrics`` aggregate. After each round ``done(m, prev, new, old)``
-    may end the loop; it sees the new and the previous metrics and
-    states, and should only touch the states when the metrics alone
-    cannot decide. Without ``done`` the loop runs all ``max_iter`` rounds.
+    ``metrics`` aggregate. After each round ``done(m, prev)`` may end the
+    loop; it sees the new and the previous metrics. Without ``done`` the
+    loop runs all ``max_iter`` rounds.
 
     ``stats``, when given, receives ``iterations``, ``converged`` (``done``
     ended the loop), and per round the state's ``rows`` and wall
@@ -73,7 +72,7 @@ def iterate(
     for _ in range(max_iter):
         t0 = time.perf_counter()
         new, m_new = materialize_observed(step(state, m), **observed)
-        stop = done is not None and done(m_new, m, new, state)
+        stop = done is not None and done(m_new, m)
         seconds.append(time.perf_counter() - t0)
         rows.append(m_new["rows"])
         state, m = new, m_new

@@ -2291,10 +2291,11 @@ def id_linkage_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # AND keeps the closure meaningful at every SF — 3/27/306 multi-member
 # clusters of max size 7/10/13 at sf0.001/0.01/0.1, multi-hop chains
 # (max > 2) at all three, giant component at none; K=1 would reduce
-# the closure to a perfect matching (max size 2, nothing transitive). Components come from the same HashMin machinery
-# as A3's network tree, and the DuckDB oracle replays the fixpoint as a
-# recursive transitive-closure CTE, so the iterative algorithm is
-# hash-verified, not rows-only (dedup_cc_clusters pattern).
+# the closure to a perfect matching (max size 2, nothing transitive).
+# Components come from the shared connected-components operator, and
+# the DuckDB oracle replays the fixpoint as a recursive transitive-closure
+# CTE, so the iterative algorithm is hash-verified, not rows-only
+# (dedup_cc_clusters pattern).
 # ---------------------------------------------------------------------------
 
 _LNK_MUTUAL_K = 2
@@ -2369,15 +2370,15 @@ def id_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the closure never sees corpus-sized data; the K=2
     operating point and the measured degeneracy of both the τ-floor and
     K=3 alternatives are in the banner comment above). The components
-    use the shared HashMin operator (operators/graph.py —
-    O(diameter) rounds, checkpoint-truncated; star variant for
-    adversarial diameters per SCALE.md r6). The 100 TB candidate path
-    is ID2's signature index feeding this same rank.
+    come from the shared operator (operators/graph.py:
+    connected_components, O(log diameter) rounds, checkpoint-truncated).
+    The 100 TB candidate path is ID2's signature index feeding this same
+    rank.
 
     Determinism: integer BIGINT dots/norms (order-free exact), ONE
     pinned cosine expression ranked with (cosine DESC, id ASC) on
     bit-identical doubles (the ID1 contract — no rounding), mutuality
-    and HashMin are integer-exact, cluster sizes are counts."""
+    and the components are integer-exact, cluster sizes are counts."""
     from ssidentity_spark.operators.graph import connected_components
 
     prof = behavior_profiles(load_table(spark, sf_dir, "events")).persist()

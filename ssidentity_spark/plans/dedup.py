@@ -294,20 +294,19 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fixpoint with a recursive transitive-closure CTE, so the
     iterative algorithm is hash-verified, not rows-only.
 
-    r6: switched from HashMin to the pointer-doubling star algorithm
-    (operators/graph.py:connected_components_star). Near-dup replica
-    clusters are CHAIN-shaped (distant replicas connect only through
-    intermediates), so component diameter grows with duplication depth —
-    the r6 30× blow-up drove HashMin into its 50-round ceiling and it
-    returned an UNDER-MERGED clustering (4,432 clusters vs the converged
-    4,429), while star converged in 7 rounds at 5× less wall time
-    (SCALE.md). O(log diameter) is the correct asymptotic for a graph
-    whose diameter the pipeline does not control."""
-    from ssidentity_spark.operators.graph import connected_components_star
+    Near-dup replica clusters are CHAIN-shaped (distant replicas connect
+    only through intermediates), so component diameter grows with
+    duplication depth. The r6 30× blow-up drove the then HashMin operator
+    (O(diameter) rounds) into its 50-round ceiling, and it silently
+    returned an UNDER-MERGED clustering (4,432 clusters against the
+    converged 4,429; SCALE.md). The shared operator
+    (operators/graph.py:connected_components) needs O(log diameter)
+    rounds and raises rather than return labels short of its fixpoint."""
+    from ssidentity_spark.operators.graph import connected_components
 
     d = load_table(spark, sf_dir, "documents")
     pairs = _spark_lsh_pairs(d)
-    comp = connected_components_star(pairs, src="doc_a", dst="doc_b").select(
+    comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("vertex").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     return d.select("doc_id").join(comp, "doc_id", "left").select(
@@ -444,15 +443,15 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, then ONE row per document with its cluster id, its quality
     (content length — the standard keep-the-longest heuristic) and the
     keep verdict: the cluster's quality argmax survives, ties break on
-    doc_id. Scale shape: the component solve is the O(log diameter)
-    star algorithm; selection adds exactly one cluster-keyed window
-    over a 3-column frame — no text moves through the argmax, only
-    (doc, cluster, length)."""
-    from ssidentity_spark.operators.graph import connected_components_star
+    doc_id. Scale shape: the component solve takes O(log diameter)
+    rounds; selection adds exactly one cluster-keyed window over a
+    3-column frame — no text moves through the argmax, only (doc,
+    cluster, length)."""
+    from ssidentity_spark.operators.graph import connected_components
 
     d = load_table(spark, sf_dir, "documents")
     pairs = _spark_lsh_pairs(d)
-    comp = connected_components_star(pairs, src="doc_a", dst="doc_b").select(
+    comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("vertex").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     clustered = (

@@ -775,7 +775,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         peel,
         sym.select("u").distinct(),
         _KCORE_ROUNDS,
-        done=lambda m, prev, *_: m["rows"] == prev.get("rows"),
+        done=lambda m, prev: m["rows"] == prev.get("rows"),
     )
     # materialize the surviving edge set BEFORE unpersisting sym (r11
     # advice: an eager unpersist here made the returned lazy frame
@@ -999,7 +999,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bfs_seed(sym),
         _BFS_ROUNDS,
         metrics={"hops": F.coalesce(F.max("hops"), F.lit(0))},
-        done=lambda m, prev, *_: m["rows"] == prev["rows"],
+        done=lambda m, prev: m["rows"] == prev["rows"],
         init={"rows": 1, "hops": 0},
     )
     return reached.select(

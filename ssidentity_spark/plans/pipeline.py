@@ -1145,13 +1145,11 @@ def pipe_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map (md5 of a column); the only added cost over doc-level
     splitting is the component solve the dedup pipeline already runs —
     production shares one clustering between dedup and splitting."""
-    from ssidentity_spark.operators.graph import connected_components_star
+    from ssidentity_spark.operators.graph import connected_components
     from ssidentity_spark.plans.dedup import _spark_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    comp = connected_components_star(
-        _spark_lsh_pairs(d), src="doc_a", dst="doc_b"
-    ).select(
+    comp = connected_components(_spark_lsh_pairs(d), src="doc_a", dst="doc_b").select(
         F.col("vertex").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     assigned = (
@@ -2155,14 +2153,12 @@ def pipe_split_leakage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one LSH pair generation + one component solve (both
     already run by the dedup family — production shares them), then two
     broadcast-sized joins of splits onto pairs and one aggregate."""
-    from ssidentity_spark.operators.graph import connected_components_star
+    from ssidentity_spark.operators.graph import connected_components
     from ssidentity_spark.plans.dedup import _spark_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
     pairs = _spark_lsh_pairs(d).select("doc_a", "doc_b").persist()
-    comp = connected_components_star(
-        pairs, src="doc_a", dst="doc_b"
-    ).select(
+    comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("vertex").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     splits = (

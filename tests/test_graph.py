@@ -10,11 +10,35 @@ from pyspark.sql import functions as F
 from ssidentity_spark.operators.graph import companion_clusters, connected_components
 
 
-def _cc(spark, edges):
+def _union_find(edges):
+    """(vertex, smallest member of its component) by union-find: each
+    union hangs the larger root under the smaller, so a root is always
+    its set's minimum."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in parent}
+
+
+def _cc_rows(spark, edges, stats=None):
     df = spark.createDataFrame(edges, "mac_a STRING, mac_b STRING")
     return {
-        r.vertex: r.component for r in connected_components(df).collect()
+        (r.vertex, r.component)
+        for r in connected_components(df, stats=stats).collect()
     }
+
+
+def _cc(spark, edges):
+    return dict(_cc_rows(spark, edges))
 
 
 def test_two_components(spark):
@@ -25,7 +49,8 @@ def test_two_components(spark):
 
 
 def test_chain_converges(spark):
-    """A long chain needs ~log rounds of HashMin — must still converge."""
+    """A 15-edge chain (HashMin needed one round per edge) converges to
+    one label."""
     chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(15)]
     got = _cc(spark, chain)
     assert set(got.values()) == {"n00"}
@@ -46,63 +71,57 @@ def test_companion_clusters(spark, observations):
             assert r.component == min(r.members)
 
 
-def test_star_cc_equivalent_to_hashmin_on_random_graphs(spark):
-    """Pointer-doubling (large-star/small-star) must produce the identical
-    (vertex, component-min) mapping as HashMin on arbitrary graphs."""
+def test_cc_equals_union_find_on_random_graphs(spark):
+    """Three random graphs, one operator call: each trial's vertices
+    carry their own id prefix, so the trials are disjoint components and
+    each is checked on its own against union-find."""
     import random
 
-    from ssidentity_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
     rng = random.Random(7)
+    trials = []
     for trial in range(3):
         n = 60
         edges = [
-            (f"v{rng.randrange(n):03d}", f"v{rng.randrange(n):03d}")
+            (f"t{trial}v{rng.randrange(n):03d}", f"t{trial}v{rng.randrange(n):03d}")
             for _ in range(70)
         ]
-        df = spark.createDataFrame(edges, "mac_a STRING, mac_b STRING").filter(
-            "mac_a != mac_b"
-        )
-        want = {
-            (r.vertex, r.component)
-            for r in connected_components(df).collect()
-        }
-        got = {
-            (r.vertex, r.component)
-            for r in connected_components_star(df).collect()
-        }
-        assert got == want, f"trial {trial}: star != hashmin"
+        trials.append([(a, b) for a, b in edges if a != b])
+    got = _cc_rows(spark, [e for edges in trials for e in edges])
+    for trial, edges in enumerate(trials):
+        mine = {(v, c) for v, c in got if v.startswith(f"t{trial}v")}
+        assert mine == _union_find(edges), f"trial {trial}: != union-find"
 
 
-def test_star_cc_logarithmic_rounds_on_long_path(spark):
-    """The motivating case from the r5 blow-up study: on a path graph
-    HashMin needs O(diameter) rounds while star-contraction needs
-    O(log diameter) — assert the measured gap, and that both agree."""
-    from ssidentity_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+@pytest.mark.parametrize("order,max_rounds", [("ordered", 9), ("shuffled", 16)])
+def test_cc_logarithmic_rounds_on_long_path(spark, order, max_rounds):
+    """A 160-edge path: HashMin needed one round per edge (161), star CC
+    9. With ids in path order the bound is star's count; with shuffled
+    ids, where min-label propagation plus the shortcut alone runs
+    O(diameter) rounds, it is 2 * ceil(log2 n)."""
+    ids = [f"p{i:03d}" for i in range(161)]
+    if order == "shuffled":
+        import random
 
-    path = [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(80)]
-    df = spark.createDataFrame(path, "mac_a STRING, mac_b STRING")
-    hm_stats, st_stats = {}, {}
-    hm = {
-        (r.vertex, r.component)
-        for r in connected_components(df, max_iter=120, stats=hm_stats).collect()
-    }
-    st = {
-        (r.vertex, r.component)
-        for r in connected_components_star(df, stats=st_stats).collect()
-    }
-    assert hm == st
-    assert all(c == "p000" for _, c in st)  # one component, min-labeled
-    assert st_stats["iterations"] <= 10 < hm_stats["iterations"], (
-        f"star {st_stats['iterations']} rounds vs hashmin "
-        f"{hm_stats['iterations']} — expected log vs linear"
-    )
+        random.Random(1).shuffle(ids)
+    path = list(zip(ids, ids[1:]))
+    stats = {}
+    got = _cc_rows(spark, path, stats=stats)
+    assert got == _union_find(path)
+    assert {c for _, c in got} == {"p000"}
+    assert stats["converged"] and stats["iterations"] <= max_rounds, stats[
+        "iterations"
+    ]
+
+
+def test_cc_raises_at_the_round_ceiling(spark, monkeypatch):
+    """A graph that needs more rounds than the ceiling raises instead of
+    returning under-merged labels."""
+    import ssidentity_spark.operators.graph as graph
+
+    monkeypatch.setattr(graph, "_MAX_ROUNDS", 2)
+    path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(16)]
+    with pytest.raises(RuntimeError, match="no fixpoint after 2 rounds"):
+        _cc_rows(spark, path)
 
 
 # --- triangle counting (plans/graph.py:graph_triangles internals) ---------
@@ -137,27 +156,12 @@ def test_triangle_count_known_graph(spark):
     assert wedges == 8
 
 
-def test_star_cc_keeps_self_loop_only_vertices(spark):
-    """A vertex whose only edges are self-loops must still appear as its
-    own singleton component — matching connected_components."""
-    from ssidentity_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "a"), ("b", "c")], "mac_a string, mac_b string"
-    )
-    plain = {
-        (r["vertex"], r["component"])
-        for r in connected_components(edges).collect()
-    }
-    star = {
-        (r["vertex"], r["component"])
-        for r in connected_components_star(edges).collect()
-    }
-    assert star == plain
-    assert ("a", "a") in star
+def test_cc_keeps_self_loop_only_vertices(spark):
+    """A vertex whose only edges are self-loops comes back as its own
+    singleton component."""
+    edges = [("a", "a"), ("b", "c")]
+    got = _cc_rows(spark, edges)
+    assert got == _union_find(edges) == {("a", "a"), ("b", "b"), ("c", "b")}
 
 
 # ---------------------------------------------------------------------------

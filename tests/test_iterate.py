@@ -72,7 +72,7 @@ def test_iterate_stops_at_the_fixpoint_and_fills_stats(spark):
         state,
         10,
         metrics={"pos": F.count_if(F.col("x") > 0)},
-        done=lambda m, *_: m["pos"] == 0,
+        done=lambda m, _prev: m["pos"] == 0,
         init={"pos": 4},
         stats=stats,
     )
@@ -91,7 +91,7 @@ def test_iterate_respects_the_round_cap(spark):
         state,
         2,
         metrics={"pos": F.count_if(F.col("x") > 0)},
-        done=lambda m, *_: m["pos"] == 0,
+        done=lambda m, _prev: m["pos"] == 0,
         stats=stats,
     )
     assert sorted(r.x for r in out.collect()) == [0, 0, 0, 1, 2]
@@ -125,7 +125,7 @@ def test_a_round_launches_no_job_besides_its_checkpoint(spark):
             state,
             10,
             metrics={"pos": F.count_if(F.col("x") > 0)},
-            done=lambda m, *_: m["pos"] == 0,
+            done=lambda m, _prev: m["pos"] == 0,
             stats=stats,
         ),
     )
@@ -149,6 +149,26 @@ def test_a_pagerank_round_launches_at_most_two_jobs(spark):
         for it in (2, 3)
     )
     assert n3 - n2 <= 2
+
+
+def test_a_connected_components_round_launches_at_most_nine_jobs(spark):
+    """Paths of 4 and 8 edges reach the fixpoint in 4 and 5 rounds; the
+    extra round costs at most 9 jobs (a HashMin round launched 5, a
+    large/small-star round 16)."""
+    from ssidentity_spark.operators.graph import connected_components
+
+    jobs, rounds = [], []
+    for n in (4, 8):
+        e = spark.createDataFrame(
+            [(f"p{i}", f"p{i + 1}") for i in range(n)], "mac_a string, mac_b string"
+        )
+        stats = {}
+        jobs.append(
+            _jobs(spark, f"test-cc-{n}", lambda: connected_components(e, stats=stats))
+        )
+        rounds.append(stats["iterations"])
+    assert rounds == [4, 5]
+    assert jobs[1] - jobs[0] <= 9
 
 
 def test_a_kcore_peel_round_broadcasts_alive_once(spark):
