@@ -12,7 +12,7 @@ on that same checkpoint job.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ssidentity_spark.operators.iterate import (
@@ -46,7 +46,7 @@ def connected_components(
     itself, and a round runs the hook-and-shortcut steps of
     Shiloach-Vishkin as FastSV (Zhang, Azad, Hu 2020) orders them:
 
-    (a) ``gp[u] = p[p[u]]``, a self-join of the state;
+    (a) ``gp[u] = p[p[u]]``, one window over the state keyed by parent;
     (b) ``m[u]``, the least ``gp`` over u's closed neighbourhood, one join
         with the symmetrized edges (self-edges included) and one group-by;
     (c) tree hooking, ``h[x]``: the least ``m[u]`` over the vertices u
@@ -76,8 +76,23 @@ def connected_components(
     )
 
     def step(s: DataFrame, _m: dict) -> DataFrame:
-        parent = s.select(F.col("vertex").alias("p"), F.col("p").alias("gp"))
-        gp = s.join(parent, "p").select("vertex", "p", "gp")
+        # each vertex's own row meets its children's rows in one window on
+        # the parent id. A self-join would square the state's size
+        # estimate, which the checkpoint carries into the next round: its
+        # digit count doubles each round and planning stalls by round 15
+        t = s.schema["vertex"].dataType
+        rows = s.select(
+            F.col("vertex").alias("x"), "p", F.lit(None).cast(t).alias("vertex")
+        ).unionByName(
+            s.select(
+                F.col("p").alias("x"), F.lit(None).cast(t).alias("p"), "vertex"
+            )
+        )
+        gp = rows.select(
+            "vertex",
+            F.col("x").alias("p"),
+            F.max("p").over(Window.partitionBy("x")).alias("gp"),
+        ).where(F.col("vertex").isNotNull())
         # the self-edge carries u's own parent through the group-by
         m = (
             sym.join(gp, sym.v == gp.vertex)

@@ -124,6 +124,18 @@ def test_cc_raises_at_the_round_ceiling(spark, monkeypatch):
         _cc_rows(spark, path)
 
 
+
+def test_cc_size_estimate_does_not_square_round_over_round(spark):
+    """The checkpointed state carries its plan's size estimate into the
+    next round. It may grow by a factor a round, never square: squared,
+    its digit count doubles each round and planning stalls by round 15."""
+    path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(16)]
+    df = spark.createDataFrame(path, "mac_a STRING, mac_b STRING")
+    stats = {}
+    out = connected_components(df, stats=stats)
+    est = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert stats["iterations"] == 6 and est.bit_length() < 1000
+
 # --- triangle counting (plans/graph.py:graph_triangles internals) ---------
 
 
