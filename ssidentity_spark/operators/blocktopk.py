@@ -9,13 +9,14 @@ block-partitioned exact search with a top-K merge of EDBT 2019
 top-K similarity). A per-pair SQL fold, rank window and pair join do the
 same arithmetic one row at a time.
 
-The size switch is the operator's only one: ``BROADCAST_BYTES`` of
-corpus matrix (ids x width x 8). A corpus within it is collected once and
-shipped with the task closure, and query rows run in few, large blocks
-(each Python task has a fixed cost). Past it, both sides are packed into
-hash blocks whose matrices fit the budget, each (query block, corpus
-block) pair keeps its partial top-K, and a merge per query id keeps the
-global one. Every task scores at most ``_BLOCK_CELLS`` pairs at once.
+The size switch is the engine's driver budget,
+``operators.iterate.BROADCAST_BYTES``, which the in-memory PageRank and
+k-core paths share; here it counts corpus matrix bytes (ids x width x
+8). A corpus within it is collected once and shipped with the task
+closure, and query rows run in few, large blocks (each Python task has a
+fixed cost). Past it, both sides are packed into hash blocks whose
+matrices fit the budget, each (query block, corpus block) pair keeps its
+partial top-K, and a merge per query id keeps the global one. Every task scores at most ``_BLOCK_CELLS`` pairs at once.
 ``mutual=True`` (self-scoring only) keeps a pair only if each side is in
 the other's top-K: inside the block when one block holds every query,
 else in one merge task over the K-per-query lists.
@@ -43,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ssidentity_spark.operators import iterate as loop
 from ssidentity_spark.operators.iterate import materialize
 
 # The same arithmetic as SQL expressions, for the pairs a candidate join
@@ -67,13 +69,6 @@ def top_rows(scored: DataFrame, k: int, *by: str) -> DataFrame:
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-# corpus matrix bytes (ids x width x 8) the broadcast path ships; the
-# driver and every Python worker hold a copy. 128 MB is 262,144 vectors of
-# the 64-dim embeddings, or about 140,000 users at the 120-cell (hour x
-# event type) profile grain: more than the ~98,000 users (at sf0.1's 51
-# cells a user) that the SQL tier's 5M-row, about 200 MB framed,
-# broadcast guard covered.
-BROADCAST_BYTES = 1 << 27
 # score-matrix cells one block computes at once (32 MB of doubles)
 _BLOCK_CELLS = 1 << 22
 _6DP = Decimal("0.000001")
@@ -273,11 +268,11 @@ def _block_topk(kind: _Kind, corpus, queries, k, mutual) -> DataFrame:
     if mutual and queries is not None:
         raise ValueError("mutual=True ranks a corpus against itself: pass no queries")
     # past this many rows no matrix fits the budget, so the collect stops there
-    cap = BROADCAST_BYTES // (8 * kind.width(corpus))
+    cap = loop.BROADCAST_BYTES // (8 * kind.width(corpus))
     head = corpus.limit(cap + 1).toPandas()
     cells = kind.index(head) if kind.index else None
     n, width = kind.shape(head, cells)
-    if len(head) > cap or 8 * n * width > BROADCAST_BYTES:
+    if len(head) > cap or 8 * n * width > loop.BROADCAST_BYTES:
         return _block_pairs(kind, corpus, queries, k, mutual, head[:1])
     cmat = kind.build(head, cells)
     if queries is not None:
@@ -310,7 +305,7 @@ def _block_pairs(kind: _Kind, corpus, queries, k, mutual, sample) -> DataFrame:
     spark = corpus.sparkSession
     corpus = materialize(corpus)  # read by the cell index, the id counts and the packing
     cells = kind.index(corpus.drop("id", "c").distinct().toPandas()) if kind.index else None
-    per_block = max(1, BROADCAST_BYTES // (8 * max(kind.shape(sample, cells)[1], 1)))
+    per_block = max(1, loop.BROADCAST_BYTES // (8 * max(kind.shape(sample, cells)[1], 1)))
 
     def packed(df, name):
         n = max(1, -(-df.select("id").distinct().count() // per_block))

@@ -12,9 +12,13 @@ on that same checkpoint job.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ssidentity_spark.operators import iterate as loop
 from ssidentity_spark.operators.iterate import (
     iterate,
     materialize,
@@ -232,6 +236,15 @@ def companion_clusters(obs: DataFrame, window: str = "30 seconds", min_cowindows
     )
 
 
+# pagerank's join strategy past the driver budget: a rank row is a key
+# and a double, about 100 MB framed at this many vertices, so up to it
+# each round broadcasts the rank vector
+_BROADCAST_MAX_NODES = 2_000_000
+# decimals of the returned ranks: float summation order differs between
+# engines and between pagerank's paths, and the rounding absorbs it
+_ROUND_DP = 6
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -239,76 +252,40 @@ def pagerank(
     weight: str = "w",
     iters: int = 6,
     damping: float = 0.85,
-    round_dp: int = 6,
-    broadcast_max_nodes: int = 2_000_000,
 ) -> DataFrame:
-    """Weighted PageRank by plain joins + aggregations, fixed ``iters``
-    power-iteration rounds (the relational formulation — no graph engine).
+    """Weighted PageRank, ``iters`` rounds of the damped power iteration
+    with the dangling mass spread uniformly: returns ``(node, rank)``,
+    ``rank`` rounded to 6 decimals. An empty edge list gives an empty
+    frame.
 
     Reference impetus: README.md:15 ranks "things that can be correlated";
     the influence ranking over the device co-observation graph is the
     natural next analytic after connected components (A3 network tree).
 
-    The rank-independent work runs once, before the loop: the edge list
-    is materialized with its count observed, out-weights are folded into
-    ``p = w / wout``, and the state frame ``(node, dangling)`` — dangling
-    means no out-edge — is materialized with the node and dangling counts
-    observed. Each round is then one contribution join + per-``dst`` sum
-    and one state join, run by ``iterate``. The dangling mass a round
-    redistributes is the sum of the previous round's dangling ranks,
-    observed on that round's checkpoint job and passed in as a literal,
-    so no round runs a job for it. Rank state is one row per vertex,
-    never collected. Fixed rounds (no convergence test) keep the loop a
-    static recurrence the DuckDB oracle unrolls; float summation order
-    differs between engines and the final ``round(round_dp)`` absorbs it.
+    The edge list is materialized once with its count observed, and the
+    count picks the path:
 
-    The loop's shuffle width is the session's
-    ``spark.sql.shuffle.partitions``, or about one partition per 2M
-    edges when that is more. Both cached sides are hash-partitioned at
-    that width, which is the width ``EnsureRequirements`` asks of the
-    state join, so a round re-shuffles neither of them (on the broadcast
-    path below its only jobs are the rank broadcast and the checkpoint).
-    A width of 1 would plan as ``SinglePartition``, which the join
-    re-shuffles every round.
+    - at most ``BROADCAST_BYTES`` of edges (``operators/iterate.py``; an
+      edge is about 24 bytes, two ids and a weight): the edges are
+      collected and every round runs in numpy on the driver. A Spark
+      round costs its planning, a broadcast job and a checkpoint job,
+      more than the arithmetic of a graph this size.
+    - larger graphs: the rounds run on Spark through ``iterate``, with
+      the state one row per vertex (see ``_pagerank_setup``).
 
-    The contribution join's strategy comes from the observed node count:
+    Both paths compute ``p = w / wout`` per edge, ``rank[src] * p``
+    summed per ``dst``, and ``(1 - d) / N + d * (m + dm / N)`` in that
+    operation order, ``dm`` being the previous round's dangling ranks
+    summed. Only the addition order inside each sum differs, and the
+    final rounding (Spark's ``round``, HALF_UP, on both paths) absorbs
+    it. Fixed rounds (no convergence test) keep the loop a static
+    recurrence the DuckDB oracle unrolls.
 
-    - ``n_nodes <= broadcast_max_nodes`` (default 2M; a rank row is a key
-      and a double, about 100 MB framed): the normalized edges are cached
-      hash-partitioned on ``dst`` and each round broadcasts the slim
-      ``(node, rank)`` vector, so the contribution join, the per-``dst``
-      sum and the state join all ride one partitioning and the round's
-      only exchange is the broadcast.
-    - larger graphs: the edges are cached on ``src``, the rank vector is
-      shuffled to them, and the per-``dst`` sum partial-aggregates before
-      its exchange, which then carries vertex-bounded partial sums rather
-      than one row per edge.
-
-    Both paths compute the same recurrence; only the addition order
-    inside each ``dst``'s sum differs, which the rounding absorbs.
-    """
-    step, ranks, init, caches = _pagerank_setup(
-        edges, src, dst, weight, damping, broadcast_max_nodes
-    )
-    # dm: the rank a round leaves on dangling nodes, spread by the next
-    dm = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
-    ranks = iterate(step, ranks, iters, metrics={"dm": dm}, init=init)
-    for cached in caches:
-        cached.unpersist()
-    return ranks.select("node", F.round("rank", round_dp).alias("rank"))
-
-
-def _pagerank_setup(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    weight: str,
-    damping: float,
-    broadcast_max_nodes: int,
-) -> tuple:
-    """pagerank's loop-invariant frames, built once: returns the round
-    ``step``, the initial rank state, the initial observed values and the
-    two cached frames the rounds read."""
+    Nulls act as SQL's do, on both paths. A null endpoint is a vertex no
+    join key matches: it is dangling, and an edge with a null end carries
+    no rank (an edge to a null ``dst`` still counts in its source's
+    out-weight). A null weight adds to no sum, and a vertex whose
+    out-weights are all null is dangling."""
     e, ec = materialize_observed(
         edges.select(
             F.col(src).alias("src"),
@@ -317,10 +294,86 @@ def _pagerank_setup(
         ),
         n=F.count(F.lit(1)),
     )
-    spark = edges.sparkSession
+    if 24 * ec["n"] <= loop.BROADCAST_BYTES:
+        ranks = _pagerank_local(e, iters, damping)
+    else:
+        step, ranks, init, caches = _pagerank_setup(e, ec["n"], damping)
+        # dm: the rank a round leaves on dangling nodes, spread by the next
+        dm = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
+        ranks = iterate(step, ranks, iters, metrics={"dm": dm}, init=init)
+        for cached in caches:
+            cached.unpersist()
+    return ranks.select("node", F.round("rank", _ROUND_DP).alias("rank"))
+
+
+def _pagerank_local(e: DataFrame, iters: int, damping: float) -> DataFrame:
+    """pagerank's rounds in driver memory over the materialized edge
+    list ``(src, dst, w)``: one collect, numpy rounds, and the unrounded
+    ``(node, rank)`` frame, ``node`` typed as ``src``."""
+    t = e.toArrow()
+    ends = pa.chunked_array(t["src"].chunks + t["dst"].chunks, t["src"].type)
+    ids = ends.combine_chunks().dictionary_encode(null_encoding="encode")
+    ix = ids.indices.to_numpy(zero_copy_only=False)
+    s, d = ix[: t.num_rows], ix[t.num_rows :]
+    null = ids.dictionary.is_null().to_numpy(zero_copy_only=False)
+    w = t["w"].to_numpy()
+    n = len(ids.dictionary)
+    weighted = ~null[s] & ~np.isnan(w)
+    dangling = np.bincount(s[weighted], minlength=n) == 0
+    wout = np.bincount(s[weighted], w[weighted], minlength=n)
+    live = weighted & ~null[d]
+    s, d = s[live], d[live]
+    p = w[live] / wout[s]
+    # an empty graph returns no rows; the 1 only keeps the divisions finite
+    n_nodes = max(n, 1)
+    rank = np.full(n, 1.0 / n_nodes)
+    dm = int(dangling.sum()) / n_nodes
+    for _ in range(iters):
+        m = np.bincount(d, rank[s] * p, minlength=n)
+        rank = (1.0 - damping) / n_nodes + damping * (m + dm / n_nodes)
+        dm = float(rank[dangling].sum())
+    schema = StructType(
+        [StructField("node", e.schema["src"].dataType), StructField("rank", DoubleType())]
+    )
+    return e.sparkSession.createDataFrame(pa.table([ids.dictionary, rank], ["node", "rank"]), schema)
+
+
+def _pagerank_setup(e: DataFrame, n_edges: int, damping: float) -> tuple:
+    """pagerank's loop-invariant frames for the Spark rounds, built once
+    from the materialized edge list ``e`` of ``n_edges`` rows: returns
+    the round ``step``, the initial rank state, the initial observed
+    values and the two cached frames the rounds read.
+
+    Out-weights are folded into ``p = w / wout`` and the state frame
+    ``(node, dangling)`` (dangling: no out-edge) is materialized with the
+    node and dangling counts observed. Each round is one contribution
+    join + per-``dst`` sum and one state join. The dangling mass a round
+    redistributes is observed on the previous round's checkpoint job and
+    passed in as a literal, so no round runs a job for it.
+
+    The loop's shuffle width is the session's
+    ``spark.sql.shuffle.partitions``, or about one partition per 2M
+    edges when that is more. Both cached sides are hash-partitioned at
+    that width, which is the width ``EnsureRequirements`` asks of the
+    state join, so a round re-shuffles neither of them. A width of 1
+    would plan as ``SinglePartition``, which the join re-shuffles every
+    round.
+
+    The contribution join's strategy comes from the observed node count:
+
+    - up to ``_BROADCAST_MAX_NODES``: the normalized edges are cached
+      hash-partitioned on ``dst`` and each round broadcasts the slim
+      ``(node, rank)`` vector, so the contribution join, the per-``dst``
+      sum and the state join all ride one partitioning and the round's
+      only jobs are the broadcast and the checkpoint.
+    - more: the edges are cached on ``src``, the rank vector is shuffled
+      to them, and the per-``dst`` sum partial-aggregates before its
+      exchange, which then carries vertex-bounded partial sums rather
+      than one row per edge."""
+    spark = e.sparkSession
     partitions = max(
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        -(-ec["n"] // 2_000_000),
+        -(-n_edges // 2_000_000),
     )
     out_w = e.groupBy("src").agg(F.sum("w").alias("wout"))
     nodes = (
@@ -339,10 +392,9 @@ def _pagerank_setup(
     # it: cached on node at the loop width, the per-round state join
     # never moves the state
     state = state.repartition(partitions, "node").cache()
-    # an empty graph (e.g. every transition was a self-loop) runs its
-    # rounds over no rows and returns an empty (node, rank) frame
+    # an empty graph runs its rounds over no rows
     n_nodes = max(sc["n"], 1)
-    broadcast_ranks = sc["n"] <= broadcast_max_nodes
+    broadcast_ranks = sc["n"] <= _BROADCAST_MAX_NODES
     ew = (
         e.join(out_w, "src")
         .select("src", "dst", (F.col("w") / F.col("wout")).alias("p"))

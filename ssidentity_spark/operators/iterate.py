@@ -1,5 +1,5 @@
-"""One materialization policy and one round loop for every iterative
-operator.
+"""One materialization policy, one driver budget and one round loop for
+every iterative operator.
 
 ``materialize`` writes a frame out eagerly and cuts its lineage. The
 session picks how: with a checkpoint directory set
@@ -13,6 +13,11 @@ executor loss fails the job.
 round's scalars (its row count plus whatever the caller names: a change
 count, a dangling mass) are aggregated by an ``Observation`` on the
 round's own checkpoint job, so a fixpoint test launches no job of its own.
+
+``BROADCAST_BYTES`` is the one size switch between a distributed plan
+and driver memory. An input within it is collected once and worked in
+numpy (PageRank, the k-core peel) or shipped to every Python worker
+(``block_topk``'s corpus matrix); past it the operator stays on Spark.
 """
 
 from __future__ import annotations
@@ -22,6 +27,12 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+# Bytes of one collected input that the driver (and, for block_topk,
+# every Python worker) holds at once. 128 MB is 262,144 vectors of the
+# 64-dim embeddings, about 140,000 users at the 120-cell (hour x event
+# type) profile grain, 5.6M PageRank edges or 8.4M k-core edges.
+BROADCAST_BYTES = 1 << 27
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -9,20 +9,24 @@ half. ``events`` stands in for the observation stream as everywhere.
 
 Oracle strategy: PageRank with a FIXED iteration count is a static
 dataflow, so the DuckDB twin is the same power iteration *unrolled* —
-one chained CTE per round, generated programmatically below from the same
-(damping, iters) constants the Spark operator receives. Both engines use
-identical operation order in every formula; only float summation order
-differs, absorbed by the final round(6).
+one chained, materialized CTE per round step, generated programmatically
+below from the same (damping, iters) constants the Spark operator
+receives. Both engines use identical operation order in every formula;
+only float summation order differs, absorbed by the final round(6).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ssidentity_spark.io import load_table
+from ssidentity_spark.operators import iterate as loop
 from ssidentity_spark.operators.graph import pagerank
-from ssidentity_spark.operators.iterate import iterate, materialize
+from ssidentity_spark.operators.iterate import iterate, materialize, materialize_observed
 from ssidentity_spark.registry import register
 
 _DAMPING = 0.85
@@ -46,14 +50,18 @@ _EDGES_SQL = """
 
 
 def _pagerank_oracle(iters: int, damping: float) -> str:
+    # every round reads the one before twice (its dangling sum and its
+    # contributions): DuckDB inlines CTEs by reference, so without
+    # MATERIALIZED the chain re-expands ~2^iters times (5.8 s at sf0.001
+    # against 0.05 s materialized, the same rows)
     steps = []
     for k in range(1, iters + 1):
         prev = f"r{k - 1}"
         steps.append(
-            f"""d{k} AS (
+            f"""d{k} AS MATERIALIZED (
       SELECT coalesce(sum(rank), 0.0) AS dm FROM {prev}
       WHERE node NOT IN (SELECT src FROM o)
-    ), s{k} AS (
+    ), s{k} AS MATERIALIZED (
       -- parenthesized (e.w / o.wout) mirrors the operator's
       -- pre-normalized p = w/wout, so each term is rank * p in the SAME
       -- IEEE operation order on both engines; bare rank*w/wout would be
@@ -61,7 +69,7 @@ def _pagerank_oracle(iters: int, damping: float) -> str:
       SELECT e.dst AS node, sum(r.rank * (e.w / o.wout)) AS m
       FROM e JOIN o ON e.src = o.src JOIN {prev} r ON r.node = e.src
       GROUP BY e.dst
-    ), r{k} AS (
+    ), r{k} AS MATERIALIZED (
       SELECT n.node,
              ({(1.0 - damping)!r} / nc.c)
                + {damping!r} * (coalesce(s{k}.m, 0.0) + d{k}.dm / nc.c)
@@ -72,11 +80,11 @@ def _pagerank_oracle(iters: int, damping: float) -> str:
         )
     chain = ",\n    ".join(steps)
     return f"""
-    WITH e AS ({_EDGES_SQL}),
-    o AS (SELECT src, sum(w) AS wout FROM e GROUP BY 1),
-    n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-    nc AS (SELECT CAST(count(*) AS DOUBLE) AS c FROM n),
-    r0 AS (SELECT node, 1.0 / nc.c AS rank FROM n, nc),
+    WITH e AS MATERIALIZED ({_EDGES_SQL}),
+    o AS MATERIALIZED (SELECT src, sum(w) AS wout FROM e GROUP BY 1),
+    n AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
+    nc AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS c FROM n),
+    r0 AS MATERIALIZED (SELECT node, 1.0 / nc.c AS rank FROM n, nc),
     {chain}
     SELECT node AS user_id, round(rank, 6) AS rank FROM r{iters}
     """
@@ -744,22 +752,31 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: the mutual-kNN build is the exact block tier
     (operators/blocktopk.py; at 100 TB candidates come from
-    :func:`ivf_knn_edges`, same trade as G3). Each peel round is one
-    semi-join of the edge endpoints against one broadcast of the
-    shrinking alive set plus two count aggregates — alive only ever
-    SHRINKS, so round cost is monotonically non-increasing; ``iterate``
-    materializes each round and ends the loop once the observed alive
-    count stops changing. Peeling is pure integer degree counting: no
-    float anywhere after the 6-dp kNN ranks, so every round sits under
-    the driver hash exactly."""
+    :func:`ivf_knn_edges`, same trade as G3), materialized once with its
+    edge count observed. The count picks where the peel runs:
+
+    - at most ``BROADCAST_BYTES`` of edges (``operators/iterate.py``;
+      an edge is two ids, 16 bytes): the edges are collected and every
+      peel is a numpy degree count on the driver (``_kcore_local``).
+    - more: each peel round is one semi-join of the edge endpoints
+      against one broadcast of the shrinking alive set plus two count
+      aggregates, materialized by ``iterate``.
+
+    Both stop at the fixpoint (an unchanged alive count: alive only ever
+    shrinks) or after {_KCORE_ROUNDS} peels, and both return only
+    vertices that keep at least one core edge. Peeling is pure integer
+    degree counting: no float anywhere after the 6-dp kNN ranks, so
+    both paths give the oracle's rows exactly."""
+    knn, kc = materialize_observed(
+        _mutual_knn_edges(load_table(spark, sf_dir, "embeddings")),
+        n=F.count(F.lit(1)),
+    )
+    if 16 * kc["n"] <= loop.BROADCAST_BYTES:
+        return _kcore_local(knn)
     # cached hash-partitioned on u at the session width, so a peel
     # round's counts need no exchange (see _alive_edges)
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    sym = (
-        _mutual_knn_edges(load_table(spark, sf_dir, "embeddings"))
-        .repartition(width, "u")
-        .cache()
-    )
+    sym = knn.repartition(width, "u").cache()
 
     def peel(alive: DataFrame, _m: dict) -> DataFrame:
         deg = (
@@ -777,17 +794,40 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         _KCORE_ROUNDS,
         done=lambda m, prev: m["rows"] == prev.get("rows"),
     )
-    # materialize the surviving edge set BEFORE unpersisting sym (r11
-    # advice: an eager unpersist here made the returned lazy frame
-    # recompute the full O(n²) kNN build at action time — the cache only
-    # ever benefited the peel rounds). The eager checkpoint is small
-    # (core edges only) and truncates the sym lineage for good.
+    # the core edges are materialized before sym is unpersisted, so the
+    # returned frame never reads the edges again
     core_edges = materialize(_alive_edges(sym, alive))
     sym.unpersist()
     return (
         core_edges.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
         .select(F.col("u").alias("vec_id"), "core_degree")
+    )
+
+
+def _kcore_local(knn: DataFrame) -> DataFrame:
+    """graph_kcore's peel in driver memory over the materialized edge
+    list ``(u, v)``: one collect, numpy degree counts, and the
+    ``(vec_id, core_degree)`` frame."""
+    t = knn.toArrow()
+    u, v = (t[c].to_numpy() for c in ("u", "v"))
+    ids, ix = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = ix[: len(u)], ix[len(u) :]
+    alive = np.zeros(len(ids), bool)
+    alive[a] = True
+    for _ in range(_KCORE_ROUNDS):
+        deg = np.bincount(a[alive[a] & alive[b]], minlength=len(ids))
+        kept = deg >= _KCORE_K
+        if np.array_equal(kept, alive):
+            break
+        alive = kept
+    deg = np.bincount(a[alive[a] & alive[b]], minlength=len(ids))
+    core = deg > 0
+    schema = StructType(
+        [StructField("vec_id", knn.schema["u"].dataType), StructField("core_degree", LongType())]
+    )
+    return knn.sparkSession.createDataFrame(
+        pa.table([ids[core], deg[core].astype(np.int64)], ["vec_id", "core_degree"]), schema
     )
 
 

@@ -339,3 +339,32 @@ def test_kcore_fixed_rounds_reach_the_fixpoint_and_match_semantics(spark):
         for r in REGISTRY["graph_kcore"].fn(spark, sf).collect()
     }
     assert again == core
+
+
+def test_kcore_in_memory_peel_equals_the_spark_peel(spark, monkeypatch):
+    """graph_kcore's size switch, pinned on both sides: the numpy peel
+    (the edges within BROADCAST_BYTES) and the Spark peel (budget 0)
+    give equal rows on sf0.001. The mutual-kNN edges are built once, at
+    the default budget, and fed to both runs: at budget 0 the block
+    top-K would score one vector per block (its own switch is pinned by
+    test_block_topk_past_broadcast_budget_equals_broadcast)."""
+    import ssidentity_spark.plans  # noqa: F401
+    from ssidentity_spark.io import load_table
+    from ssidentity_spark.operators import iterate as loop
+    from ssidentity_spark.plans import graph
+    from ssidentity_spark.registry import REGISTRY
+
+    sf = "/root/testdata/sf0.001"
+    knn = spark.createDataFrame(
+        graph._mutual_knn_edges(load_table(spark, sf, "embeddings")).toArrow()
+    )
+    monkeypatch.setattr(graph, "_mutual_knn_edges", lambda _em: knn)
+
+    def rows():
+        out = REGISTRY["graph_kcore"].fn(spark, sf)
+        return out.schema.simpleString(), sorted(map(tuple, out.collect()))
+
+    in_memory = rows()
+    monkeypatch.setattr(loop, "BROADCAST_BYTES", 0)
+    assert rows() == in_memory
+    assert in_memory[1]

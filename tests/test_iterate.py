@@ -7,6 +7,7 @@ import contextlib
 
 from pyspark.sql import functions as F
 
+from ssidentity_spark.operators import iterate as loop
 from ssidentity_spark.operators.iterate import iterate, materialize
 
 
@@ -133,10 +134,8 @@ def test_a_round_launches_no_job_besides_its_checkpoint(spark):
     assert n == 4
 
 
-def test_a_pagerank_round_launches_at_most_two_jobs(spark):
-    """One more round costs the rank broadcast and the checkpoint: the
-    cached edge and state sides sit at the session shuffle width, so the
-    state join never re-shuffles them."""
+def _pagerank_jobs(spark, tag):
+    """The jobs of ``pagerank`` on a 20-vertex graph at 2 and 3 rounds."""
     from ssidentity_spark.operators.graph import pagerank
 
     e = spark.createDataFrame(
@@ -144,11 +143,26 @@ def test_a_pagerank_round_launches_at_most_two_jobs(spark):
         + [(f"n{i}", f"n{(i + 1) % 20}", 1.0) for i in range(20)],
         "src string, dst string, w double",
     )
-    n2, n3 = (
-        _jobs(spark, f"test-pagerank-{it}", lambda it=it: pagerank(e, iters=it))
+    return tuple(
+        _jobs(spark, f"test-pagerank-{tag}-{it}", lambda it=it: pagerank(e, iters=it))
         for it in (2, 3)
     )
+
+
+def test_a_pagerank_round_launches_at_most_two_jobs(spark, monkeypatch):
+    """On the Spark rounds, one more round costs the rank broadcast and
+    the checkpoint: the cached edge and state sides sit at the session
+    shuffle width, so the state join never re-shuffles them."""
+    monkeypatch.setattr(loop, "BROADCAST_BYTES", 0)
+    n2, n3 = _pagerank_jobs(spark, "spark")
     assert n3 - n2 <= 2
+
+
+def test_in_memory_pagerank_rounds_launch_no_job(spark):
+    """Within the driver budget the rounds run in numpy: one more round
+    launches no Spark job."""
+    n2, n3 = _pagerank_jobs(spark, "in-memory")
+    assert n3 == n2
 
 
 def test_a_connected_components_round_launches_at_most_seven_jobs(spark):
@@ -195,10 +209,12 @@ def test_a_kcore_peel_round_broadcasts_alive_once(spark):
     sym.unpersist()
 
 
-def test_pagerank_ranks_equal_under_reliable_checkpoints(spark, tmp_path):
+def test_pagerank_ranks_equal_under_reliable_checkpoints(spark, tmp_path, monkeypatch):
     """The durability policy changes where round state is written, never
-    the ranks."""
+    the ranks (the Spark rounds, which write round state)."""
     from ssidentity_spark.operators.graph import pagerank
+
+    monkeypatch.setattr(loop, "BROADCAST_BYTES", 0)
 
     e = spark.createDataFrame(
         [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("c", "d", 3.0)],

@@ -59,11 +59,15 @@ def test_weights_steer_rank(spark):
     assert r["b"] > r["c"]
 
 
-def test_join_strategy_modes_agree(spark):
-    """r13: the contribution step picks broadcast-rank vs shuffle from
-    the measured vertex count (broadcast_max_nodes). Both paths compute
-    the identical recurrence — only the join strategy and the addition
-    order inside each dst's sum differ, and round(6) absorbs that."""
+def test_join_strategy_modes_agree(spark, monkeypatch):
+    """The edge count picks the driver-memory rounds (within
+    BROADCAST_BYTES) or the Spark rounds, and there the vertex count
+    picks a broadcast or a shuffled rank vector. All three compute the
+    same recurrence; only the addition order inside each dst's sum
+    differs, and the rounding absorbs it."""
+    from ssidentity_spark.operators import graph
+    from ssidentity_spark.operators import iterate as loop
+
     e = _edges(
         spark,
         [
@@ -74,6 +78,24 @@ def test_join_strategy_modes_agree(spark):
             ("c", "d", 3.0),  # d is a dangling sink
         ],
     )
-    broadcast_mode = _ranks(pagerank(e, iters=4))  # 4 nodes << 2M default
-    shuffle_mode = _ranks(pagerank(e, iters=4, broadcast_max_nodes=0))
-    assert shuffle_mode == broadcast_mode
+    in_memory = _ranks(pagerank(e, iters=4))
+    monkeypatch.setattr(loop, "BROADCAST_BYTES", 0)
+    broadcast_mode = _ranks(pagerank(e, iters=4))  # 4 nodes << 2M
+    monkeypatch.setattr(graph, "_BROADCAST_MAX_NODES", 0)
+    shuffle_mode = _ranks(pagerank(e, iters=4))
+    assert len(in_memory) == 4
+    assert broadcast_mode == in_memory
+    assert shuffle_mode == in_memory
+
+
+@pytest.mark.parametrize("budget", [1 << 27, -1], ids=["in_memory", "spark"])
+def test_empty_edge_list_gives_an_empty_frame(spark, monkeypatch, budget):
+    """No edges, no vertices: both paths return an empty (node, rank)
+    frame typed like the input (an empty edge list fits any budget of 0
+    or more, so -1 pins the Spark rounds)."""
+    from ssidentity_spark.operators import iterate as loop
+
+    monkeypatch.setattr(loop, "BROADCAST_BYTES", budget)
+    out = pagerank(_edges(spark, []))
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<node:string,rank:double>"

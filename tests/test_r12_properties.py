@@ -440,6 +440,7 @@ def test_block_topk_past_broadcast_budget_equals_broadcast(spark, monkeypatch):
 
     from ssidentity_spark.io import load_table
     from ssidentity_spark.operators import blocktopk as B
+    from ssidentity_spark.operators import iterate as loop
     from ssidentity_spark.plans import analytics as A
     from ssidentity_spark.plans.similarity import _norm_vec
 
@@ -467,7 +468,7 @@ def test_block_topk_past_broadcast_budget_equals_broadcast(spark, monkeypatch):
         (200 * 64 * 8, ("knn", "queries")),
         (7 * 120 * 8, ("linkage", "mutual_linkage")),
     ):
-        monkeypatch.setattr(B, "BROADCAST_BYTES", budget)
+        monkeypatch.setattr(loop, "BROADCAST_BYTES", budget)
         for k in names:
             assert sorted(map(tuple, runs[k]().collect())) == bcast[k], (budget, k)
     assert len(pairs) == 4
